@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.spec.{DumpSpec, SpecJson}
@@ -42,8 +42,17 @@ import java.util.concurrent.atomic.AtomicLong
   * version, and per-spec triple counts come free from the manifest's
   * parquet-footer row counts (no recount scan).
   *
+  * One corpus pass per worker pass, like the reference's `DumpRunner`:
+  * the A1 counters (entities, statements) are `observe` metrics on the
+  * multiplexed scan, read from an `Observation` after the commit; the
+  * per-file lineage manifest (`_meta/manifests/<runId>`) is built on the
+  * driver from the committed snapshot's footer stats (row count and
+  * `subj` min/max; `part` = the file's ordinal in its spec partition);
+  * and the report is printed from the done markers already in hand.
+  *
   * Progress (A2) comes from a SparkListener counting task rows on a
-  * timer, like the reference's `ProgressReporter.java:24-66`.
+  * timer, like the reference's `ProgressReporter.java:24-66`; both are
+  * removed when the pass ends, whether it succeeds or fails.
   *
   * Usage: runMain graft.Backend <specsDir> <corpusParquet|gen:N> <outDir> [cores]
   */
@@ -175,115 +184,122 @@ object Backend {
       println(s"[backend] $n claimed by another worker, skipping")
     }
 
-    // ---- A2: progress reporter (processing-time timer over listener counts)
+    // ---- A2: progress reporter (processing-time timer over listener
+    // counts); both are torn down however the pass ends
     val rowsSeen = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val progress = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null) rowsSeen.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    })
+    }
+    spark.sparkContext.addSparkListener(progress)
     val timer = new java.util.Timer("graft-progress", true)
-    timer.scheduleAtFixedRate(new java.util.TimerTask {
-      def run(): Unit = System.err.println(s"[backend] progress: ~${rowsSeen.get} input records read")
-    }, 10000, 10000)
+    try {
+      timer.scheduleAtFixedRate(new java.util.TimerTask {
+        def run(): Unit = System.err.println(s"[backend] progress: ~${rowsSeen.get} input records read")
+      }, 10000, 10000)
 
-    val corpus =
-      if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
-      else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
-        || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
-      else spark.read.parquet(corpusArg)
+      val corpus =
+        if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
+        else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
+          || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
+        else spark.read.parquet(corpusArg)
 
-    // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
-    // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
-    // claimed specId partitions are swapped; completed ones keep their
-    // files; concurrent workers serialize through the manifest CAS)
-    val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
-    val t0 = System.nanoTime()
-    // Range-partition on (specId, subj) rather than hashing specId
-    // alone: one-partition-per-spec would funnel a whole spec's output
-    // through ONE task (a 100 TB spec = one writer), while ranging over
-    // the subject splits each spec across many tasks AND gives every
-    // output file a tight subject interval — which the manifest records
-    // as per-file min/max stats, so subject-range reads skip files
-    // (Iceberg file-skipping). Sorting within partitions keeps row
-    // groups aligned with the range for parquet-level stats too.
-    val outParts = math.max(specs.size,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val snapshot =
-      if (specs.isEmpty) None
-      else Some(sources.SnapshotTable.commit(
-        Pipeline.triplesMultiplexed(corpus, specs)
-          .repartitionByRange(outParts, col("specId"), col("subj"))
-          .sortWithinPartitions("specId", "subj"),
-        table, "specId", replace = true, statsCols = Seq("subj"),
-        // claimed specs that emit ZERO triples still swap out their old
-        // partition (a re-opened spec must never keep serving triples
-        // computed from the previous spec/corpus version)
-        clearPartitions = specs.map(_._1)))
+      // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
+      // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
+      // claimed specId partitions are swapped; completed ones keep their
+      // files; concurrent workers serialize through the manifest CAS).
+      // The A1 counters ride the same pass as observed metrics; the
+      // observation name is run-unique because concurrent workers share
+      // one session.
+      val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
+      val counters = Observation(s"graft_backend_counters_$runId")
+      val t0 = System.nanoTime()
+      // Range-partition on (specId, subj) rather than hashing specId
+      // alone: one-partition-per-spec would funnel a whole spec's output
+      // through ONE task (a 100 TB spec = one writer), while ranging over
+      // the subject splits each spec across many tasks AND gives every
+      // output file a tight subject interval — which the manifest records
+      // as per-file min/max stats, so subject-range reads skip files
+      // (Iceberg file-skipping). Sorting within partitions keeps row
+      // groups aligned with the range for parquet-level stats too.
+      val outParts = math.max(specs.size,
+        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      val snapshot =
+        if (specs.isEmpty) None
+        else Some(sources.SnapshotTable.commit(
+          Pipeline.triplesMultiplexed(corpus, specs, counters = Some(counters))
+            .repartitionByRange(outParts, col("specId"), col("subj"))
+            .sortWithinPartitions("specId", "subj"),
+          table, "specId", replace = true, statsCols = Seq("subj"),
+          // claimed specs that emit ZERO triples still swap out their old
+          // partition (a re-opened spec must never keep serving triples
+          // computed from the previous spec/corpus version)
+          clearPartitions = specs.map(_._1)))
 
-    // ---- per-spec stats (A1/A5) for the claimed set, then commit the
-    // done markers LAST (data is already durable; crash before a marker
-    // only re-runs that spec, which the partition replace absorbs)
-    val allCounters =
-      if (specs.nonEmpty) Pipeline.countersMultiplexed(corpus, specs)
-      else Map.empty[String, (Long, Long)]
-    // triple counts straight off the committed manifest's footer stats —
-    // no recount job
-    val tripleCounts: Map[String, Long] = snapshot match {
-      case Some(snap) =>
-        specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil).map(_.rows).sum }.toMap
-      case None => Map.empty
+      // ---- per-spec stats (A1/A5) for the claimed set, then commit the
+      // done markers LAST (data is already durable; crash before a marker
+      // only re-runs that spec, which the partition replace absorbs).
+      // Triple counts come straight off the committed manifest's footer
+      // stats — no recount job.
+      val committed: Map[String, Seq[sources.SnapshotTable.FileEntry]] = snapshot match {
+        case Some(snap) => specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil) }.toMap
+        case None => Map.empty
+      }
+      val allCounters =
+        if (specs.nonEmpty) Pipeline.observedCounters(counters, specs)
+        else Map.empty[String, (Long, Long)]
+      claimed.foreach { case (name, json, _) =>
+        val (ents, stmts) = allCounters(name)
+        atomicWrite(doneDir.resolve(s"$name.tsv"),
+          s"${identSha(json)}\t$runId\t$ents\t$stmts\t${committed(name).map(_.rows).sum}\n")
+      }
+      val finishedAt = java.time.Instant.now.toString
+
+      // per-file lineage manifest for this worker's claimed partitions,
+      // straight from the commit's footer stats: `part` is the file's
+      // ordinal within its spec partition (manifest order)
+      if (specs.nonEmpty)
+        specs.flatMap { case (n, _) =>
+          committed(n).zipWithIndex.map { case (f, i) =>
+            val subj = f.stats.get("subj")
+            (n, i, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
+          }
+        }.toDF("specId", "part", "triples", "min_subj", "max_subj")
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_meta/manifests/$runId")
+
+      // ---- metadata tables (the MariaDB analog), run-scoped so
+      // concurrent workers never overwrite each other's parquet dirs;
+      // the done markers are the authoritative cross-run state
+      specFiles.map { case (n, j, _) => (n, j, startedAt) }.toSeq
+        .toDF("dumpId", "specJson", "createdAt")
+        .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump")
+      Seq((runId, startedAt, finishedAt, rowsSeen.get)).toDF(
+        "runId", "startedAt", "finishedAt", "count")
+        .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/run")
+
+      // ---- A5: run-level report over ALL done markers, including other
+      // workers' output
+      val stats = {
+        val rows = scala.collection.mutable.ArrayBuffer.empty[StatsRow]
+        if (Files.exists(doneDir))
+          Files.newDirectoryStream(doneDir, "*.tsv").forEach { p =>
+            val f = Files.readString(p).trim.split("\t")
+            if (f.length >= 5)
+              rows += StatsRow(f(1), p.getFileName.toString.stripSuffix(".tsv"),
+                f(2).toLong, f(3).toLong, f(4).toLong)
+          }
+        rows.toSeq.sortBy(_.dumpId)
+      }
+      stats.toDF().write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump_stats")
+      val secs = (System.nanoTime() - t0) / 1e9
+      stats.foreach(r => println(
+        s"[backend] ${r.dumpId} | ${r.entityCount} | ${r.statementCount} | ${r.tripleCount}"))
+      println(f"[backend] run=$runId specs=${specs.size} wall=$secs%.1fs out=$outDir")
+      RunReport(runId, specs.map(_._1), skipped.map(_._1).toSeq, stats)
+    } finally {
+      timer.cancel()
+      spark.sparkContext.removeSparkListener(progress)
     }
-    claimed.foreach { case (name, json, _) =>
-      val (ents, stmts) = allCounters(name)
-      atomicWrite(doneDir.resolve(s"$name.tsv"),
-        s"${identSha(json)}\t$runId\t$ents\t$stmts\t${tripleCounts.getOrElse(name, 0L)}\n")
-    }
-    val finishedAt = java.time.Instant.now.toString
-
-    // per-partition lineage manifest for this worker's claimed
-    // partitions, read back through the committed snapshot (manifest-
-    // pruned to exactly the claimed specs)
-    if (specs.nonEmpty)
-      sources.SnapshotTable.read(spark, table, version = snapshot.get.version,
-          partitions = Some(specs.map(_._1)))
-        .groupBy(col("specId"), spark_partition_id().as("part"))
-        .agg(count(lit(1)).as("triples"), min("subj").as("min_subj"), max("subj").as("max_subj"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_meta/manifests/$runId")
-
-    // ---- metadata tables (the MariaDB analog), run-scoped so
-    // concurrent workers never overwrite each other's parquet dirs;
-    // the done markers are the authoritative cross-run state
-    specFiles.map { case (n, j, _) => (n, j, startedAt) }.toSeq
-      .toDF("dumpId", "specJson", "createdAt")
-      .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump")
-    Seq((runId, startedAt, finishedAt, rowsSeen.get)).toDF(
-      "runId", "startedAt", "finishedAt", "count")
-      .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/run")
-
-    // ---- A5: run-level report over ALL done markers (dump ⟕ stats
-    // join in Spark — J4/J5 exercise), including other workers' output
-    val stats = {
-      val rows = scala.collection.mutable.ArrayBuffer.empty[StatsRow]
-      if (Files.exists(doneDir))
-        Files.newDirectoryStream(doneDir, "*.tsv").forEach { p =>
-          val f = Files.readString(p).trim.split("\t")
-          if (f.length >= 5)
-            rows += StatsRow(f(1), p.getFileName.toString.stripSuffix(".tsv"),
-              f(2).toLong, f(3).toLong, f(4).toLong)
-        }
-      rows.toSeq.sortBy(_.dumpId)
-    }
-    stats.toDF().write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump_stats")
-    val report = stats.toDF().as("s")
-      .join(specFiles.map(x => (x._1, startedAt)).toSeq.toDF("dumpId", "createdAt").as("d"),
-        $"s.dumpId" === $"d.dumpId", "left_outer")
-      .select($"s.dumpId", $"s.entityCount", $"s.statementCount", $"s.tripleCount")
-      .orderBy($"s.dumpId")
-    timer.cancel()
-    val secs = (System.nanoTime() - t0) / 1e9
-    report.collect().foreach(r => println(s"[backend] ${r.mkString(" | ")}"))
-    println(f"[backend] run=$runId specs=${specs.size} wall=$secs%.1fs out=$outDir")
-    RunReport(runId, specs.map(_._1), skipped.map(_._1).toSeq, stats)
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Model._
 import graft.spec.{DumpSpec, SpecCompiler}
@@ -172,21 +172,35 @@ object Pipeline {
   /** S3 multiplexed scan: N specs share ONE pass. Per-spec include bits
     * are computed as an array of Column predicates (so the scan filter
     * is still a pushdown-able disjunction), then each included (doc,
-    * spec) pair is emitted. No caching needed — truly one scan. */
+    * spec) pair is emitted. No caching needed — truly one scan.
+    *
+    * `counters`: when given, the A1 counters of every spec ride the same
+    * pass as `observe` metrics on the gated rows — the 2N aggregates of
+    * [[countersMultiplexed]], read back with [[observedCounters]] once an
+    * action over the result has finished. */
   def triplesMultiplexed(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
                          sites: TripleEmitter.Sites = EntityCorpus.sites,
                          dedup: Boolean = true,
-                         format: DumpFormat = DumpFormat.Fixture): DataFrame = {
+                         format: DumpFormat = DumpFormat.Fixture,
+                         counters: Option[Observation] = None): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // any spec wants it → full-parse + deserialize once; the cheap gate
     // and the per-spec include bits both run over the minimal parse
-    val rows = corpus
+    val gated = corpus
       .filter(prefilterMulti(specs.map(_._2), format) &&
         format.gate(col("content"), d => d("type") =!= "lexeme" &&
           specs.map { case (_, s) => SpecCompiler.includePredicate(s, d) }.reduce(_ || _)))
       .select(format.doc(col("content")).as("doc"),
         format.filterDoc(col("content")).as("fdoc"))
+    // every row a spec includes passes the gate, so the aggregates over
+    // the gated rows equal countersMultiplexed's over the whole corpus;
+    // they are named c<i> by position for observedCounters
+    val observed = counters.fold(gated) { obs =>
+      val aggs = counterAggs(specs, col("fdoc")).zipWithIndex.map { case (a, i) => a.as(s"c$i") }
+      gated.observe(obs, aggs.head, aggs.tail: _*)
+    }
+    val rows = observed
       .select(struct(docColumns: _*).as("d"),
         array(specs.map { case (_, s) => SpecCompiler.includePredicate(s, col("fdoc")) }: _*).as("inc"))
       .as[(EntityDoc, Seq[Boolean])]
@@ -335,19 +349,37 @@ object Pipeline {
       .filter(prefilterMulti(specs.map(_._2), format) &&
         format.gate(col("content"), d => d("type") =!= "lexeme"))
       .select(format.filterDoc(col("content")).as("doc"))
-    val aggs = specs.flatMap { case (_, spec) =>
-      val inc = SpecCompiler.includePredicate(spec, col("doc"))
+    val aggs = counterAggs(specs, col("doc"))
+    countersOf(specs, base.agg(aggs.head, aggs.tail: _*).head().get)
+  }
+
+  /** The counters a `triplesMultiplexed(..., counters = Some(obs))` pass
+    * observed, in [[countersMultiplexed]]'s shape. Blocks until an action
+    * over that pass has finished. */
+  def observedCounters(obs: Observation,
+                       specs: Seq[(String, DumpSpec)]): Map[String, (Long, Long)] = {
+    val metrics = obs.get
+    countersOf(specs, i => metrics(s"c$i"))
+  }
+
+  /** Per spec k, the conditional aggregates at 2k (entities) and 2k+1
+    * (statements) over the filter-parsed document column `doc`. */
+  private def counterAggs(specs: Seq[(String, DumpSpec)], doc: Column): Seq[Column] =
+    specs.flatMap { case (_, spec) =>
+      val inc = SpecCompiler.includePredicate(spec, doc)
       Seq(
         sum(when(inc, 1L).otherwise(0L)),
-        sum(when(inc, SpecCompiler.includedStatementsExpr(spec, col("doc")).cast("long"))
+        sum(when(inc, SpecCompiler.includedStatementsExpr(spec, doc).cast("long"))
           .otherwise(0L)))
     }
-    val row = base.agg(aggs.head, aggs.tail: _*).head()
+
+  /** The values of [[counterAggs]], by position, as specId →
+    * (entities, statements); the sums are null over zero rows. */
+  private def countersOf(specs: Seq[(String, DumpSpec)], value: Int => Any): Map[String, (Long, Long)] =
     specs.zipWithIndex.map { case ((name, _), k) =>
-      name -> (Option(row.get(2 * k)).fold(0L)(_.asInstanceOf[Long]),
-               Option(row.get(2 * k + 1)).fold(0L)(_.asInstanceOf[Long]))
+      name -> (Option(value(2 * k)).fold(0L)(_.asInstanceOf[Long]),
+               Option(value(2 * k + 1)).fold(0L)(_.asInstanceOf[Long]))
     }.toMap
-  }
 
   /** J3: property→datatype side table derived from the corpus itself in
     * a first pass (replaces the reference's mutable PropertyRegister,

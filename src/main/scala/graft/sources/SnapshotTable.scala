@@ -159,7 +159,10 @@ object SnapshotTable {
     val dataDir = Paths.get(table, dataRel)
     // 1. data files first — invisible until a manifest references them
     df.write.partitionBy(partitionCol).parquet(dataDir.toString)
-    // per-partition file inventory of THIS commit only (footer row counts)
+    // per-partition file inventory of THIS commit only (footer row counts),
+    // read with the session's Hadoop conf so `spark.hadoop.*` settings
+    // (object-store credentials, ...) apply
+    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
     // manifest keys carry the LOGICAL partition value: Spark path-escapes
     // special chars (space/':'/'%' → %XX) in the directory name, so the
     // key is unescaped here — read() then restores the exact original
@@ -177,7 +180,7 @@ object SnapshotTable {
           val files = ls(pd)
             .filter(_.getFileName.toString.endsWith(".parquet"))
             .map { f =>
-              val (rows, stats) = parquetFooter(f, statsCols)
+              val (rows, stats) = parquetFooter(f, statsCols, hadoopConf)
               FileEntry(s"$dataRel/${pd.getFileName}/${f.getFileName}", rows, stats)
             }
           part -> files
@@ -237,10 +240,10 @@ object SnapshotTable {
     * requested columns (long + string columns supported; others, and
     * all-null row groups, simply record no stats — pruning keeps the
     * file, which is always safe). */
-  private def parquetFooter(file: Path, statsCols: Seq[String]): (Long, Map[String, ColStats]) = {
+  private def parquetFooter(file: Path, statsCols: Seq[String],
+                            conf: org.apache.hadoop.conf.Configuration): (Long, Map[String, ColStats]) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(file.toUri), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val want = statsCols.toSet
@@ -300,18 +303,22 @@ object SnapshotTable {
       case Some((c, lo, hi)) => f => f.stats.get(c).forall(_.mayContain(lo, hi))
       case None              => _ => true
     }
-    val dfs = chosen.toSeq.sortBy(_._1).map { case (part, fs0) =>
-      val fs = fs0.filter(keep)
-      if (fs.isEmpty) None
-      else Some(spark.read.parquet(fs.map(f => s"$table/${f.path}"): _*)
-        .withColumn(snap.partitionCol,
-          // manifest keys are unescaped logical values (see commit);
-          // the Hive sentinel round-trips a null partition value
-          if (part == NullPartition) lit(null).cast("string") else lit(part)))
-    }
-    dfs.flatten match {
+    val reads = chosen.toSeq.sortBy(_._1).map { case (part, fs) => part -> fs.filter(keep) }
+      .filter(_._2.nonEmpty)
+    def paths(fs: Seq[FileEntry]): Seq[String] = fs.map(f => s"$table/${f.path}")
+    // manifest keys are unescaped logical values (see commit); the Hive
+    // sentinel round-trips a null partition value
+    def tagged(df: DataFrame, part: String): DataFrame = df.withColumn(snap.partitionCol,
+      if (part == NullPartition) lit(null).cast("string") else lit(part))
+    reads match {
       case Seq() => spark.emptyDataFrame
-      case ds    => ds.reduce(_ unionByName _)
+      case (part0, fs0) +: rest =>
+        // the schema is inferred once (one footer job), from the first
+        // partition, and handed to every other partition's read
+        val first = spark.read.parquet(paths(fs0): _*)
+        rest.foldLeft(tagged(first, part0)) { case (acc, (part, fs)) =>
+          acc.unionByName(tagged(spark.read.schema(first.schema).parquet(paths(fs): _*), part))
+        }
     }
   }
 

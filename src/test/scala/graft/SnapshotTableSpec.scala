@@ -319,4 +319,57 @@ class SnapshotTableSpec extends AnyFunSuite {
       .select($"doc_id", $"n_chars").as[(Long, Long)].collect().toSet
     assert(cur == Set((1L, 10L), (2L, 20L)))
   }
+
+  test("read infers the schema once per call, not once per partition") {
+    val t = freshTable()
+    val langs = Seq("de", "en", "es", "fr", "it", "nl", "zh")
+    SnapshotTable.commit(docs(langs.zipWithIndex.map { case (l, i) => (i.toLong, l, 10L * i) }: _*),
+      t, "lang")
+    assert(SnapshotTable.snapshotAt(t, 1).partitions.size == 7)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusProbe.drain(sc)
+    sc.addSparkListener(counter)
+    val df = try {
+      val d = SnapshotTable.read(spark, t)
+      org.apache.spark.ListenerBusProbe.drain(sc)
+      d
+    } finally sc.removeSparkListener(counter)
+    assert(jobs.get <= 1, s"building the read launched ${jobs.get} jobs")
+    // same rows, columns and partition-column restore as before
+    assert(df.columns.toSeq == Seq("doc_id", "n_chars", "lang"))
+    assert(df.select($"doc_id", $"lang", $"n_chars").as[(Long, String, Long)].collect().toSet ==
+      langs.zipWithIndex.map { case (l, i) => (i.toLong, l, 10L * i) }.toSet)
+  }
+
+  test("commit reads the footers through the session's Hadoop conf") {
+    val t = freshTable()
+    CountingLocalFs.opens.set(0)
+    // a session setting the footer reads must honour (object-store
+    // credentials travel the same way)
+    spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val snap = try SnapshotTable.commit(docs((1, "en", 10), (2, "de", 20)), t, "lang")
+      finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(snap.files.nonEmpty && CountingLocalFs.opens.get >= snap.files.size,
+      s"${CountingLocalFs.opens.get} opens through the session's file system for ${snap.files.size} footers")
+  }
+}
+
+/** Local file system that counts the files it opens. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+object CountingLocalFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger()
 }
