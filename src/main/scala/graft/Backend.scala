@@ -224,27 +224,26 @@ object Backend {
       // groups aligned with the range for parquet-level stats too.
       val outParts = math.max(specs.size,
         spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      val snapshot =
-        if (specs.isEmpty) None
-        else Some(sources.SnapshotTable.commit(
-          Pipeline.triplesMultiplexed(corpus, specs, counters = Some(counters))
-            .repartitionByRange(outParts, col("specId"), col("subj"))
-            .sortWithinPartitions("specId", "subj"),
-          table, "specId", replace = true, statsCols = Seq("subj"),
-          // claimed specs that emit ZERO triples still swap out their old
-          // partition (a re-opened spec must never keep serving triples
-          // computed from the previous spec/corpus version)
-          clearPartitions = specs.map(_._1)))
+      // the claimed specs' committed files: triple counts and lineage
+      // come straight off their footer stats — no recount job
+      val committed: Map[String, Seq[sources.SnapshotTable.FileEntry]] =
+        if (specs.isEmpty) Map.empty
+        else {
+          val snap = sources.SnapshotTable.commit(
+            Pipeline.triplesMultiplexed(corpus, specs, counters = Some(counters))
+              .repartitionByRange(outParts, col("specId"), col("subj"))
+              .sortWithinPartitions("specId", "subj"),
+            table, "specId", replace = true, statsCols = Seq("subj"),
+            // claimed specs that emit ZERO triples still swap out their old
+            // partition (a re-opened spec must never keep serving triples
+            // computed from the previous spec/corpus version)
+            clearPartitions = specs.map(_._1))
+          specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil) }.toMap
+        }
 
       // ---- per-spec stats (A1/A5) for the claimed set, then commit the
       // done markers LAST (data is already durable; crash before a marker
-      // only re-runs that spec, which the partition replace absorbs).
-      // Triple counts come straight off the committed manifest's footer
-      // stats — no recount job.
-      val committed: Map[String, Seq[sources.SnapshotTable.FileEntry]] = snapshot match {
-        case Some(snap) => specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil) }.toMap
-        case None => Map.empty
-      }
+      // only re-runs that spec, which the partition replace absorbs)
       val allCounters =
         if (specs.nonEmpty) Pipeline.observedCounters(counters, specs)
         else Map.empty[String, (Long, Long)]
