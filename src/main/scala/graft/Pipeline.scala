@@ -10,24 +10,25 @@ import graft.sources.{DumpFormat, EntityCorpus}
 /** End-to-end KG-construction pipeline: corpus → parse → spec filter →
   * triple emission → dedup → partitioned write, with lineage + metrics.
   *
-  * Execution shape (SURVEY §4): ONE narrow stage from scan through
-  * emission (filter and flatMap are both per-row); the only shuffles are
-  * (a) the global (s,p,o) dropDuplicates the north rule requires and
-  * (b) the explicit output repartition by subj-hash. Filters are Column
-  * expressions (codegen + pushdown), never closures. The parse happens
-  * once per scan even when N specs are multiplexed over it (reference S3
-  * `DumpRunner.java:78-86`).
+  * One plan serves every spec count: [[triplesMultiplexed]] is the
+  * pipeline, and single-spec [[triples]] is its N=1 slice — as the
+  * reference's single-spec `Cli` is `DumpRunner` with one processor
+  * (`DumpRunner.java:78-86`). Execution shape (SURVEY §4): ONE narrow
+  * stage from scan through emission (filter and flatMap are both
+  * per-row); the only shuffles are (a) the global (spec,s,p,o) dedup the
+  * north rule requires and (b) the explicit output repartition by
+  * subj-hash. Filters are Column expressions (codegen + pushdown), never
+  * closures. The parse happens once per scan however many specs share it.
   *
-  * Parse cost discipline: the include gate runs over a MINIMAL-schema
-  * `from_json` bound once per row through a lambda (DumpFormat.gate), so
-  * excluded rows pay only the pruned parse and predicate pushdown cannot
-  * duplicate it; the full-schema parse happens exactly once, for
-  * surviving rows only. Input dialect (synthetic fixture vs real
-  * Wikidata dump JSON) is a DumpFormat parameter.
+  * Parse cost discipline ([[gatedDocs]], the one scan-gate chain): the
+  * include gate runs over a MINIMAL-schema `from_json` bound once per row
+  * through a lambda (DumpFormat.gate), so excluded rows pay only the
+  * pruned parse and predicate pushdown cannot duplicate it; the
+  * full-schema parse happens exactly once, for surviving rows only.
+  * Input dialect (synthetic fixture vs real Wikidata dump JSON) is a
+  * DumpFormat parameter.
   */
 object Pipeline {
-
-  private val observeId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   case class ErrorRow(repo: String, path: String, id: String, error: String)
 
@@ -73,26 +74,30 @@ object Pipeline {
     col("doc.aliases").as("aliases"), col("doc.sitelinks").as("sitelinks"),
     col("doc.statements").as("statements"))
 
-  /** Included documents for one spec, as a typed Dataset — the F1 gate
-    * runs as a minimal-schema Column predicate BEFORE any full parse or
-    * deserialization (DumpFormat.gate: one pruned `from_json` per row);
-    * the full parse runs once, for survivors only. */
+  /** The scan-gate chain of every KG path, written once: the raw
+    * substring pre-gate, then the minimal-parse gate (some spec includes
+    * the document, which is no lexeme when `excludeLexemes`), then the
+    * full parse for survivors only, as column `doc` after `keep`. The
+    * pre-gate goes first: And short-circuits in codegen, so rows failing
+    * the cheap substring test never pay the gate parse. */
+  private[graft] def gatedDocs(corpus: DataFrame, specs: Seq[DumpSpec], format: DumpFormat,
+                               excludeLexemes: Boolean = true,
+                               keep: Seq[Column] = Nil): DataFrame =
+    corpus
+      .filter(prefilterMulti(specs, format) &&
+        format.gate(col("content"), d =>
+          (if (excludeLexemes) d("type") =!= "lexeme" else lit(true)) &&
+            specs.map(SpecCompiler.includePredicate(_, d)).reduce(_ || _)))
+      .select(keep :+ format.doc(col("content")).as("doc"): _*)
+
+  /** Included documents for one spec, as a typed Dataset: the
+    * [[gatedDocs]] survivors, deserialized. */
   def includedDocs(corpus: DataFrame, spec: DumpSpec,
                    format: DumpFormat = DumpFormat.Fixture,
                    excludeLexemes: Boolean = false): Dataset[EntityDoc] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val lexPred: Column => Column =
-      if (excludeLexemes) d => d("type") =!= "lexeme" else _ => lit(true)
-    corpus
-      // scan pre-gate first: And short-circuits in codegen, so rows
-      // failing the cheap raw-substring test never pay the gate parse
-      .filter(SpecCompiler.prefilter(spec, col("content"), format) &&
-        format.gate(col("content"),
-          d => lexPred(d) && SpecCompiler.includePredicate(spec, d)))
-      .select(format.doc(col("content")).as("doc"))
-      .select(docColumns: _*)
-      .as[EntityDoc]
+    gatedDocs(corpus, Seq(spec), format, excludeLexemes).select(docColumns: _*).as[EntityDoc]
   }
 
   /** S6 error channel: rows that fail JSON parse, plus included lexeme
@@ -113,57 +118,42 @@ object Pipeline {
     parseErrors.union(lexemes).as[ErrorRow]
   }
 
-  /** Triples for one spec. Deduplicated (s,p,o) per the north rule; the
-    * constant prologue (S5) is unioned in. Counters (A1) ride on
-    * `observe` — read them from the QueryExecutionListener or
-    * `Observation` without a second pass. */
+  /** specId of the N=1 slices; empty, so the carried column costs a
+    * length word per row. */
+  private val LoneSpec = ""
+
+  /** Triples for one spec: the N=1 slice of [[triplesMultiplexed]].
+    * Deduplicated (s,p,o) per the north rule; the constant prologue (S5)
+    * is unioned in. Documents that are neither items nor properties emit
+    * nothing (lexemes go to [[errors]]). */
   def triples(corpus: DataFrame, spec: DumpSpec,
               sites: TripleEmitter.Sites = EntityCorpus.sites,
               dedup: Boolean = true,
-              format: DumpFormat = DumpFormat.Fixture): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // lexemes → error channel, not output (gated in the cheap pre-filter)
-    val docs = includedDocs(corpus, spec, format, excludeLexemes = true)
-    // unique metric name per instantiation: two triples() plans may be
-    // combined into one query (e.g. equivalence checks via exceptAll),
-    // and Spark rejects duplicate observation names in one plan
-    val observed = docs
-      .observe(s"graft_counters_${Pipeline.observeId.incrementAndGet()}",
-        count(lit(1)).as("includedEntities"),
-        sum(SpecCompiler.includedStatementsExpr(spec,
-          struct(col("statements").as("statements")))).as("includedStatements"))
-    // J2: the site table rides as a broadcast variable (one copy per
-    // executor, not per task — matters at 1000 executors)
-    val sitesB = spark.sparkContext.broadcast(sites)
-    val emitted = observed.flatMap(d => TripleEmitter.emit(spec, normalize(d), sitesB.value))
-    val all = emitted.union(spark.createDataset(TripleEmitter.prologue))
-    val out = all.toDF("subj", "pred", "obj")
-    if (dedup) dedupTriples(out, Seq("subj", "pred", "obj")) else out
-  }
+              format: DumpFormat = DumpFormat.Fixture): DataFrame =
+    triplesMultiplexed(corpus, Seq(LoneSpec -> spec), sites, dedup, format).drop("specId")
 
-  /** Exact (s,p,o)-set dedup, one hash pass. `dropDuplicates` plans a
-    * partial+final hash aggregate; the map-side partial builds a large
-    * UnsafeRow hash table per task for only ~1.4× row reduction on this
-    * workload (near-unique keys) — measured 10.3 s → 8.7 s at 32t/8M
-    * entities by shuffling the raw triples once (hash of the FULL
-    * (s,p,o) row — uniform by construction, no hot key) and deduping in
-    * a single per-partition set pass (guide §1.2 step 1 / §2.3:
-    * partial aggregation only pays when it reduces rows).
+  /** Exact (specId,s,p,o)-set dedup, one hash pass. `dropDuplicates`
+    * plans a partial+final hash aggregate; the map-side partial builds a
+    * large UnsafeRow hash table per task for only ~1.4× row reduction on
+    * this workload (near-unique keys) — measured 10.3 s → 8.7 s at
+    * 32t/8M entities by shuffling the raw triples once (hash of the FULL
+    * row — uniform by construction, no hot key) and deduping in a single
+    * per-partition set pass (guide §1.2 step 1 / §2.3: partial
+    * aggregation only pays when it reduces rows).
     * Memory bound: per-task state = the partition's unique triples; the
     * repartition has no fixed partition count, so AQE sizes post-shuffle
     * partitions to `advisoryPartitionSizeInBytes` — the set is bounded
     * by the advisory size, the same knob that bounds every other
     * reduce-side task state. Output set identical (golden/oracle-tested). */
-  private[graft] def dedupTriples(out: DataFrame, keys: Seq[String]): DataFrame = {
-    val spark = out.sparkSession
+  private[graft] def dedupTriples(all: DataFrame): DataFrame = {
+    val spark = all.sparkSession
     import spark.implicits._
-    val cols = out.columns.toSeq
-    require(cols == keys, s"dedupTriples: expected exactly $keys, got $cols")
-    out.repartition(keys.map(col): _*)
-      .as[(String, String, String)]
+    val keys = Seq("specId", "subj", "pred", "obj")
+    require(all.columns.toSeq == keys, s"dedupTriples: expected exactly $keys, got ${all.columns.toSeq}")
+    all.repartition(keys.map(col): _*)
+      .as[(String, String, String, String)]
       .mapPartitions { it =>
-        val seen = new java.util.HashSet[(String, String, String)]()
+        val seen = new java.util.HashSet[(String, String, String, String)]()
         it.filter(seen.add)
       }
       .toDF(keys: _*)
@@ -172,7 +162,10 @@ object Pipeline {
   /** S3 multiplexed scan: N specs share ONE pass. Per-spec include bits
     * are computed as an array of Column predicates (so the scan filter
     * is still a pushdown-able disjunction), then each included (doc,
-    * spec) pair is emitted. No caching needed — truly one scan.
+    * spec) pair is emitted — items and properties only; lexemes go to
+    * [[errors]] and other document types emit nothing. No caching
+    * needed — truly one scan. `dedup` keeps one copy of each (specId,
+    * s, p, o) row.
     *
     * `counters`: when given, the A1 counters of every spec ride the same
     * pass as `observe` metrics on the gated rows — the 2N aggregates of
@@ -187,12 +180,8 @@ object Pipeline {
     import spark.implicits._
     // any spec wants it → full-parse + deserialize once; the cheap gate
     // and the per-spec include bits both run over the minimal parse
-    val gated = corpus
-      .filter(prefilterMulti(specs.map(_._2), format) &&
-        format.gate(col("content"), d => d("type") =!= "lexeme" &&
-          specs.map { case (_, s) => SpecCompiler.includePredicate(s, d) }.reduce(_ || _)))
-      .select(format.doc(col("content")).as("doc"),
-        format.filterDoc(col("content")).as("fdoc"))
+    val gated = gatedDocs(corpus, specs.map(_._2), format,
+      keep = Seq(format.filterDoc(col("content")).as("fdoc")))
     // every row a spec includes passes the gate, so the aggregates over
     // the gated rows equal countersMultiplexed's over the whole corpus;
     // they are named c<i> by position for observedCounters
@@ -200,11 +189,17 @@ object Pipeline {
       val aggs = counterAggs(specs, col("fdoc")).zipWithIndex.map { case (a, i) => a.as(s"c$i") }
       gated.observe(obs, aggs.head, aggs.tail: _*)
     }
+    // the gate already is a lone spec's include bit, so N=1 needs no
+    // `fdoc` and the optimizer prunes its parse when nothing observes it
+    val inc =
+      if (specs.size == 1) Seq(lit(true))
+      else specs.map { case (_, s) => SpecCompiler.includePredicate(s, col("fdoc")) }
     val rows = observed
-      .select(struct(docColumns: _*).as("d"),
-        array(specs.map { case (_, s) => SpecCompiler.includePredicate(s, col("fdoc")) }: _*).as("inc"))
+      .select(struct(docColumns: _*).as("d"), array(inc: _*).as("inc"))
       .as[(EntityDoc, Seq[Boolean])]
     val specArr = specs.toIndexedSeq
+    // J2: the site table rides as a broadcast variable (one copy per
+    // executor, not per task — matters at 1000 executors)
     val sitesB = spark.sparkContext.broadcast(sites)
     val emitted = rows.flatMap { case (doc, inc) =>
       val nd = normalize(doc)
@@ -219,22 +214,7 @@ object Pipeline {
       TripleEmitter.prologue.map(t => SpecTriple(id, t.subj, t.pred, t.obj))
     }
     val all = emitted.union(spark.createDataset(prologues)).toDF("specId", "subj", "pred", "obj")
-    if (dedup) dedupTriples4(all) else all
-  }
-
-  /** 4-column variant of [[dedupTriples]] for the multiplexed stream. */
-  private[graft] def dedupTriples4(all: DataFrame): DataFrame = {
-    val spark = all.sparkSession
-    import spark.implicits._
-    val keys = Seq("specId", "subj", "pred", "obj")
-    require(all.columns.toSeq == keys, s"dedupTriples4: got ${all.columns.toSeq}")
-    all.repartition(keys.map(col): _*)
-      .as[(String, String, String, String)]
-      .mapPartitions { it =>
-        val seen = new java.util.HashSet[(String, String, String, String)]()
-        it.filter(seen.add)
-      }
-      .toDF(keys: _*)
+    if (dedup) dedupTriples(all) else all
   }
 
   /** Format as N-Triples lines (SC1-SC3). */
@@ -288,11 +268,7 @@ object Pipeline {
                      format: DumpFormat = DumpFormat.Fixture): DataFrame = {
     val spark = corpus.sparkSession
     graft.functions.GraftExtensions.register(spark)
-    val p = corpus
-      .filter(SpecCompiler.prefilter(spec, col("content"), format) &&
-        format.gate(col("content"),
-          d => d("type") =!= "lexeme" && SpecCompiler.includePredicate(spec, d)))
-      .select(format.doc(col("content")).as("doc"))
+    val p = gatedDocs(corpus, Seq(spec), format)
     val subj = concat(lit(graft.emit.Vocab.WD), col("doc.id"))
     // nt_escape resolves through the registry (GraftExtensions.register
     // above) — public API route to a custom Expression in Spark 4
@@ -319,24 +295,13 @@ object Pipeline {
       .dropDuplicates("subj", "pred", "obj")
   }
 
-  /** A1 counters in one aggregate pass (the observe() values, computed
-    * directly): (includedEntities, includedStatements). Statements are
-    * counted once even if both simple+full are emitted, and BEFORE the
-    * rank gate (reference `FilteredRdfSerializer.java:328-331`). */
+  /** A1 counters for one spec, (includedEntities, includedStatements):
+    * the N=1 entry of [[countersMultiplexed]]. Statements are counted
+    * once even if both simple+full are emitted, and BEFORE the rank gate
+    * (reference `FilteredRdfSerializer.java:328-331`). */
   def counters(corpus: DataFrame, spec: DumpSpec,
-               format: DumpFormat = DumpFormat.Fixture): (Long, Long) = {
-    // the minimal filter-parse carries everything A1 needs
-    // (statements.property for the options when-chain)
-    val r = corpus
-      .filter(SpecCompiler.prefilter(spec, col("content"), format) &&
-        format.gate(col("content"),
-          d => d("type") =!= "lexeme" && SpecCompiler.includePredicate(spec, d)))
-      .select(format.filterDoc(col("content")).as("doc"))
-      .agg(
-        count(lit(1)),
-        coalesce(sum(SpecCompiler.includedStatementsExpr(spec, col("doc")).cast("long")), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+               format: DumpFormat = DumpFormat.Fixture): (Long, Long) =
+    countersMultiplexed(corpus, Seq(LoneSpec -> spec), format)(LoneSpec)
 
   /** A1 counters for N specs in ONE corpus pass: per-spec conditional
     * aggregates (sum(when(include_k, …))) — at 10^12 rows this replaces

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Pipeline
 import graft.model.Model.EntityDoc
-import graft.spec.{DumpSpec, SpecCompiler}
+import graft.spec.DumpSpec
 import graft.emit.TripleEmitter
 import graft.sources.{DumpFormat, EntityCorpus}
 
@@ -45,26 +45,24 @@ object Incremental {
       sha2(col("content"), 256).as("src_sha"))
 
   /** Triples with per-entity lineage, pre-dedup: (src, src_sha, subj,
-    * pred, obj). Same gate chain as `Pipeline.triples` (scan pre-gate →
-    * minimal-parse include predicate → full parse for survivors only);
-    * the corpus-independent prologue is NOT included — it belongs to a
-    * dump, not to an entity. */
+    * pred, obj). Same gate chain (`Pipeline.gatedDocs`) and emission as
+    * `Pipeline.triples`; the corpus-independent prologue is NOT included
+    * — it belongs to a dump, not to an entity. */
   def triplesWithLineage(corpus: DataFrame, spec: DumpSpec,
                          sites: TripleEmitter.Sites = EntityCorpus.sites,
                          format: DumpFormat = DumpFormat.Fixture): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val rows = corpus
-      .filter(SpecCompiler.prefilter(spec, col("content"), format) &&
-        format.gate(col("content"),
-          d => d("type") =!= "lexeme" && SpecCompiler.includePredicate(spec, d)))
-      .select(sha2(col("content"), 256).as("src_sha"), format.doc(col("content")).as("doc"))
+    val rows = Pipeline.gatedDocs(corpus, Seq(spec), format,
+        keep = Seq(sha2(col("content"), 256).as("src_sha")))
       .select(col("src_sha"), struct(Pipeline.docColumns: _*).as("d"))
       .as[(String, EntityDoc)]
     val sitesB = spark.sparkContext.broadcast(sites)
     rows.flatMap { case (sha, doc) =>
       val nd = Pipeline.normalize(doc)
-      TripleEmitter.emit(spec, nd, sitesB.value).map(t => (nd.id, sha, t.subj, t.pred, t.obj))
+      if (TripleEmitter.isSerializable(nd))
+        TripleEmitter.emit(spec, nd, sitesB.value).map(t => (nd.id, sha, t.subj, t.pred, t.obj))
+      else Nil
     }.toDF("src", "src_sha", "subj", "pred", "obj")
   }
 

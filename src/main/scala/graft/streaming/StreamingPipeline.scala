@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.Model._
-import graft.spec.{DumpSpec, SpecCompiler}
+import graft.spec.DumpSpec
 import graft.emit.TripleEmitter
 import graft.sources.EntityCorpus
 
@@ -26,23 +26,17 @@ object StreamingPipeline {
     StructField("commit", StringType), StructField("lang", StringType),
     StructField("content", StringType)))
 
-  /** Streaming triples: same operators as Pipeline.triples over a file
-    * stream. Note: no global dedup here (that needs a batch pass or
-    * watermarked stateful dedup downstream). */
+  /** Streaming triples: Pipeline.triples' gate chain and emission over
+    * a file stream. Note: no global dedup here (that needs a batch pass
+    * or watermarked stateful dedup downstream). */
   def streamTriples(spark: SparkSession, corpusDir: String, spec: DumpSpec,
                     sites: TripleEmitter.Sites = EntityCorpus.sites): Dataset[Triple] = {
     import spark.implicits._
     val raw = spark.readStream.schema(corpusSchema).parquet(corpusDir)
-    val docs = EntityCorpus.parse(raw)
-      .filter(col("doc").isNotNull && col("doc.id").isNotNull && col("doc.type") =!= "lexeme")
-      .filter(SpecCompiler.includePredicate(spec, col("doc")))
-      .select(
-        col("doc.id").as("id"), col("doc.type").as("etype"), col("doc.datatype").as("datatype"),
-        col("doc.labels").as("labels"), col("doc.descriptions").as("descriptions"),
-        col("doc.aliases").as("aliases"), col("doc.sitelinks").as("sitelinks"),
-        col("doc.statements").as("statements"))
-      .as[EntityDoc]
-    docs.flatMap(d => TripleEmitter.emit(spec, graft.Pipeline.normalize(d), sites))
+    graft.Pipeline.includedDocs(raw, spec, excludeLexemes = true).flatMap { d =>
+      val nd = graft.Pipeline.normalize(d)
+      if (TripleEmitter.isSerializable(nd)) TripleEmitter.emit(spec, nd, sites) else Nil
+    }
   }
 
   val eventsSchema: StructType = StructType(Seq(

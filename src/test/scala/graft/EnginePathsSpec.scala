@@ -33,6 +33,18 @@ class EnginePathsSpec extends AnyFunSuite {
     assert(!planAll.contains("Contains(content"), planAll)
   }
 
+  test("single-spec triples plan one dedup Exchange behind the scan pre-gate") {
+    val plan = Pipeline.triples(EntityCorpus.generate(spark, 200).toDF(), specNamed("humans.json"))
+      .queryExecution.executedPlan.toString
+    assert("Exchange ".r.findAllIn(plan).size == 1, s"expected exactly one Exchange:\n$plan")
+    assert(plan.contains("Exchange hashpartitioning"), plan)
+    val filterLine = plan.linesIterator.find(_.contains("Filter "))
+      .getOrElse(fail(s"no Filter in plan:\n$plan"))
+    val iContains = filterLine.indexOf("Contains(content")
+    assert(iContains >= 0, s"pre-gate Contains missing from filter:\n$filterLine")
+    assert(filterLine.indexOf("from_json") > iContains, s"gate parse not behind the pre-gate:\n$filterLine")
+  }
+
   test("overlap resolution plans as an equi-anti-join on doc_id (no nested loop)") {
     import spark.implicits._
     val dict = Seq(("alan turing", "Q7251", 2000L), ("turing", "Q7251", 1000L))

@@ -83,6 +83,24 @@ class PipelineSmokeSpec extends AnyFunSuite {
     corpus.unpersist()
   }
 
+  test("a gated document that is no item, property or lexeme emits nothing") {
+    import spark.implicits._
+    // include-all spec: the mediainfo document passes the gate
+    val mediainfo = EntityCorpus.CorpusRow("r", "M1.json", "c", "json",
+      """{"type":"mediainfo","id":"M1","labels":{"en":"a file"}}""")
+    val corpus = EntityCorpus.generate(spark, 100).union(Seq(mediainfo).toDS()).toDF().cache()
+    val spec = specFromFile("english-labels.json")
+    val single = Pipeline.triples(corpus, spec).collect().map(_.toString).sorted
+    val fromMulti = Pipeline.triplesMultiplexed(corpus, Seq("labels" -> spec))
+      .select("subj", "pred", "obj").collect().map(_.toString).sorted
+    val lineage = graft.plans.Incremental.triplesWithLineage(corpus, spec)
+    val fromLineage = graft.plans.Incremental.dump(lineage).collect().map(_.toString).sorted
+    assert(single.toSeq == fromMulti.toSeq)
+    assert(single.toSeq == fromLineage.toSeq)
+    assert(!single.exists(_.contains("/entity/M1")), "mediainfo document was serialized")
+    corpus.unpersist()
+  }
+
   test("triple-table manifest audits the physical bucket layout 1:1") {
     val corpus = EntityCorpus.generate(spark, 300).toDF()
     val t = Pipeline.triples(corpus, specFromFile("humans.json"))
