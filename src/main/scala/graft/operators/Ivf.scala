@@ -103,11 +103,10 @@ object Ivf {
     // run at file-count parallelism (no-op at production width)
     val qv = Par.spread(vectors).select(col("vec_id"), quantize(col("embedding")).as("qe"))
     val n = vectors.count()
-    var centroids = initCentroidsN(vectors, k, n).localCheckpoint(false)
     // per-iteration aggregates sized from the measured corpus (no-op at
     // production scale; the assignment map stage keeps Par.spread width)
-    graft.plans.Iter.withLoopConf(vectors.sparkSession, n) {
-    (1 to iters).foreach { _ =>
+    graft.plans.Iter.fixpoint(vectors.sparkSession, n,
+        graft.plans.Iter.mat(initCentroidsN(vectors, k, n)))(iters) { (centroids, _) =>
       // k×dim integer distances per vector: JIT kernel, identical
       // lexicographic (d2, cid) argmin (Kernels scaladoc)
       val near = Kernels.nearestCidKernel(centroidArray(centroids))
@@ -125,12 +124,9 @@ object Ivf {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s("m")).as("centroid"))
       // carry empty clusters forward instead of silently shrinking k
-      centroids = centroids.as("p").join(sums.as("n"), Seq("cid"), "left_outer")
-        .select(col("cid"), coalesce(col("n.centroid"), col("p.centroid")).as("centroid"))
-        .localCheckpoint(false)
-    }
-    }
-    centroids
+      graft.plans.Iter.mat(centroids.as("p").join(sums.as("n"), Seq("cid"), "left_outer")
+        .select(col("cid"), coalesce(col("n.centroid"), col("p.centroid")).as("centroid")))
+    }._1
   }
 
   /** nearest-centroid assignment: (vec_id, cid). Pure map-side (literal

@@ -73,14 +73,12 @@ object Pq {
         subvec(col("embedding"), j, subdim))).as(Seq("sub", "qe")))
     val n = vectors.count()
     val stride = math.max(1L, n / k)
-    var books = subs
+    val books0 = graft.plans.Iter.mat(subs
       .filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
       .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
-        col("qe").as("centroid"))
-      .localCheckpoint(false)
+        col("qe").as("centroid")))
     // training aggregates sized from the measured corpus (Iter)
-    graft.plans.Iter.withLoopConf(vectors.sparkSession, n * m) {
-    (1 to iters).foreach { _ =>
+    graft.plans.Iter.fixpoint(vectors.sparkSession, n * m, books0)(iters) { (books, _) =>
       val bLit = bookLiteral(books)
       val sums = subs
         .select(col("sub"), nearestCid(bLit, col("sub"), col("qe")).as("cid"),
@@ -94,13 +92,10 @@ object Pq {
         .groupBy("sub", "cid")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
           s => s("mv")).as("centroid"))
-      books = books.as("p").join(sums.as("n"), Seq("sub", "cid"), "left_outer")
+      graft.plans.Iter.mat(books.as("p").join(sums.as("n"), Seq("sub", "cid"), "left_outer")
         .select(col("sub"), col("cid"),
-          coalesce(col("n.centroid"), col("p.centroid")).as("centroid"))
-        .localCheckpoint(false)
-    }
-    }
-    books
+          coalesce(col("n.centroid"), col("p.centroid")).as("centroid")))
+    }._1
   }
 
   /** PQ codes: (vec_id, sub, cid) — one row per subspace, pure map-side

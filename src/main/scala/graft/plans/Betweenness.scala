@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * factor |S| is the knob. Every round is ONE frontier⋈edges equi-join
   * + ONE partial-aggregable hash agg; levels bound rounds (2·maxDepth
   * driver-scheduled rounds, the [[Sssp]]/[[TemporalReach]] pattern);
-  * per-round frames are localCheckpoint-ed.
+  * per-round frames are truncated with [[Iter.mat]].
   *
   * Reference analog: none (beyond-reference graph operator).
   */
@@ -49,72 +49,63 @@ object Betweenness {
     val e = Iter.mat(edges.select(col(c(0)).cast("long").as("src"),
         col(c(1)).cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct())
-    val eRows = e.count()
-    val spark = edges.sparkSession
+    val eRows = Iter.count(e)
 
     // forward BFS: settled (s, v, dist, sigma); per level record the
     // shortest-path-DAG edges (s, pv, v, lvl) with lvl = dist(v)
-    var state = Iter.mat(sources.toDF("s").select(col("s").cast("long").as("s")).distinct()
+    val state0 = Iter.mat(sources.toDF("s").select(col("s").cast("long").as("s")).distinct()
       .select(col("s"), col("s").as("v"), lit(0).as("dist"), lit(1L).as("sigma")))
-    val nSources = state.count()
+    val nSources = Iter.count(state0)
     // state/DAG bound: |S|·|E| rows worst case — sizes loop width and
     // gates the per-round state broadcasts
     val stBound =
       if (eRows > Long.MaxValue / math.max(1L, nSources)) Long.MaxValue
       else math.max(1L, nSources) * eRows
-    Iter.withLoopConf(spark, stBound, aqeOff = true) {
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, stBound)
-    var frontier = state
-    var preds: Option[DataFrame] = None
-    var lvl = 0
-    var more = true
-    while (lvl < maxDepth && more) {
-      val step = e.join(bc(frontier), frontier("v") === e("src"))
-        .select(col("s"), frontier("v").as("pv"), e("dst").as("w"), col("sigma"))
-      // only edges into NOT-YET-SETTLED nodes are shortest-path-DAG edges
-      val fresh = step.join(
-          bc(state.select(col("s"), col("v").as("w"))), Seq("s", "w"), "left_anti")
-        .localCheckpoint(false)
-      val nf = fresh.groupBy(col("s"), col("w").as("v"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("dist", lit(lvl + 1))
-        .select(col("s"), col("v"), col("dist"), col("sigma"))
-        .localCheckpoint(false)
-      more = nf.limit(1).count() > 0
-      if (more) {
-        val pe = fresh.select(col("s"), col("pv"), col("w").as("v"),
-          lit(lvl + 1).as("lvl"))
-        preds = Some(Iter.mat(preds.fold(pe)(_ unionAll pe)))
-        state = Iter.mat(state.unionAll(nf))
-        frontier = nf
-        lvl += 1
-      }
+    // forward: (settled, frontier, DAG edges so far, levels, more)
+    type Fwd = (DataFrame, DataFrame, Option[DataFrame], Int, Boolean)
+    val ((state, _, preds, maxLvl, _), _) = Iter.fixpoint(e.sparkSession, stBound,
+        (state0, state0, None, 0, true): Fwd)(
+      maxDepth, Iter.Until.Done((f: Fwd) => !f._5), aqeOff = true) {
+      case ((state, frontier, preds, lvl, _), _) =>
+        val step = e.join(bc(frontier), frontier("v") === e("src"))
+          .select(col("s"), frontier("v").as("pv"), e("dst").as("w"), col("sigma"))
+        // only edges into NOT-YET-SETTLED nodes are shortest-path-DAG edges
+        val fresh = Iter.mat(step.join(
+            bc(state.select(col("s"), col("v").as("w"))), Seq("s", "w"), "left_anti"))
+        val nf = Iter.mat(fresh.groupBy(col("s"), col("w").as("v"))
+          .agg(sum(col("sigma")).as("sigma"))
+          .withColumn("dist", lit(lvl + 1))
+          .select(col("s"), col("v"), col("dist"), col("sigma")))
+        if (nf.limit(1).count() == 0) (state, frontier, preds, lvl, false)
+        else {
+          val pe = fresh.select(col("s"), col("pv"), col("w").as("v"), lit(lvl + 1).as("lvl"))
+          (Iter.mat(state.unionAll(nf)), nf, Some(Iter.mat(preds.fold(pe)(_ unionAll pe))),
+            lvl + 1, true)
+        }
     }
-    val maxLvl = lvl
-    if (preds.isEmpty) // no edges from any source: empty result, right schema
-      state.select(col("v").as("id"), lit(0L).as("bc_ppm")).where(lit(false))
-    else {
-    val pe = preds.get
-    val sigma = state.select(col("s"), col("v"), col("sigma"))
-    // backward accumulation, levels maxLvl..1; δ starts at 0 everywhere
-    var delta = Iter.mat(state.select(col("s"), col("v"), lit(0L).as("delta")))
-    var l = maxLvl
-    while (l >= 1) {
-      val contrib = pe.where(col("lvl") === l)
-        .join(bc(sigma.select(col("s"), col("v").as("pv"), col("sigma").as("sig_p"))),
-          Seq("s", "pv"))
-        .join(bc(sigma.select(col("s"), col("v"), col("sigma").as("sig_w"))), Seq("s", "v"))
-        .join(bc(delta.select(col("s"), col("v"), col("delta").as("d_w"))), Seq("s", "v"))
-        .groupBy(col("s"), col("pv").as("v"))
-        .agg(sum(expr("sig_p * (1000000 + d_w) div sig_w")).as("add"))
-      delta = Iter.mat(delta.join(bc(contrib), Seq("s", "v"), "left")
-        .select(col("s"), col("v"),
-          (col("delta") + coalesce(col("add"), lit(0L))).as("delta")))
-      l -= 1
-    }
-    delta.where(col("s") =!= col("v"))
-      .groupBy(col("v").as("id")).agg(sum(col("delta")).as("bc_ppm"))
-    }
+    preds match {
+      case None => // no edges from any source: empty result, right schema
+        state.select(col("v").as("id"), lit(0L).as("bc_ppm")).where(lit(false))
+      case Some(pe) =>
+        val sigma = state.select(col("s"), col("v"), col("sigma"))
+        // backward accumulation, levels maxLvl..1; δ starts at 0 everywhere
+        val delta0 = Iter.mat(state.select(col("s"), col("v"), lit(0L).as("delta")))
+        val (delta, _) = Iter.fixpoint(e.sparkSession, stBound, delta0)(maxLvl, aqeOff = true) {
+          (delta, r) =>
+            val contrib = pe.where(col("lvl") === maxLvl - r)
+              .join(bc(sigma.select(col("s"), col("v").as("pv"), col("sigma").as("sig_p"))),
+                Seq("s", "pv"))
+              .join(bc(sigma.select(col("s"), col("v"), col("sigma").as("sig_w"))), Seq("s", "v"))
+              .join(bc(delta.select(col("s"), col("v"), col("delta").as("d_w"))), Seq("s", "v"))
+              .groupBy(col("s"), col("pv").as("v"))
+              .agg(sum(expr("sig_p * (1000000 + d_w) div sig_w")).as("add"))
+            Iter.mat(delta.join(bc(contrib), Seq("s", "v"), "left")
+              .select(col("s"), col("v"),
+                (col("delta") + coalesce(col("add"), lit(0L))).as("delta")))
+        }
+        delta.where(col("s") =!= col("v"))
+          .groupBy(col("v").as("id")).agg(sum(col("delta")).as("bc_ppm"))
     }
   }
 }

@@ -15,44 +15,29 @@ import org.apache.spark.sql.functions._
   * closure so already-reached pairs are never re-expanded — the work
   * per round is proportional to newly discovered pairs, cycles
   * terminate naturally, and every pair carries its minimal hop count.
-  * Lineage is truncated per round (`localCheckpoint`; swap to
-  * `checkpoint` with a cluster checkpoint dir, same note as
-  * [[ConnectedComponents]]). Joins stay equi-joins on the edge source
-  * key; Catalyst/AQE picks broadcast when a frontier is small.
+  * Lineage is truncated per round with [[Iter.mat]], whose fresh
+  * attribute ids also keep the rounds' unions (all re-traversing the
+  * same edge leaf) free of shared-id constraint rewrites. Joins stay
+  * equi-joins on the edge source key; Catalyst/AQE picks broadcast
+  * when a frontier is small.
   */
 object Closure {
-
-  /** Materialize a round's result as a CLEAN leaf. `localCheckpoint`
-    * truncates lineage but keeps the analyzed plan's attribute ids and
-    * constraints; since every round re-traverses the SAME edge plan and
-    * the rounds are unioned together, those shared ids make Union
-    * constraint rewriting fail ("key not found: src#N"). The RDD
-    * round-trip yields a leaf with fresh ids and no inherited
-    * constraints. (Cluster note: swap localCheckpoint → checkpoint with
-    * a checkpoint dir, same as [[ConnectedComponents]].) */
-  private def materialize(df: DataFrame): DataFrame = {
-    val chk = df.localCheckpoint(false)
-    chk.sparkSession.createDataFrame(chk.rdd, chk.schema)
-  }
 
   /** @return columns (src, dst, depth) — depth = minimal #hops ≤ maxDepth */
   def transitive(edges: DataFrame, srcCol: String, dstCol: String,
                  maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, "maxDepth must be >= 1")
-    val e = materialize(
+    val e = Iter.mat(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    var acc = e.withColumn("depth", lit(1))
-    var frontier = e
-    for (d <- 2 to maxDepth) {
-      val next = materialize(frontier.alias("f")
+    Iter.fixpoint(e.sparkSession, Iter.SessionWidth, (e.withColumn("depth", lit(1)), e))(
+      maxDepth - 1) { case ((acc, frontier), r) =>
+      val next = Iter.mat(frontier.alias("f")
         .join(e.alias("g"), col("f.dst") === col("g.src"))
         .select(col("f.src").as("src"), col("g.dst").as("dst"))
         .distinct()
         // drop pairs already reached at a smaller depth (BFS visited set)
         .join(acc.select("src", "dst"), Seq("src", "dst"), "left_anti"))
-      acc = acc.unionByName(next.withColumn("depth", lit(d)))
-      frontier = next
-    }
-    acc
+      (acc.unionByName(next.withColumn("depth", lit(r + 2))), next)
+    }._1._1
   }
 }

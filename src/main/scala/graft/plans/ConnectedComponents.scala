@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components via large-star / small-star
   * alternation (Kiveris et al., "Connected Components in MapReduce and
   * Beyond", SoCC'14 — public algorithm). Converges in O(log n) rounds on
-  * power-law graphs, each round two shuffles; lineage is truncated with
-  * localCheckpoint so the plan doesn't grow across iterations (the
+  * power-law graphs, each round two shuffles; lineage is truncated per
+  * round ([[Iter.mat]]) so the plan doesn't grow across iterations (the
   * classic iterative-join OOM at scale).
   *
   * Node ids are strings; the component representative is the MINIMUM
@@ -30,22 +30,16 @@ object ConnectedComponents {
   /** edges: DataFrame with two string columns (a, b). Returns
     * (node, component) covering every node that appears in any edge —
     * including nodes whose only edges are self-loops (each its own
-    * component). Lineage is truncated per round with `checkpoint` when
-    * the SparkContext has a checkpoint dir configured (the cluster
-    * story: survives executor loss, frees the driver of block
-    * ownership), falling back to `localCheckpoint` otherwise. */
-  /** `selfLoopFree = true`: the caller guarantees no row has a == b
+    * component). Throws IllegalStateException when `maxIter` rounds end
+    * before the edge set settles (the stars would not be components).
+    *
+    * `selfLoopFree = true`: the caller guarantees no row has a == b
     * (e.g. pair joins emitting a < b, or two-prefix bipartite edges);
     * skips the self-loop singleton pass, whose scan would re-execute
     * the caller's whole edge-producing subtree in the final plan. */
   def run(edges: DataFrame, maxIter: Int = 25,
           selfLoopFree: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
     val a = "a"; val b = "b"
-    val truncate: DataFrame => DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
-      else _.localCheckpoint(false)
-
     val input = edges.toDF(a, b)
     // normalize: drop self loops + dups, both directions not needed yet.
     // Iter.mat (checkpoint leaf) instead of a bare persist: callers
@@ -53,16 +47,17 @@ object ConnectedComponents {
     // pair join), and a persisted-but-untruncated plan makes every
     // round's analysis re-walk that subtree (measured on q_semdedup:
     // the CC stage dropped ~2-5 s once the input became a leaf).
-    var e = Iter.mat(input.where(col(a) =!= col(b))
+    val e0 = Iter.mat(input.where(col(a) =!= col(b))
       .select(col(a), col(b)).distinct())
-
-    var converged = false
-    var iter = 0
-    var prevSig = signature(e)
-    // the signature action just materialized e — its row count sizes
-    // the loop's shuffle width (no-op at production scale)
-    Iter.withLoopConf(spark, prevSig._1) {
-    while (!converged && iter < maxIter) {
+    // the order-insensitive edge-set signature (count, hash) detects
+    // convergence; its first action materializes e0, and its row count
+    // sizes the loop's shuffle width (no-op at production scale)
+    val sig0 = Iter.signature(e0)
+    val (e, _) = Iter.fixpoint(edges.sparkSession, sig0._1, e0)(
+      maxIter, Iter.Until.Unchanged(Iter.signature, Some(sig0)),
+      fail = Some(_ => new IllegalStateException(
+        s"ConnectedComponents did not converge in maxIter=$maxIter rounds; " +
+          "raise maxIter (rounds grow with log of the component diameter)"))) { (e, _) =>
       // ---- large-star: for each u, connect strictly-larger neighbors to
       // min(N(u) ∪ {u})
       val und = e.union(e.select(col(b).as(a), col(a).as(b)))
@@ -78,19 +73,11 @@ object ConnectedComponents {
       val oriented = large.select(greatest(col(a), col(b)).as(a), least(col(a), col(b)).as(b))
       val mins2 = oriented.groupBy(a).agg(least(min(col(b)), first(col(a))).as("m"))
       val joined = oriented.join(mins2, a)
-      val small = joined.select(col(b).as(a), col("m").as(b))
+      Iter.mat(joined.select(col(b).as(a), col("m").as(b))
         .union(joined.select(col(a), col("m").as(b)))
         .where(col(a) =!= col(b))
-        .distinct()
-
-      val next = truncate(small) // truncate lineage, materialize
-      val sig = signature(next)
-      converged = sig == prevSig
-      prevSig = sig
-      e = next
-      iter += 1
+        .distinct())
     }
-    } // Iter.withLoopConf
 
     // final state: star graphs node→min. Every edge (a,b) has b = component
     // of a; the representative itself appears only on the b side.
@@ -104,14 +91,5 @@ object ConnectedComponents {
     val selfOnly = input.where(col(a) === col(b)).select(col(a).as("node")).distinct()
       .join(connected.select("node"), Seq("node"), "left_anti")
     connected.union(selfOnly.select(col("node"), col("node").as("component")))
-  }
-
-  /** order-insensitive edge-set signature for convergence detection
-    * (bit_xor: commutative and overflow-free under ANSI mode) */
-  private def signature(e: DataFrame): (Long, Long) = {
-    val r = e.agg(
-      count(lit(1)).as("n"),
-      coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L)).as("h")).head()
-    (r.getLong(0), r.getLong(1))
   }
 }

@@ -26,8 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
-  private def mat(df: DataFrame): DataFrame = Iter.mat(df)
-
   /** @param edges (src, dst) directed; duplicates ignored.
     * @param iters full hub+authority rounds (contractual, oracle-unrolled).
     * @return (id, hub, auth) — each an integer in units of 1/scale of
@@ -35,10 +33,10 @@ object Hits {
     *         per-node floor loss). */
   def run(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters=$iters")
-    val e = mat(edges.toDF("src", "dst")
+    val e = Iter.mat(edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long")).distinct())
-    val eRows = e.count() // sizes the loop width + state broadcasts
-    val nodes = mat(e.select(col("src").as("id"))
+    val eRows = Iter.count(e) // sizes the loop width + state broadcasts
+    val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
     def normalized(raw: DataFrame, valueCol: String): DataFrame = {
@@ -53,19 +51,17 @@ object Hits {
           expr(s"CAST((coalesce(v, CAST(0 AS BIGINT)) * $scale) div _tot AS BIGINT)")
             .as(valueCol))
     }
-    Iter.withLoopConf(e.sparkSession, eRows, aqeOff = true) {
-    var hub = nodes.withColumn("hub", lit(scale)) // uniform start; the first
-    // normalization absorbs the arbitrary constant
-    var auth = nodes.withColumn("auth", lit(0L))
-    for (_ <- 1 to iters) {
-      val authRaw = e.join(bc(hub.select(col("id").as("src"), col("hub"))), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("v"))
-      auth = mat(normalized(authRaw, "auth"))
-      val hubRaw = e.join(bc(auth.select(col("id").as("dst"), col("auth"))), "dst")
-        .groupBy(col("src").as("id")).agg(sum(col("auth")).as("v"))
-      hub = mat(normalized(hubRaw, "hub"))
+    // uniform hub start; the first normalization absorbs the constant
+    val init = (nodes.withColumn("hub", lit(scale)), nodes.withColumn("auth", lit(0L)))
+    val ((hub, auth), _) = Iter.fixpoint(e.sparkSession, eRows, init)(iters, aqeOff = true) {
+      case ((hub, _), _) =>
+        val authRaw = e.join(bc(hub.select(col("id").as("src"), col("hub"))), "src")
+          .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("v"))
+        val auth = Iter.mat(normalized(authRaw, "auth"))
+        val hubRaw = e.join(bc(auth.select(col("id").as("dst"), col("auth"))), "dst")
+          .groupBy(col("src").as("id")).agg(sum(col("auth")).as("v"))
+        (Iter.mat(normalized(hubRaw, "hub")), auth)
     }
     hub.join(auth, "id")
-    }
   }
 }

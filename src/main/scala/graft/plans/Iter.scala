@@ -1,41 +1,56 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Loop-execution tuning for the iterative plan family (guide §1.2:
-  * fix the distributed shape first, then per-round fixed cost; §2.2:
-  * fewer/larger partitions; §2.4: remove needless exchanges).
+/** The round loop of the iterative plan family (CC / SCC / k-core /
+  * PageRank / BFS-style relaxations …): [[fixpoint]] runs every
+  * driver-synchronized loop, so truncation, round budget, change
+  * detection and the loop's session conf are decided in one place.
   *
-  * The iterative operators (CC / SCC / k-truss / Louvain / BFS family)
-  * run O(log n)..O(depth) driver-synchronized rounds. At production
-  * scale each round's shuffle dominates and the session defaults (AQE
-  * on, cluster-sized `spark.sql.shuffle.partitions`) are right. At the
-  * other end — a working set of a few thousand rows after the input
-  * aggregation — a round's compute is sub-millisecond but pays a fixed
-  * overhead per round:
+  * '''Steps are partition-invariant.''' Every operator in this family
+  * is partitioning-invariant by contract (partial-aggregable messages,
+  * deterministic tie-breaks; test-asserted per plan), so the shuffle
+  * width and AQE setting a loop runs under change only its per-round
+  * fixed cost, never a result.
   *
-  *  - with AQE on, every Exchange materializes as its own query-stage
-  *    JOB (a 2-join + 1-agg round is 4-6 scheduled jobs instead of 1);
-  *  - every exchange runs `spark.sql.shuffle.partitions` tasks no
-  *    matter how few rows flow through it (AQE coalescing fixes the
-  *    post-shuffle side only after paying the stage-split above).
+  * '''Loop conf scope.''' At production scale each round's shuffle
+  * dominates and the session defaults are right. On a working set of a
+  * few thousand rows a round's compute is sub-millisecond but pays a
+  * fixed overhead: with AQE on every Exchange materializes as its own
+  * query-stage job, and every exchange runs
+  * `spark.sql.shuffle.partitions` tasks however few rows flow through
+  * it. A fixpoint therefore sizes its shuffle width from the MEASURED
+  * row count of its materialized input (never from the core count):
+  * when `rows / RowsPerPartition` is below the current width it pins
+  * `spark.sql.shuffle.partitions` to that quotient (≥ 1), and with
+  * `aqeOff` also disables AQE, for the loop's rounds; a large working
+  * set (or [[SessionWidth]]) leaves the session conf alone. The scope
+  * is per session and reference-counted: loops that overlap on one
+  * session (nested or on other threads) each apply their own values on
+  * entry, an exiting loop re-applies those of the latest loop still
+  * running, and the last loop to exit restores the values the first
+  * one saved. The returned plans execute after the scope, under the
+  * session's own conf.
   *
-  * `withLoopConf` therefore sizes the loop's shuffle width from the
-  * MEASURED row count of the materialized loop input (never from the
-  * local core count — the production path is untouched): when
-  * `rows / rowsPerPartition` is below the session's shuffle width it
-  * pins `spark.sql.shuffle.partitions` to that quotient (≥ 1) and
-  * disables AQE for the loop's rounds — partitions are already exactly
-  * sized, so adaptive re-planning only costs stage-split jobs; when the
-  * working set is large the session conf is left completely alone.
-  * Confs are restored in a `finally`, so the caller's session (and the
-  * final returned plan, which executes after this scope) keeps the
-  * session-level configuration.
+  * '''Round budget.''' A fixpoint runs at most `maxRounds` rounds.
+  * [[Until.Budget]] loops run all of them (PageRank's iterations,
+  * Sssp's hop bound: the count is the contract). [[Until.Done]] and
+  * [[Until.Unchanged]] loops stop early once they settle; if the budget
+  * runs out first they stop quietly with the last state, or, when
+  * `fail` is given, throw the loop's own error (a cycle in TopoLayers,
+  * an unconverged CC or Mis).
   *
-  * Correctness: every operator in this family is partitioning-invariant
-  * by contract (partial-aggregable messages, deterministic tie-breaks —
-  * partition-invariance is test-asserted per plan), so shuffle width and
-  * AQE cannot change any result, only the per-round fixed cost.
+  * '''Change detection.''' [[Until.Unchanged]] runs one signature
+  * action per round and compares it with the one carried from the last
+  * round (the initial state's comes first, inside the scope, unless the
+  * caller already paid for it, e.g. with the count that sized the loop). A round that
+  * leaves the signature unchanged changed nothing, so the loop returns
+  * the state it carried (already materialized) and drops the round's.
+  *
+  * '''Truncation.''' Steps truncate their per-round frames with
+  * [[mat]], one policy for the family: a reliable `checkpoint` when the
+  * SparkContext has a checkpoint dir (survives executor loss), else a
+  * lazy `localCheckpoint` materialized by the round's own action.
   */
 object Iter {
 
@@ -43,6 +58,9 @@ object Iter {
     * that one task's state stays far under execution memory, large
     * enough that a sub-100k-row working set runs single-task. */
   val RowsPerPartition = 262144L
+
+  /** `rows` for a loop that keeps the session's shuffle width. */
+  val SessionWidth = Long.MaxValue
 
   /** Row bound under which a loop-state frame is explicitly broadcast
     * in per-round joins (narrow (id, long…) rows → ≤ ~tens of MB).
@@ -59,53 +77,150 @@ object Iter {
 
   /** Broadcast-hint `df` when the loop's measured working set is under
     * [[BroadcastRows]]; identity otherwise. */
-  def bcast(df: org.apache.spark.sql.DataFrame, rows: Long): org.apache.spark.sql.DataFrame =
+  def bcast(df: DataFrame, rows: Long): DataFrame =
     if (rows >= 0 && rows <= BroadcastRows) org.apache.spark.sql.functions.broadcast(df) else df
 
-  /** Per-round lineage truncation + fresh attribute ids, zero-copy:
-    * lazy localCheckpoint (materialized by the round's one change-
-    * detection action, in the same job) re-wrapped as a fresh leaf
-    * WITHOUT the InternalRow→Row→InternalRow encoder round-trip the
-    * old `createDataFrame(chk.rdd, chk.schema)` idiom paid on every
-    * subsequent scan (see [[org.apache.spark.sql.GraftLeaf]]). */
-  def mat(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.GraftLeaf.fresh(df.localCheckpoint(false))
+  /** Per-round lineage truncation + fresh attribute ids, zero-copy: a
+    * reliable eager `checkpoint` when a checkpoint dir is set, else a
+    * lazy `localCheckpoint` (materialized by the round's one change-
+    * detection action, in the same job), re-wrapped as a fresh leaf
+    * WITHOUT the InternalRow→Row→InternalRow encoder round-trip of the
+    * `createDataFrame(chk.rdd, chk.schema)` idiom (see
+    * [[org.apache.spark.sql.GraftLeaf]]). Fresh ids let a round
+    * self-join or union its own state. */
+  def mat(df: DataFrame): DataFrame = org.apache.spark.sql.GraftLeaf.fresh(
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(false))
 
-  /** Run `body` (the driver-synchronized round loop) with the shuffle
-    * width derived from `rows` (the materialized loop input's row
-    * count). No-op when the derived width would not shrink the
-    * session's — the production configuration always wins at scale. */
-  def withLoopConf[A](spark: SparkSession, rows: Long,
-                      rowsPerPartition: Long = RowsPerPartition,
-                      aqeOff: Boolean = false)(body: => A): A = {
-    val conf = spark.conf
-    val sessionParts =
-      try conf.get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => 200 }
-    val target = math.max(1L, (math.max(0L, rows) + rowsPerPartition - 1) / rowsPerPartition)
-    if (target >= sessionParts) body
-    else {
-      val prevParts = conf.getOption("spark.sql.shuffle.partitions")
-      val prevAqe = conf.getOption("spark.sql.adaptive.enabled")
-      try {
-        // AQE normally stays ON: its runtime size observation converts
-        // the loop's state⋈edges joins to broadcast (checkpointed RDD
-        // leaves carry no stats, so the static planner would pick
-        // sort-merge and pay two extra exchanges per join), and it
-        // materializes independent join-side stages concurrently.
-        // Measured on q_scc: AQE off + width 1 was 8.7 s vs 6.8 s
-        // baseline when the rounds relied on that conversion.
-        // `aqeOff` is for loops whose per-round joins ALL carry
-        // explicit size-gated broadcast hints (bcast): the static plan
-        // is then already the AQE plan, and each round's remaining AQE
-        // contribution is one scheduled query-stage job per exchange.
-        conf.set("spark.sql.shuffle.partitions", target.toString)
-        if (aqeOff) conf.set("spark.sql.adaptive.enabled", "false")
-        body
-      } finally {
-        prevParts.fold(conf.unset("spark.sql.shuffle.partitions"))(
-          v => conf.set("spark.sql.shuffle.partitions", v))
-        prevAqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
-          v => conf.set("spark.sql.adaptive.enabled", v))
+  /** Row count in ONE job: rows are counted as they stream, with no
+    * partial-aggregate exchange (which under AQE `Dataset.count`
+    * schedules as a job of its own). On a [[mat]] leaf it is the
+    * cheapest signature action, and it materializes the leaf. */
+  def count(df: DataFrame): Long = org.apache.spark.sql.GraftLeaf.rows(df).count()
+
+  /** Order-insensitive content signature in ONE job: (row count, xor of
+    * the rows' xxhash64). Xor is commutative and overflow-free, so the
+    * value is independent of partitioning and row order. */
+  def signature(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    org.apache.spark.sql.GraftLeaf.rows(df.select(xxhash64(df.columns.map(c => col(s"`$c`")): _*)))
+      .aggregate((0L, 0L))((a, r) => (a._1 + 1, a._2 ^ r.getLong(0)),
+        (x, y) => (x._1 + y._1, x._2 ^ y._2))
+  }
+
+  /** When a [[fixpoint]] stops before its round budget runs out. */
+  sealed trait Until[-S]
+  object Until {
+    /** Never early: the round count is the loop's contract. */
+    case object Budget extends Until[Any]
+    /** Settled once `done(state)` holds, tested before every round (the
+      * step already took the count it reads). */
+    final case class Done[S](done: S => Boolean) extends Until[S]
+    /** Settled after a round whose `signature` equals the carried one.
+      * The initial state's signature is `initial` when the caller has
+      * already paid for it, else the loop's first action. */
+    final case class Unchanged[S, A](signature: S => A, initial: Option[A] = None)
+      extends Until[S]
+  }
+
+  /** Run `step(state, round)` (round = 0, 1, …) from `init` until the
+    * loop settles per `until` or `maxRounds` rounds have run, inside the
+    * loop conf scope sized from `rows` (see the object doc). When the
+    * budget ends an unsettled [[Until.Done]]/[[Until.Unchanged]] loop,
+    * `fail` (if given) builds the exception to throw from the last
+    * state. Returns the final state and the number of rounds run. */
+  def fixpoint[S](spark: SparkSession, rows: Long, init: S)(
+      maxRounds: Int, until: Until[S] = Until.Budget, aqeOff: Boolean = false,
+      fail: Option[S => Throwable] = None)(step: (S, Int) => S): (S, Int) =
+    withLoopConf(spark, rows, aqeOff) {
+      var state = init
+      var rounds = 0
+      var sig: Any = until match {
+        case Until.Unchanged(signature, initial) => initial.getOrElse(signature(init))
+        case _ => ()
+      }
+      var settled = until match { case Until.Done(done) => done(state); case _ => false }
+      while (!settled && rounds < maxRounds) {
+        val next = step(state, rounds)
+        rounds += 1
+        until match {
+          case Until.Budget => state = next
+          case Until.Done(done) => state = next; settled = done(next)
+          case Until.Unchanged(signature, _) =>
+            val s = signature(next)
+            settled = s == sig
+            if (!settled) { state = next; sig = s }
+        }
+      }
+      if (!settled && until != Until.Budget) fail.foreach(f => throw f(state))
+      (state, rounds)
+    }
+
+  private val PartsKey = "spark.sql.shuffle.partitions"
+  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  /** One loop's pinned values. */
+  private final class Pin(val parts: Long, val aqeOff: Boolean)
+  /** A session's values before its first running loop, and the pins of
+    * its running loops in entry order. */
+  private final class Saved(val parts: Option[String], val aqe: Option[String]) {
+    val pins = scala.collection.mutable.ArrayBuffer.empty[Pin]
+  }
+  private val saved = new java.util.IdentityHashMap[SparkSession, Saved]()
+
+  private def restore(spark: SparkSession, key: String, v: Option[String]): Unit =
+    v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+  private def applyPin(spark: SparkSession, s: Saved, p: Pin): Unit = {
+    spark.conf.set(PartsKey, p.parts.toString)
+    if (p.aqeOff) spark.conf.set(AqeKey, "false") else restore(spark, AqeKey, s.aqe)
+  }
+
+  /** Run `body` with the shuffle width derived from `rows` (the
+    * materialized input's row count) and, with `aqeOff`, AQE disabled.
+    * No-op when the derived width would not shrink the current one (the
+    * session's, or an enclosing loop's) — the production configuration
+    * always wins at scale. Outside this object only SemDedup uses it,
+    * for its pair stage + CC.
+    *
+    * AQE normally stays ON: its runtime size observation converts a
+    * loop's state⋈edges joins to broadcast (checkpointed leaves carry
+    * no stats, so the static planner would pick sort-merge), and it
+    * materializes independent join sides concurrently (q_scc measured
+    * 8.7 s with AQE off + width 1 vs 6.8 s when the rounds relied on
+    * that). `aqeOff` is for loops whose per-round joins ALL carry
+    * [[bcast]] hints: the static plan is then already the AQE plan, and
+    * AQE would only add one scheduled query-stage job per exchange. */
+  private[graft] def withLoopConf[A](spark: SparkSession, rows: Long,
+                                     aqeOff: Boolean = false)(body: => A): A = {
+    val target = math.max(1L, (math.max(0L, rows) - 1) / RowsPerPartition + 1)
+    val pin = saved.synchronized {
+      val current = spark.conf.getOption(PartsKey).flatMap(_.toIntOption).getOrElse(200)
+      if (target >= current) None
+      else {
+        val s = saved.get(spark)
+        val cur = if (s != null) s else {
+          val fresh = new Saved(spark.conf.getOption(PartsKey), spark.conf.getOption(AqeKey))
+          saved.put(spark, fresh)
+          fresh
+        }
+        val p = new Pin(target, aqeOff)
+        cur.pins += p
+        applyPin(spark, cur, p)
+        Some(p)
+      }
+    }
+    try body
+    finally pin.foreach { p =>
+      saved.synchronized {
+        val s = saved.get(spark)
+        s.pins.remove(s.pins.indexWhere(_ eq p))
+        if (s.pins.nonEmpty) applyPin(spark, s, s.pins.last)
+        else {
+          restore(spark, PartsKey, s.parts)
+          restore(spark, AqeKey, s.aqe)
+          saved.remove(spark)
+        }
       }
     }
   }

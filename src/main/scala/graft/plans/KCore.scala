@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * (shuffles on the node key; hub nodes are exactly the ones that
   * SURVIVE peeling, so the skew-prone rows never concentrate — dropped
   * keys leave the computation entirely). Lineage is truncated per round
-  * with `checkpoint` when a checkpoint dir is configured (cluster),
-  * else `localCheckpoint` (tests) — the same toggle as
-  * [[ConnectedComponents]].
+  * ([[Iter.mat]]).
   *
   * Rounds needed to converge ≤ the graph's degeneracy ordering depth; in
   * practice O(10) for web-ish graphs. `run` stops early when a round
@@ -33,33 +31,20 @@ object KCore {
     * subgraph. */
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k=$k rounds=$rounds")
-    val spark = edges.sparkSession
-    val truncate: DataFrame => DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
-      else _.localCheckpoint(false)
-
     val input = edges.toDF("a", "b")
-    var e = input.where(col("a") =!= col("b"))
+    val e0 = Iter.mat(input.where(col("a") =!= col("b"))
       .select(col("a"), col("b"))
       .union(input.where(col("a") =!= col("b")).select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-    var i = 0
-    var done = false
-    var nEdges = -1L // lazily filled; avoids re-counting the un-checkpointed input
-    while (i < rounds && !done) {
-      val deg = e.groupBy("a").agg(count(lit(1)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select(col("a").as("kid"))
-      val next = truncate(
-        e.join(keep, col("a") === col("kid"), "left_semi")
-          .join(keep.withColumnRenamed("kid", "kid2"), col("b") === col("kid2"), "left_semi"))
-      // early exit at a fixpoint: remaining rounds are no-ops, so the
-      // result still equals the fully-unrolled oracle
-      if (nEdges < 0) nEdges = e.count()
-      val m = next.count()
-      done = m == nEdges
-      nEdges = m
-      e = next
-      i += 1
+      .distinct())
+    // early exit at a fixpoint (a round that deletes nothing): remaining
+    // rounds are no-ops, so the result still equals the fully-unrolled
+    // oracle
+    val (e, _) = Iter.fixpoint(edges.sparkSession, Iter.SessionWidth, e0)(
+      rounds, Iter.Until.Unchanged(Iter.count)) { (e, _) =>
+      val keep = e.groupBy("a").agg(count(lit(1)).as("deg"))
+        .where(col("deg") >= k).select(col("a").as("kid"))
+      Iter.mat(e.join(keep, col("a") === col("kid"), "left_semi")
+        .join(keep.withColumnRenamed("kid", "kid2"), col("b") === col("kid2"), "left_semi"))
     }
     e.groupBy("a").agg(count(lit(1)).as("deg"))
       .select(col("a").as("id"), col("deg"))

@@ -25,8 +25,7 @@ import org.apache.spark.sql.functions._
   * round drop together), so a fixed round count is SQL-oracle-able by
   * unrolling — same contract as [[KCore]]/[[LabelProp]]. Early exit at a
   * fixpoint is a no-op relative to the full unroll. Lineage is truncated
-  * per round (checkpoint on a cluster, localCheckpoint in tests) like
-  * the other iterative plans.
+  * per round ([[Iter.mat]]) like the other iterative plans.
   */
 object KTruss {
 
@@ -65,28 +64,18 @@ object KTruss {
     * (u, v, sup) with the support measured in the SURVIVING subgraph. */
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, s"k=$k rounds=$rounds")
-    val spark = edges.sparkSession
-    val truncate: DataFrame => DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
-      else _.localCheckpoint(false)
-
     val input = edges.toDF("a", "b")
-    var e = Iter.mat(input.where(col("a") =!= col("b"))
+    val e0 = Iter.mat(input.where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct())
-    var nEdges = e.count() // materialized input sizes the loop width
-    var i = 0
-    var done = false
-    Iter.withLoopConf(spark, nEdges) {
-    while (i < rounds && !done) {
+    val n0 = Iter.count(e0) // materialized input sizes the loop width
+    // state (edges, edge count): the count is the round's signature and
+    // gates the next round's broadcast
+    val ((e, _), _) = Iter.fixpoint(edges.sparkSession, n0, (e0, n0))(
+      rounds, Iter.Until.Unchanged((s: (DataFrame, Long)) => s._2)) { case ((e, n), _) =>
       val keepEdges = support(e).where(col("sup") >= k - 2).select(col("u"), col("v"))
-      val next = truncate(e.join(Iter.bcast(keepEdges, nEdges), Seq("u", "v"), "left_semi"))
-      val m = next.count()
-      done = m == nEdges
-      nEdges = m
-      e = next
-      i += 1
-    }
+      val next = Iter.mat(e.join(Iter.bcast(keepEdges, n), Seq("u", "v"), "left_semi"))
+      (next, Iter.count(next))
     }
     e.join(support(e), Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))

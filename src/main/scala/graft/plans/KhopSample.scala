@@ -41,9 +41,9 @@ object KhopSample {
   def sample(edges: DataFrame, seeds: DataFrame, fanouts: Seq[Int]): DataFrame = {
     require(fanouts.nonEmpty && fanouts.forall(_ >= 1), s"fanouts=$fanouts")
     val c = edges.columns
-    val e = edges.select(col(c(0)).cast("long").as("src"),
+    val e = Iter.mat(edges.select(col(c(0)).cast("long").as("src"),
         col(c(1)).cast("long").as("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint(false)
+      .where(col("src") =!= col("dst")).distinct())
     var frontier = seeds.toDF("id").select(col("id").cast("long").as("id")).distinct()
     var out: Option[DataFrame] = None
     fanouts.zipWithIndex.foreach { case (f, h) =>
@@ -53,7 +53,7 @@ object KhopSample {
         .select(lit(h.toLong).as("hop"), col("g").as("src"),
           col("id").as("dst"), col("rn"))
       out = Some(out.fold(top)(_ unionAll top))
-      frontier = top.select(col("dst").as("id")).distinct().localCheckpoint(false)
+      frontier = Iter.mat(top.select(col("dst").as("id")).distinct())
     }
     out.get
   }

@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   * agg, also partial-aggregable) — no windows, no driver state.
   * Hub-node fan-in lands on the (node,label) agg where map-side
   * combine absorbs it; AQE skew-split covers the join. Lineage is
-  * truncated per round (checkpoint when a checkpointDir is set, else
-  * localCheckpoint — same posture as ConnectedComponents).
+  * truncated per round ([[Iter.mat]]).
   */
 object LabelProp {
 
@@ -34,17 +33,12 @@ object LabelProp {
     *              emitted)
     * @return (id, label) after `rounds` synchronous updates */
   def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val truncate: DataFrame => DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
-      else _.localCheckpoint(false)
-    val und = truncate(edges.select(col("a"), col("b"))
+    val und = Iter.mat(edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .where(col("a") =!= col("b")).distinct())
-    val undRows = und.count() // sizes loop width + state broadcast
-    Iter.withLoopConf(spark, undRows, aqeOff = true) {
-    var labels = seeds.select(col("id"), col("label"))
-    for (_ <- 1 to rounds) {
+    val undRows = Iter.count(und) // sizes loop width + state broadcast
+    Iter.fixpoint(edges.sparkSession, undRows, seeds.select(col("id"), col("label")))(
+      rounds, aqeOff = true) { (labels, _) =>
       val neigh = und.join(Iter.bcast(labels, undRows), und("b") === labels("id"))
         .groupBy(und("a").as("nid"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -52,12 +46,8 @@ object LabelProp {
       val upd = neigh.groupBy("nid")
         .agg(max(struct(col("n"), negate(col("label")).as("nl"))).as("w"))
         .select(col("nid").as("id"), negate(col("w.nl")).as("label"))
-      labels = truncate(labels.as("l").join(Iter.bcast(upd.as("u"), undRows),
-          Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("u.label"), col("l.label")).as("label")))
-    }
-    labels
-    }
+      Iter.mat(labels.as("l").join(Iter.bcast(upd.as("u"), undRows), Seq("id"), "left")
+        .select(col("id"), coalesce(col("u.label"), col("l.label")).as("label")))
+    }._1
   }
 }

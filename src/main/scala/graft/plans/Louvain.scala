@@ -42,9 +42,9 @@ object Louvain {
     * @return (id, old_comm, new_comm, best_score, stay_score, moved) —
     *         scores in the 2m-scaled integer convention above. */
   def localMoveRound(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val canon = edges.toDF("a", "b").where(col("a") =!= col("b"))
+    val canon = Iter.mat(edges.toDF("a", "b").where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct().localCheckpoint(false)
+      .distinct())
     val comm = communities.toDF("id", "comm")
     val m = canon.count()
     // per-round state joins broadcast when the measured graph is tiny
@@ -117,7 +117,7 @@ object Louvain {
     * (i, c) partial agg, two |V| hash aggs, one min(struct) argmax —
     * no window, no candidate arrays. */
   def localMoveRoundWeighted(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val canon = canonWeighted(edges).localCheckpoint(false)
+    val canon = Iter.mat(canonWeighted(edges))
     val m = canon.agg(sum(col("w"))).first().getLong(0)
     moveRoundCanon(canon, m, communities)
   }
@@ -191,9 +191,9 @@ object Louvain {
     * moves nothing (or `maxRoundsPerLevel`), then coarsen and recurse
     * until a level ends with no moves (or `maxLevels`). Returns the
     * final (id, comm) over the ORIGINAL node ids. Driver loop holds
-    * only round counters; every per-round frame is localCheckpoint-ed
-    * so lineage stays flat across levels (same discipline as
-    * [[ConnectedComponents]]). Synchronous rounds can oscillate on
+    * only round counters; every per-round frame is truncated
+    * ([[Iter.mat]]) so lineage stays flat across levels (same
+    * discipline as [[ConnectedComponents]]). Synchronous rounds can oscillate on
     * symmetric graphs (standard caveat); the moved-count telemetry plus
     * round budget bound it, and any fixed point is a valid phase-1 end. */
   def cluster(edges: DataFrame, maxLevels: Int = 8,
@@ -214,23 +214,19 @@ object Louvain {
       // total weight and edge count are loop-invariant WITHIN a level —
       // hoisted out of the rounds (the round previously re-aggregated
       // canon and re-ran the m action every round)
-      val gRows = g.count()
+      val gRows = Iter.count(g)
       val mW = g.agg(sum(col("w"))).first().getLong(0)
-      var comm = Iter.mat(g.select(col("u").as("id")).unionAll(g.select(col("v").as("id")))
+      val comm0 = Iter.mat(g.select(col("u").as("id")).unionAll(g.select(col("v").as("id")))
         .distinct().select(col("id"), col("id").as("comm")))
-      var round = 0
-      var moved = 1L
-      var anyMove = false
-      Iter.withLoopConf(spark, gRows, aqeOff = true) {
-        while (round < maxRoundsPerLevel && moved > 0) {
+      // state: (assignment, nodes the last round moved, any round moved)
+      type Level = (DataFrame, Long, Boolean)
+      val ((comm, _, anyMove), _) = Iter.fixpoint(spark, gRows, (comm0, 1L, false): Level)(
+        maxRoundsPerLevel, Iter.Until.Done((l: Level) => l._2 == 0), aqeOff = true) {
+        case ((comm, _, anyMove), _) =>
           val r = Iter.mat(moveRoundCanon(g, mW, comm, 2 * gRows))
-          moved = r.where(col("moved")).count()
-          if (moved > 0) {
-            anyMove = true
-            comm = Iter.mat(r.select(col("id"), col("new_comm").as("comm")))
-          }
-          round += 1
-        }
+          val moved = Iter.count(r.where(col("moved")))
+          if (moved == 0) (comm, 0L, anyMove)
+          else (Iter.mat(r.select(col("id"), col("new_comm").as("comm"))), moved, true)
       }
       levelMoved = anyMove
       if (anyMove) {

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * min neighbor (pri, id) — partial-aggregable min(struct) per node, no
   * window, no arrays — plus two semi/anti-joins to retire winners and
   * their neighborhoods and one filter on the edge set. Active state
-  * only shrinks; lineage is flattened each round with localCheckpoint
-  * (the PageRank loop convention). Rounds are O(log n) w.h.p. — driver
+  * only shrinks; lineage is flattened each round ([[Iter.mat]], the
+  * PageRank loop convention). Rounds are O(log n) w.h.p. — driver
   * round scheduling is the same budgeted pattern as [[Scc]].
   */
 object Mis {
@@ -74,35 +74,31 @@ object Mis {
     * graph defeated the hash symmetry-breaking — practically never). */
   def run(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val c = edges.columns
-    var e = Iter.mat(edges.select(col(c(0)).cast("long").as("a"), col(c(1)).cast("long").as("b"))
+    val e0 = Iter.mat(edges.select(col(c(0)).cast("long").as("a"), col(c(1)).cast("long").as("b"))
       .where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct())
-    val eRows = e.count() // sizes loop width
+    val eRows = Iter.count(e0) // sizes loop width
     val all = Iter.mat(edges.select(col(c(0)).cast("long").as("id"))
       .unionAll(edges.select(col(c(1)).cast("long").as("id")))
       .distinct())
-    var active = all
-    var mis = active.sparkSession.emptyDataFrame.selectExpr("CAST(NULL AS LONG) AS id").limit(0)
-    var r = 0
-    var nActive = active.count()
-    Iter.withLoopConf(active.sparkSession, eRows) {
-    while (nActive > 0) {
-      require(r < maxRounds,
-        s"Mis.run: $nActive nodes still active after $maxRounds rounds — " +
+    val mis0 = all.sparkSession.emptyDataFrame.selectExpr("CAST(NULL AS LONG) AS id").limit(0)
+    // state: (active edges, active nodes, active count, MIS so far)
+    val ((_, _, _, mis), _) = Iter.fixpoint(all.sparkSession, eRows, (e0, all, Iter.count(all), mis0))(
+      maxRounds, Iter.Until.Done((s: (DataFrame, DataFrame, Long, DataFrame)) => s._3 == 0),
+      fail = Some(s => new IllegalArgumentException(
+        s"Mis.run: ${s._3} nodes still active after $maxRounds rounds — " +
           "the hash symmetry-breaking failed to converge; raise maxRounds " +
-          "or inspect the graph for pathological structure")
-      val st = round(e.select(col("u"), col("v")), active, r).localCheckpoint(false)
-      mis = mis.unionAll(st.where(col("status") === "mis").select(col("id")))
-        .localCheckpoint(false)
-      active = st.where(col("status") === "active").select(col("id")).localCheckpoint(false)
-      e = e.join(active.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(active.select(col("id").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(false)
-      nActive = active.count()
-      r += 1
+          "or inspect the graph for pathological structure"))) {
+      case ((e, active, _, mis), r) =>
+        val st = Iter.mat(round(e.select(col("u"), col("v")), active, r))
+        val next = Iter.mat(st.where(col("status") === "active").select(col("id")))
+        (Iter.mat(e.join(next.select(col("id").as("u")), Seq("u"), "left_semi")
+            .join(next.select(col("id").as("v")), Seq("v"), "left_semi")
+            .select(col("u"), col("v"))),
+          next, Iter.count(next),
+          Iter.mat(mis.unionAll(st.where(col("status") === "mis").select(col("id")))))
     }
-    } // Iter.withLoopConf
     all.join(mis.withColumn("in_mis", lit(true)), Seq("id"), "left")
       .select(col("id"), coalesce(col("in_mis"), lit(false)).as("in_mis"))
   }

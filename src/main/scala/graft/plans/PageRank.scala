@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PageRank in fixed-point (scaled-integer) arithmetic — entity
@@ -30,28 +30,35 @@ object PageRank {
   def run(spark: SparkSession, edges: DataFrame, iters: Int,
           scale: Long = 1000000000000L): DataFrame = {
     val e = Iter.mat(edges.select(col("src"), col("dst")).distinct())
-    val eRows = e.count() // sizes loop width + state broadcasts
+    val eRows = Iter.count(e) // sizes loop width + state broadcasts
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    val n = nodes.count()
+    val n = Iter.count(nodes)
     // degree table is loop-invariant: materialize once instead of
     // re-aggregating it from e inside every iteration's plan
     val deg = Iter.mat(e.groupBy("src").agg(count(lit(1)).as("deg")))
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
     val base = (scale * 15L) / (100L * n)
-    Iter.withLoopConf(spark, eRows, aqeOff = true) {
-    var rank = nodes.withColumn("r", lit(scale / n))
-    for (_ <- 1 to iters) {
+    iterate(e, eRows, deg, "r div deg", nodes, lit(base),
+      nodes.withColumn("r", lit(scale / n)), iters)
+  }
+
+  /** `iters` rounds of rank ← teleport + 85% of the contributions
+    * `contribution` (an expression over r and the degree table's
+    * column) sent along e; `targets` (id, …) is every node's row, kept
+    * through the round. State broadcasts are gated on 2·|E|. */
+  private def iterate(e: DataFrame, eRows: Long, deg: DataFrame, contribution: String,
+                      targets: DataFrame, teleport: Column, init: DataFrame,
+                      iters: Int): DataFrame = {
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
+    Iter.fixpoint(e.sparkSession, eRows, init)(iters, aqeOff = true) { (rank, _) =>
       val contrib = e.join(bc(rank), e("src") === rank("id"))
         .join(bc(deg), "src")
-        .select(col("dst").as("id"), expr("r div deg").as("c"))
+        .select(col("dst").as("id"), expr(contribution).as("c"))
         .groupBy("id").agg(sum(col("c")).as("sc"))
-      rank = Iter.mat(nodes.join(bc(contrib), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("r")))
-    }
-    rank.select(col("id"), col("r").as("rank_scaled"))
-    }
+      Iter.mat(targets.join(bc(contrib), Seq("id"), "left")
+        .select(targets.columns.map(col).toSeq :+
+          (teleport + expr("(85 * coalesce(sc, 0L)) div 100")).as("r"): _*))
+    }._1.select(col("id"), col("r").as("rank_scaled"))
   }
 
   /** Edge-weighted PageRank: per-edge contribution is proportional to
@@ -74,26 +81,14 @@ object PageRank {
     val e = Iter.mat(edges.select(col(c(0)).as("src"), col(c(1)).as("dst"),
         col(c(2)).cast("long").as("w"))
       .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    val eRows = e.count()
+    val eRows = Iter.count(e)
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    val n = nodes.count()
+    val n = Iter.count(nodes)
     val deg = Iter.mat(e.groupBy("src").agg(sum(col("w")).as("wdeg")))
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
     val base = (scale * 15L) / (100L * n)
-    Iter.withLoopConf(spark, eRows, aqeOff = true) {
-    var rank = nodes.withColumn("r", lit(scale / n))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(bc(rank), e("src") === rank("id"))
-        .join(bc(deg), "src")
-        .select(col("dst").as("id"), expr("(r * w) div wdeg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("sc"))
-      rank = Iter.mat(nodes.join(bc(contrib), Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("r")))
-    }
-    rank.select(col("id"), col("r").as("rank_scaled"))
-    }
+    iterate(e, eRows, deg, "(r * w) div wdeg", nodes, lit(base),
+      nodes.withColumn("r", lit(scale / n)), iters)
   }
 
   /** Personalized PageRank (random walk with restart): the teleport
@@ -110,32 +105,20 @@ object PageRank {
   def personalized(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                    iters: Int, scale: Long = 1000000000000L): DataFrame = {
     val e = Iter.mat(edges.select(col("src"), col("dst")).distinct())
-    val eRows = e.count()
+    val eRows = Iter.count(e)
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     val seed = Iter.mat(seeds.select(col("id")).distinct()
       .join(nodes, Seq("id"), "left_semi"))
-    val ns = seed.count()
+    val ns = Iter.count(seed)
     require(ns > 0, "personalized PageRank needs at least one seed present in the graph")
     val flagged = Iter.mat(nodes
       .join(broadcast(seed.withColumn("is_seed", lit(1L))), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
     val deg = Iter.mat(e.groupBy("src").agg(count(lit(1)).as("deg")))
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
     val base = (scale * 15L) / (100L * ns)
-    Iter.withLoopConf(spark, eRows, aqeOff = true) {
-    var rank = flagged.select(col("id"), col("is_seed"),
-      (col("is_seed") * lit(scale / ns)).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(bc(rank), e("src") === rank("id"))
-        .join(bc(deg), "src")
-        .select(col("dst").as("id"), expr("r div deg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("sc"))
-      rank = Iter.mat(flagged.join(bc(contrib), Seq("id"), "left")
-        .select(col("id"), col("is_seed"),
-          (col("is_seed") * lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("r")))
-    }
-    rank.select(col("id"), col("r").as("rank_scaled"))
-    }
+    iterate(e, eRows, deg, "r div deg", flagged, col("is_seed") * lit(base),
+      flagged.select(col("id"), col("is_seed"), (col("is_seed") * lit(scale / ns)).as("r")),
+      iters)
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *  - walk state is (nWalks · |nodes|) rows, CONSTANT across rounds;
   *    each round is ONE left equi-join (state.cur ⋈ adjacency) + column
   *    ops — no shuffle growth, no explosion;
-  *  - lineage is truncated by localCheckpoint every few rounds (the
+  *  - lineage is truncated ([[Iter.mat]]) every few rounds (the
   *    PageRank loop convention).
   * Dead ends (no out-edges) freeze the walk: `steps` records how many
   * transitions actually happened, matching DeepWalk's truncation.
@@ -59,9 +59,8 @@ object RandomWalk {
       e.withColumn("hv", hash52(concat_ws(":", col("src"), col("dst")))),
       col("src"), col("hv"), col("dst"), maxDegree)
       .select(col("g").as("src"), col("id").as("dst"))
-    val adj = sampled.groupBy("src")
-      .agg(array_sort(collect_list(col("dst"))).as("nbrs"))
-      .localCheckpoint(false)
+    val adj = Iter.mat(sampled.groupBy("src")
+      .agg(array_sort(collect_list(col("dst"))).as("nbrs")))
     var state = adj
       .select(col("src").as("start"),
         explode(sequence(lit(0), lit(nWalks - 1))).as("w"))
@@ -80,7 +79,7 @@ object RandomWalk {
           .otherwise(concat(col("path"), lit("|"), nxt.cast("string"))).as("path"),
         when(stuck, col("steps")).otherwise(col("steps") + 1).as("steps"),
         stuck.as("done"))
-      if (s % 4 == 0 && s < len) state = state.localCheckpoint(false)
+      if (s % 4 == 0 && s < len) state = Iter.mat(state)
     }
     state.select("walk_id", "start", "steps", "path")
   }

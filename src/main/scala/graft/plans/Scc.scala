@@ -59,9 +59,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * hop-per-round loops (equality-tested).
   *
   * Determinism: every fixpoint runs to convergence, so the output is
-  * independent of round scheduling — exact, not approximate. Lineage
-  * is truncated per round (localCheckpoint / checkpoint toggle, same
-  * as [[ConnectedComponents]]).
+  * independent of round scheduling — exact, not approximate. Every
+  * loop (phases, trim, both colorings) is an [[Iter.fixpoint]] and
+  * truncates its per-round frames with [[Iter.mat]].
   *
   * Scale: nodes/edges only ever shrink; all joins are equi-joins on
   * node ids; colors and members are (id, long) pairs — 16 bytes/node.
@@ -69,10 +69,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * DuckDB oracle uses is fine at test scale only).
   */
 object Scc {
-
-  /** Fresh-leaf materialization (same rationale as [[Closure.materialize]]:
-    * repeated self-referential unions need fresh attribute ids). */
-  private def mat(df: DataFrame): DataFrame = Iter.mat(df)
 
   /** Per-phase telemetry: inner-round counts of the three fixpoints
     * plus how many nodes the phase disposed of. With the default
@@ -114,21 +110,17 @@ object Scc {
     * fixpoint regardless of far movement). Returns the fixpoint table
     * (id, color) and the round count. */
   private def propagateMax(edges: DataFrame, init: DataFrame, from: String, to: String,
-                           jump: Boolean, spend: () => Unit,
-                           stateRows: Long = Long.MaxValue): (DataFrame, Int) = {
+                           jump: Boolean, rounds: Budget, kind: String, phase: Int,
+                           stateRows: Long): (DataFrame, Int) = {
     // bc: broadcast-hint the (id, long, long) state side of each
     // per-round join when the measured working set is tiny (Iter.bcast
     // gate) — the edge side then streams from cache with NO exchange
     // and no AQE stage-materialization jobs (measured on the q_scc
     // fixture: ~11 scheduled jobs per round → ~4)
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, stateRows)
-    var st = mat(init.toDF("id", "color").withColumn("far", col("id")))
     def tot(c: DataFrame): Long = c.agg(sum(col("color"))).head.getLong(0)
-    var prev = tot(st)
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      spend(); rounds += 1
+    val st0 = Iter.mat(init.toDF("id", "color").withColumn("far", col("id")))
+    val (st, n) = rounds.loop(kind, phase, st0, Iter.Until.Unchanged(tot)) { (st, _) =>
       // one edge pass: per-node max in-color + a deterministic
       // in-neighbor (the far seed for self-pointing nodes)
       val msgs = edges
@@ -138,7 +130,7 @@ object Scc {
         .groupBy("id")
         .agg(max("mcolor").as("in_color"), max("nb").as("in_far"))
       val relaxed = st.join(bc(msgs), Seq("id"), "left_outer")
-      val next =
+      Iter.mat(
         if (jump) {
           // fetch far(v)'s row: its color joins the max, its far becomes
           // far(far(v)). far always names an id in the table (it is an
@@ -157,14 +149,31 @@ object Scc {
           relaxed.select(col("id"),
             greatest(col("color"), coalesce(col("in_color"), col("color"))).as("color"),
             col("far"))
-        }
-      val nm = mat(next)
-      val s = tot(nm)
-      changed = s != prev
-      prev = s
-      st = nm
+        })
     }
-    (st.select(col("id"), col("color")), rounds)
+    (st.select(col("id"), col("color")), n)
+  }
+
+  /** The inner fixpoints (trim + color + harvest) of one [[run]], all
+    * charged to its shared `maxRounds` budget and run in the loop
+    * scope sized from the edge count. */
+  private final class Budget(spark: org.apache.spark.sql.SparkSession, eRows: Long,
+                             maxRounds: Int) {
+    private var used = 0
+    def loop[S](kind: String, phase: Int, init: S, until: Iter.Until[S])(
+        step: (S, Int) => S): (S, Int) = {
+      val (s, n) = Iter.fixpoint(spark, eRows, init)(maxRounds - used, until, aqeOff = true,
+        fail = Some(_ => new IllegalStateException(
+          s"Scc exceeded maxRounds=$maxRounds during $kind (phase $phase). " +
+            "Rounds grow with log(diameter) under the default pointer jumping " +
+            "(linearly with pointerJump=false). Either raise maxRounds (the state " +
+            "per round is bounded — only wall-clock grows), or pre-partition the " +
+            "graph by weak component (ConnectedComponents.run) and SCC each " +
+            "component separately: SCCs never span weak components, and " +
+            "per-component diameters are smaller.")))(step)
+      used += n
+      (s, n)
+    }
   }
 
   /** @param edges two columns (src, dst), one row per directed edge.
@@ -186,141 +195,118 @@ object Scc {
           pointerJump: Boolean = true): DataFrame = {
     require(maxPhases >= 1, s"maxPhases=$maxPhases")
     require(maxRounds >= 1, s"maxRounds=$maxRounds")
-    var roundsUsed = 0
-    def spendRound(kind: String, phase: Int): Unit = {
-      roundsUsed += 1
-      if (roundsUsed > maxRounds) throw new IllegalStateException(
-        s"Scc exceeded maxRounds=$maxRounds during $kind (phase $phase). " +
-          "Rounds grow with log(diameter) under the default pointer jumping " +
-          "(linearly with pointerJump=false). Either raise maxRounds (the state " +
-          "per round is bounded — only wall-clock grows), or pre-partition the " +
-          "graph by weak component (ConnectedComponents.run) and SCC each " +
-          "component separately: SCCs never span weak components, and " +
-          "per-component diameters are smaller.")
-    }
     val spark = edges.sparkSession
     val sch = StructType(Seq(StructField("id", LongType), StructField("scc_id", LongType)))
-    var assigned = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
 
     // stage the raw edge list ONCE (the caller's plan may be an
     // expensive aggregation — previously it was recomputed for e and
     // twice more for allNodes; guide §2.4: don't recompute what one
     // materialized pass provides)
-    val raw = mat(edges.toDF("src", "dst")
+    val raw = Iter.mat(edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long")))
-    var e = mat(raw.where(col("src") =!= col("dst")).distinct())
+    val simple = Iter.mat(raw.where(col("src") =!= col("dst")).distinct())
     // self-loop-only nodes are singletons; track every node seen so they
     // (and isolated endpoints of dropped self-loops) still get a row
-    val allNodes = mat(raw.select(col("src").as("id"))
+    val allNodes = Iter.mat(raw.select(col("src").as("id"))
       .union(raw.select(col("dst").as("id")))
       .distinct())
-    var active = allNodes
-    var activeN = allNodes.count()
+    val n0 = Iter.count(allNodes)
     // materialized working-set size drives the loop shuffle width
-    // (Iter.withLoopConf: session conf untouched at production scale)
-    // and gates the per-round broadcast hints (nodes ≤ 2·edges)
-    val eRows = e.count()
+    // (session conf untouched at production scale) and gates the
+    // per-round broadcast hints (nodes ≤ 2·edges)
+    val eRows = Iter.count(simple)
     val nodeBound = if (eRows > Long.MaxValue / 2) Long.MaxValue else 2 * eRows
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, nodeBound)
+    val rounds = new Budget(spark, eRows, maxRounds)
 
+    // phase state: (edges, active nodes, active count, assigned so far);
     // every per-round join below is explicitly broadcast-hinted when
-    // tiny, so the loop opts out of AQE's per-stage scheduling
-    Iter.withLoopConf(spark, eRows, aqeOff = true) {
-    var phase = 0
-    while (activeN > 0 && phase < maxPhases) {
-      var trimRounds = 0
-      var colorRounds = 0
-      var harvestRounds = 0
-      var assignedThisPhase = 0L
-      // ---- 1. TRIM to fixpoint: no-in or no-out ⇒ singleton SCC
-      var trimming = true
-      while (trimming) {
-        spendRound("trim", phase)
-        trimRounds += 1
-        // nodes with BOTH an in- and an out-edge, in ONE partial-
-        // aggregable pass over e (guide §2.3/§2.4: the previous
-        // srcs ∩ dsts paid two distincts plus an intersect — three
-        // shuffle trees — for the same set; measured 4→2 Spark jobs and
-        // roughly half the wall per trim round at bench scale)
-        val cyclic = mat(
-          e.select(col("src").as("id"), lit(1).as("o"), lit(0).as("i"))
-            .unionAll(e.select(col("dst").as("id"), lit(0).as("o"), lit(1).as("i")))
-            .groupBy("id").agg(max(col("o")).as("o"), max(col("i")).as("i"))
-            .where(col("o") === 1 && col("i") === 1)
-            .select(col("id")))
-        // one action per trim round: count the SURVIVORS (materializes
-        // the mat above); the trimmed count is the active-count delta —
-        // the old per-round trimmed.count() join-action is gone, and the
-        // left_anti below stays lazy until the per-phase mat(assigned)
-        val cyclicN = cyclic.count()
-        val nTrim = activeN - cyclicN
-        trimming = nTrim > 0
-        if (nTrim > 0) {
-          val trimmed = active.join(bc(cyclic), Seq("id"), "left_anti")
-          assigned = assigned.union(trimmed.select(col("id"), col("id").as("scc_id")))
-          assignedThisPhase += nTrim
-          active = cyclic
-          activeN = cyclicN
-          // e's endpoints are ⊆ active throughout, so dropping trimmed
-          // endpoints ≡ keeping edges with both endpoints cyclic (two
-          // semi-joins against the smaller surviving side)
-          e = mat(e
-            .join(bc(cyclic.withColumnRenamed("id", "src")), Seq("src"), "left_semi")
-            .join(bc(cyclic.withColumnRenamed("id", "dst")), Seq("dst"), "left_semi"))
+    // tiny, so the loops opt out of AQE's per-stage scheduling
+    type Phase = (DataFrame, DataFrame, Long, DataFrame)
+    val init: Phase = (simple, allNodes, n0, spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch))
+    Iter.fixpoint(spark, eRows, init)(
+      maxPhases, Iter.Until.Done((p: Phase) => p._3 == 0), aqeOff = true,
+      fail = Some(_ => new IllegalArgumentException(
+        s"Scc did not converge in $maxPhases phases — raise maxPhases"))) {
+      case ((e0, active0, activeN0, assigned0), phase) =>
+        // ---- 1. TRIM to fixpoint: no-in or no-out ⇒ singleton SCC
+        val ((e1, active1, activeN1, assigned1), trimRounds) = rounds.loop(
+          "trim", phase, (e0, active0, activeN0, assigned0),
+          Iter.Until.Unchanged((t: Phase) => t._3)) {
+          case ((e, active, activeN, assigned), _) =>
+            // nodes with BOTH an in- and an out-edge, in ONE partial-
+            // aggregable pass over e (guide §2.3/§2.4: the previous
+            // srcs ∩ dsts paid two distincts plus an intersect — three
+            // shuffle trees — for the same set; measured 4→2 Spark jobs
+            // and roughly half the wall per trim round at bench scale)
+            val cyclic = Iter.mat(
+              e.select(col("src").as("id"), lit(1).as("o"), lit(0).as("i"))
+                .unionAll(e.select(col("dst").as("id"), lit(0).as("o"), lit(1).as("i")))
+                .groupBy("id").agg(max(col("o")).as("o"), max(col("i")).as("i"))
+                .where(col("o") === 1 && col("i") === 1)
+                .select(col("id")))
+            // one action per trim round: count the SURVIVORS (materializes
+            // the mat above) — the round's signature; an unchanged count
+            // keeps the state, else the trimmed set stays lazy until the
+            // per-phase Iter.mat(assigned)
+            val cyclicN = Iter.count(cyclic)
+            if (cyclicN == activeN) (e, active, activeN, assigned)
+            else {
+              val trimmed = active.join(bc(cyclic), Seq("id"), "left_anti")
+              // e's endpoints are ⊆ active throughout, so dropping
+              // trimmed endpoints ≡ keeping edges with both endpoints
+              // cyclic (two semi-joins against the smaller surviving side)
+              (Iter.mat(e
+                  .join(bc(cyclic.withColumnRenamed("id", "src")), Seq("src"), "left_semi")
+                  .join(bc(cyclic.withColumnRenamed("id", "dst")), Seq("dst"), "left_semi")),
+                cyclic, cyclicN, assigned.union(trimmed.select(col("id"), col("id").as("scc_id"))))
+            }
         }
-      }
 
-      if (activeN > 0) {
-        // ---- 2. COLOR: forward max propagation to fixpoint (Σcolor
-        // strictly increases until the fixpoint, so change detection
-        // is a one-row aggregate; sums of ≤2^31 ids fit a long far
-        // beyond any realistic node count)
-        val (color, cr) = propagateMax(
-          e, active.select(col("id"), col("id").as("color")),
-          "src", "dst", pointerJump, () => spendRound("color", phase), nodeBound)
-        colorRounds = cr
+        val (e2, active2, activeN2, assigned2, colorRounds, harvestRounds) =
+          if (activeN1 == 0) (e1, active1, activeN1, assigned1, 0, 0)
+          else {
+            // ---- 2. COLOR: forward max propagation to fixpoint (Σcolor
+            // strictly increases until the fixpoint, so change detection
+            // is a one-row aggregate; sums of ≤2^31 ids fit a long far
+            // beyond any realistic node count)
+            val (color, cr) = propagateMax(
+              e1, active1.select(col("id"), col("id").as("color")),
+              "src", "dst", pointerJump, rounds, "color", phase, nodeBound)
 
-        // ---- 3. HARVEST: backward max propagation restricted to
-        // same-color edges — back(v) = max same-class id reachable
-        // from v through class nodes; v ∈ SCC(root) iff back(v) ==
-        // color(v) (the root IS the class max, see object doc)
-        val ec = mat(e
-          .join(bc(color.select(col("id").as("csid"), col("color").as("csc"))),
-            col("src") === col("csid"))
-          .join(bc(color.select(col("id").as("cdid"), col("color").as("cdc"))),
-            col("dst") === col("cdid"))
-          .where(col("csc") === col("cdc"))
-          .select(col("src"), col("dst")))
-        val (back, hr) = propagateMax(
-          ec, color.select(col("id"), col("id").as("color")),
-          "dst", "src", pointerJump, () => spendRound("harvest", phase), nodeBound)
-        harvestRounds = hr
-        val members = mat(back.withColumnRenamed("color", "back")
-          .join(bc(color.withColumnRenamed("id", "ci")), col("id") === col("ci"))
-          .where(col("back") === col("color"))
-          .select(col("id"), col("color").as("scc_id")))
-        val nMembers = members.count()
-
-        // ---- 4. assign + shrink
-        assigned = assigned.union(members)
-        assignedThisPhase += nMembers
-        active = mat(active.join(bc(members), Seq("id"), "left_anti"))
-        activeN = active.count()
-        e = mat(e
-          .join(bc(members.withColumnRenamed("id", "m1")), col("src") === col("m1"), "left_anti")
-          .join(bc(members.withColumnRenamed("id", "m2")), col("dst") === col("m2"), "left_anti"))
-      }
-      // truncate the accumulated-union lineage once per phase — plain
-      // unions across ~100-round phases otherwise grow the plan tree
-      // with phase count (slow analysis / driver stack risk)
-      assigned = mat(assigned)
-      phase += 1
-      telemetry(PhaseStats(phase, trimRounds, colorRounds, harvestRounds, assignedThisPhase))
-    }
-    require(activeN == 0,
-      s"Scc did not converge in $maxPhases phases — raise maxPhases")
-    } // Iter.withLoopConf
-    assigned
+            // ---- 3. HARVEST: backward max propagation restricted to
+            // same-color edges — back(v) = max same-class id reachable
+            // from v through class nodes; v ∈ SCC(root) iff back(v) ==
+            // color(v) (the root IS the class max, see object doc)
+            val ec = Iter.mat(e1
+              .join(bc(color.select(col("id").as("csid"), col("color").as("csc"))),
+                col("src") === col("csid"))
+              .join(bc(color.select(col("id").as("cdid"), col("color").as("cdc"))),
+                col("dst") === col("cdid"))
+              .where(col("csc") === col("cdc"))
+              .select(col("src"), col("dst")))
+            val (back, hr) = propagateMax(
+              ec, color.select(col("id"), col("id").as("color")),
+              "dst", "src", pointerJump, rounds, "harvest", phase, nodeBound)
+            val members = Iter.mat(back.withColumnRenamed("color", "back")
+              .join(bc(color.withColumnRenamed("id", "ci")), col("id") === col("ci"))
+              .where(col("back") === col("color"))
+              .select(col("id"), col("color").as("scc_id")))
+            // ---- 4. assign + shrink
+            val active = Iter.mat(active1.join(bc(members), Seq("id"), "left_anti"))
+            (Iter.mat(e1
+              .join(bc(members.withColumnRenamed("id", "m1")), col("src") === col("m1"), "left_anti")
+              .join(bc(members.withColumnRenamed("id", "m2")), col("dst") === col("m2"), "left_anti")),
+              active, Iter.count(active), assigned1.union(members), cr, hr)
+          }
+        // truncate the accumulated-union lineage once per phase — plain
+        // unions across ~100-round phases otherwise grow the plan tree
+        // with phase count (slow analysis / driver stack risk)
+        val assigned = Iter.mat(assigned2)
+        telemetry(PhaseStats(phase + 1, trimRounds, colorRounds, harvestRounds,
+          activeN0 - activeN2))
+        (e2, active2, activeN2, assigned)
+    }._1._4
   }
 
   /** Graph condensation: collapse every SCC to one node (its scc_id)

@@ -25,21 +25,17 @@ object Sssp {
     *         `source` (the source itself at dist 0) */
   def run(edges: DataFrame, source: Long, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 256, s"rounds=$rounds")
-    val spark = edges.sparkSession
     val e = Iter.mat(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .groupBy("src", "dst").agg(min("w").as("w"))) // parallel edges: keep cheapest
-    val eRows = e.count() // sizes loop width + state broadcast
+    val eRows = Iter.count(e) // sizes loop width + state broadcast
+    val spark = edges.sparkSession
     import spark.implicits._
-    Iter.withLoopConf(spark, eRows, aqeOff = true) {
-    var dist = Iter.mat(Seq((source, 0L)).toDF("id", "dist"))
-    (1 to rounds).foreach { _ =>
+    Iter.fixpoint(spark, eRows, Iter.mat(Seq((source, 0L)).toDF("id", "dist")))(
+      rounds, aqeOff = true) { (dist, _) =>
       val relaxed = e.join(Iter.bcast(dist, 2 * eRows), e("src") === dist("id"))
         .select(e("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = Iter.mat(dist.union(relaxed)
-        .groupBy("id").agg(min("dist").as("dist")))
-    }
-    dist
-    }
+      Iter.mat(dist.union(relaxed).groupBy("id").agg(min("dist").as("dist")))
+    }._1
   }
 }

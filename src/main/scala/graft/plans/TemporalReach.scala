@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object TemporalReach {
 
-  private def mat(df: DataFrame): DataFrame = Iter.mat(df)
-
   /** @param edges (src, dst, ts) directed temporal edges.
     * @param seeds  (id) seed nodes; arrival 0 (may take any edge).
     * @param maxHops rounds of relaxation (contractual hop budget).
@@ -39,35 +37,29 @@ object TemporalReach {
     *         Seeds appear with arrival 0. */
   def run(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops=$maxHops")
-    val e = mat(edges.toDF("src", "dst", "ts")
+    val e = Iter.mat(edges.toDF("src", "dst", "ts")
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("ts").cast("long"))
       .distinct())
-    val eRows = e.count() // sizes loop width + state broadcast
-    Iter.withLoopConf(e.sparkSession, eRows, aqeOff = true) {
-    var st = mat(seeds.toDF("id").select(col("id").cast("long")).distinct()
+    val eRows = Iter.count(e) // sizes loop width + state broadcast
+    // min-monotone: Σ(count, sum) unchanged ⇔ fixpoint
+    def sig(st: DataFrame): (Long, Long) = {
+      val r = st.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L))).head
+      (r.getLong(0), r.getLong(1))
+    }
+    val st0 = Iter.mat(seeds.toDF("id").select(col("id").cast("long")).distinct()
       .withColumn("arrival", lit(0L)))
-    var hops = 0
-    var changed = true
-    while (changed && hops < maxHops) {
-      hops += 1
+    Iter.fixpoint(e.sparkSession, eRows, st0)(
+      maxHops, Iter.Until.Unchanged(sig), aqeOff = true) { (st, _) =>
       val msgs = e.join(
           Iter.bcast(st.select(col("id").as("src"), col("arrival")), 2 * eRows), "src")
         .where(col("ts") >= col("arrival"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("ts")).as("in_arrival"))
-      val next = st.join(msgs, Seq("id"), "full_outer")
+      Iter.mat(st.join(msgs, Seq("id"), "full_outer")
         .select(col("id"),
           least(coalesce(col("arrival"), col("in_arrival")),
-            coalesce(col("in_arrival"), col("arrival"))).as("arrival"))
-      val nm = mat(next)
-      // min-monotone: Σ(count, sum) unchanged ⇔ fixpoint
-      val agg = nm.agg(count(lit(1)), sum(col("arrival"))).head
-      val prev = st.agg(count(lit(1)), sum(col("arrival"))).head
-      changed = agg.getLong(0) != prev.getLong(0) || agg.getLong(1) != prev.getLong(1)
-      st = nm
-    }
-    st
-    }
+            coalesce(col("in_arrival"), col("arrival"))).as("arrival")))
+    }._1
   }
 }

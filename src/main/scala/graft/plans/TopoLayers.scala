@@ -28,8 +28,6 @@ import org.apache.spark.sql.functions._
   * [[Scc]]. */
 object TopoLayers {
 
-  private def mat(df: DataFrame): DataFrame = Iter.mat(df)
-
   /** @param edges (src, dst) directed; MUST be acyclic (detect-and-fail
     *        otherwise).
     * @param maxRounds longest path length budget; exceeding it aborts
@@ -37,41 +35,31 @@ object TopoLayers {
     * @return (id, layer) for every node in `edges`. */
   def run(edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds")
-    val e = mat(edges.toDF("src", "dst")
+    val e = Iter.mat(edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long"))
       .distinct())
-    val eRows = e.count() // sizes the loop shuffle width (Iter)
+    val eRows = Iter.count(e) // sizes the loop shuffle width (Iter)
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     def tot(c: DataFrame): Long = c.agg(coalesce(sum(col("layer")), lit(0L)))
       .head.getLong(0)
-    Iter.withLoopConf(e.sparkSession, eRows, aqeOff = true) {
-    var st = mat(nodes.withColumn("layer", lit(0L)))
-    var prev = tot(st)
-    var rounds = 0
-    var changed = true
-    while (changed) {
-      rounds += 1
-      if (rounds > maxRounds) throw new IllegalStateException(
+    val st0 = Iter.mat(nodes.withColumn("layer", lit(0L)))
+    Iter.fixpoint(e.sparkSession, eRows, st0)(
+      maxRounds, Iter.Until.Unchanged(tot), aqeOff = true,
+      fail = Some(_ => new IllegalStateException(
         s"TopoLayers exceeded maxRounds=$maxRounds: the graph either has a " +
           "cycle (layers grow forever — run Scc.condense first; SCCs are " +
           "exactly the cycles) or a longest path deeper than the budget " +
-          "(raise maxRounds; state per round stays bounded, only wall-clock grows).")
-      val msgs = e.join(
-          Iter.bcast(st.select(col("id").as("src"), col("layer").as("src_layer")), 2 * eRows),
-          "src")
-        .groupBy(col("dst").as("id"))
-        .agg((max(col("src_layer")) + 1L).as("in_layer"))
-      val next = st.join(Iter.bcast(msgs, 2 * eRows), Seq("id"), "left_outer")
-        .select(col("id"),
-          greatest(col("layer"), coalesce(col("in_layer"), col("layer"))).as("layer"))
-      val nm = mat(next)
-      val s = tot(nm)
-      changed = s != prev
-      prev = s
-      st = nm
-    }
-    st
-    } // Iter.withLoopConf
+          "(raise maxRounds; state per round stays bounded, only wall-clock grows)."))) {
+      (st, _) =>
+        val msgs = e.join(
+            Iter.bcast(st.select(col("id").as("src"), col("layer").as("src_layer")), 2 * eRows),
+            "src")
+          .groupBy(col("dst").as("id"))
+          .agg((max(col("src_layer")) + 1L).as("in_layer"))
+        Iter.mat(st.join(Iter.bcast(msgs, 2 * eRows), Seq("id"), "left_outer")
+          .select(col("id"),
+            greatest(col("layer"), coalesce(col("in_layer"), col("layer"))).as("layer")))
+    }._1
   }
 }

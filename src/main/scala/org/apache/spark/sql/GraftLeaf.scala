@@ -19,10 +19,11 @@ package org.apache.spark.sql
   * are freshly generated from the schema — the same fresh-alias
   * guarantee with none of the conversion. */
 object GraftLeaf {
-  def fresh(checkpointed: DataFrame): DataFrame = {
-    val ds = checkpointed.asInstanceOf[classic.Dataset[Row]]
-    val spark = ds.sparkSession.asInstanceOf[classic.SparkSession]
-    spark.internalCreateDataFrame(
-      ds.queryExecution.toRdd, ds.schema, isStreaming = false)
-  }
+  def fresh(checkpointed: DataFrame): DataFrame =
+    checkpointed.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      rows(checkpointed), checkpointed.schema, isStreaming = false)
+
+  /** The frame's rows as the engine's internal RDD — no Row conversion. */
+  def rows(df: DataFrame): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
 }

@@ -864,4 +864,91 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(_.getLong(3)).sum
     assert(q0 == 0L)
   }
+
+  // ------------------------------------------------ the fixpoint loop
+
+  /** Jobs started while `body` runs on the shared session. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusProbe.drain(sc)
+    sc.addSparkListener(counter)
+    try { body; org.apache.spark.ListenerBusProbe.drain(sc) }
+    finally sc.removeSparkListener(counter)
+    jobs.get
+  }
+
+  test("fixpoint: one change-detection action per round (temporalReach, kcore)") {
+    import spark.implicits._
+    // a 6-hop time-respecting chain: 7 rounds to settle under maxHops 10
+    val chain = (0L until 6L).map(i => (i, i + 1, i)).toDF("src", "dst", "ts")
+    val seeds = Seq(0L).toDF("id")
+    val tr = jobsOf(graft.plans.TemporalReach.run(chain, seeds, maxHops = 10).collect())
+    // a 4-clique with a pendant chain: one peel, one confirming round
+    val clique = for (a <- 1 to 4; b <- 1 to 4 if a < b) yield (s"n$a", s"n$b")
+    val g = (clique ++ Seq(("n4", "p1"), ("p1", "p2"), ("p2", "p3"))).toDF("a", "b")
+    val kc = jobsOf(graft.plans.KCore.run(g, k = 3, rounds = 10).collect())
+    // counts of the per-loop change detection this replaces (re-aggregating
+    // the previous state each round; re-counting KCore's unmaterialized
+    // input), measured on the same calls
+    assert(tr < 25, s"temporalReach ran $tr jobs")
+    assert(kc < 15, s"kcore ran $kc jobs")
+  }
+
+  test("fixpoint: loop conf scopes that interleave on one session restore its conf") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val aqe = s.conf.getOption("spark.sql.adaptive.enabled")
+    val aIn, bIn, aOut = new CountDownLatch(1)
+    def await(l: CountDownLatch): Unit = assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
+    def parts = s.conf.get("spark.sql.shuffle.partitions")
+    // A (width 3, AQE off) enters; B (width 1) enters; A exits; B exits
+    val a = Future {
+      graft.plans.Iter.fixpoint(s, 600000L, ())(1, aqeOff = true) { (_, _) =>
+        assert(parts == "3" && s.conf.get("spark.sql.adaptive.enabled") == "false")
+        aIn.countDown(); await(bIn)
+      }
+      aOut.countDown()
+    }
+    val b = Future {
+      await(aIn)
+      graft.plans.Iter.fixpoint(s, 1000L, ())(1) { (_, _) =>
+        bIn.countDown(); await(aOut)
+        assert(parts == "1") // A's exit keeps the running loop's width
+      }
+    }
+    Await.result(a, 2.minutes)
+    Await.result(b, 2.minutes)
+    assert(parts == "8")
+    assert(s.conf.getOption("spark.sql.adaptive.enabled") == aqe)
+  }
+
+  test("fixpoint: budget policies — stop quietly, or fail with the loop's message") {
+    import graft.plans.Iter
+    val (n, r) = Iter.fixpoint(spark, Iter.SessionWidth, 0)(3)((s, _) => s + 1)
+    assert((n, r) == ((3, 3)))
+    // Unchanged settles on the round that repeats the carried signature
+    // and keeps the state it carried
+    val (m, rm) = Iter.fixpoint(spark, Iter.SessionWidth, 0)(
+      10, Iter.Until.Unchanged((s: Int) => math.min(s, 4)))((s, _) => s + 1)
+    assert((m, rm) == ((4, 5)))
+    val (d, rd) = Iter.fixpoint(spark, Iter.SessionWidth, 0)(
+      10, Iter.Until.Done((s: Int) => s >= 2))((s, _) => s + 1)
+    assert((d, rd) == ((2, 2)))
+    val quiet = Iter.fixpoint(spark, Iter.SessionWidth, 0)(
+      2, Iter.Until.Done((s: Int) => s >= 5))((s, _) => s + 1)
+    assert(quiet == ((2, 2)))
+    val ex = intercept[IllegalStateException](Iter.fixpoint(spark, Iter.SessionWidth, 0)(
+      2, Iter.Until.Done((s: Int) => s >= 5),
+      fail = Some(s => new IllegalStateException(s"stuck at $s")))((s, _) => s + 1))
+    assert(ex.getMessage == "stuck at 2")
+  }
 }

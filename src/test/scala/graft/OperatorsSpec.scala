@@ -60,19 +60,55 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("connected components use reliable checkpoint when a checkpoint dir is set") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val chain = (0 until 40).map(i => (f"k$i%02d", f"k${i + 1}%02d"))
-      val got = ConnectedComponents.run(chain.toDF("a", "b")).collect()
-      assert(got.length == 41 && got.forall(_.getString(1) == "k00"))
-      // the toggle actually wrote reliable checkpoints to the dir
-      val written = new java.io.File(dir).listFiles()
-      assert(written != null && written.nonEmpty, "no checkpoint data written")
-    } finally {
-      // unset so other suites keep the localCheckpoint path
-      spark.sparkContext.setCheckpointDir(null)
+    val chain = (0 until 40).map(i => (f"k$i%02d", f"k${i + 1}%02d"))
+    val links = (0L until 6L).map(i => (i, i + 1))
+    // every graph loop truncates through Iter.mat: each must write
+    // reliable checkpoints when the dir is set, with unchanged results
+    val loops: Seq[(String, () => Unit)] = Seq(
+      "ConnectedComponents" -> { () =>
+        val got = ConnectedComponents.run(chain.toDF("a", "b")).collect()
+        assert(got.length == 41 && got.forall(_.getString(1) == "k00"))
+      },
+      "PageRank" -> { () =>
+        val got = graft.plans.PageRank.run(spark, links.toDF("src", "dst"), 3).collect()
+        assert(got.length == 7)
+      },
+      "Sssp" -> { () =>
+        val got = graft.plans.Sssp.run(links.map(e => (e._1, e._2, 2L)).toDF("src", "dst", "w"),
+          0L, 3).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == Map(0L -> 0L, 1L -> 2L, 2L -> 4L, 3L -> 6L))
+      },
+      "TopoLayers" -> { () =>
+        val got = graft.plans.TopoLayers.run(links.toDF("src", "dst"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == (0L to 6L).map(i => i -> i).toMap)
+      },
+      "LabelProp" -> { () =>
+        val got = graft.plans.LabelProp.run(Seq(("x", "y")).toDF("a", "b"),
+          Seq(("x", 1L), ("y", 2L)).toDF("id", "label"), 1)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(got == Map("x" -> 2L, "y" -> 1L))
+      })
+    loops.foreach { case (name, run) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        run()
+        // the truncation policy actually wrote reliable checkpoints
+        val written = new java.io.File(dir).listFiles()
+        assert(written != null && written.nonEmpty, s"$name wrote no checkpoint data")
+      } finally {
+        // unset so other suites keep the localCheckpoint path
+        spark.sparkContext.setCheckpointDir(null)
+      }
     }
+  }
+
+  test("connected components fail when maxIter ends before convergence") {
+    import spark.implicits._
+    val chain = (0 until 40).map(i => (f"k$i%02d", f"k${i + 1}%02d")).toDF("a", "b")
+    val ex = intercept[IllegalStateException](ConnectedComponents.run(chain, maxIter = 1))
+    assert(ex.getMessage.contains("maxIter"), ex.getMessage)
   }
 
   test("canonicalization rewrites triples through alias components") {
