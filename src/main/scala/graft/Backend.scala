@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.spec.{DumpSpec, SpecJson}
-import graft.sources.EntityCorpus
+import graft.sources.{DriverParquet, EntityCorpus}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -48,7 +49,9 @@ import java.util.concurrent.atomic.AtomicLong
   * per-file lineage manifest (`_meta/manifests/<runId>`) is built on the
   * driver from the committed snapshot's footer stats (row count and
   * `subj` min/max; `part` = the file's ordinal in its spec partition);
-  * and the report is printed from the done markers already in hand.
+  * and the report is printed from the done markers already in hand. The
+  * manifest and the run metadata tables are a few rows each, written on
+  * the driver ([[sources.DriverParquet]]) without a Spark job.
   *
   * Progress (A2) comes from a SparkListener counting task rows on a
   * timer, like the reference's `ProgressReporter.java:24-66`; both are
@@ -62,6 +65,15 @@ object Backend {
                       statementCount: Long, tripleCount: Long)
   case class RunReport(runId: String, produced: Seq[String], skipped: Seq[String],
                        stats: Seq[StatsRow])
+
+  /** Schemas of the run's metadata tables under `_meta`. */
+  private val ManifestSchema =
+    StructType.fromDDL("specId string, part int, triples bigint, min_subj string, max_subj string")
+  private val DumpSchema = StructType.fromDDL("dumpId string, specJson string, createdAt string")
+  private val RunSchema =
+    StructType.fromDDL("runId string, startedAt string, finishedAt string, count bigint")
+  private val DumpStatsSchema = StructType.fromDDL(
+    "runId string, dumpId string, entityCount bigint, statementCount bigint, tripleCount bigint")
 
   private def specSha(json: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -131,8 +143,6 @@ object Backend {
     * specsDir/outDir — each spec is produced exactly once. */
   def run(spark: SparkSession, specsDir: String, corpusArg: String, outDir: String,
           staleClaimMs: Long = 30 * 60 * 1000L): RunReport = {
-    import spark.implicits._
-
     // ---- S7 intake: directory-scan of spec JSONs ----
     val specFiles = new java.io.File(specsDir).listFiles()
       .filter(f => f.getName.endsWith(".json"))
@@ -202,7 +212,7 @@ object Backend {
         if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
         else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
           || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
-        else spark.read.parquet(corpusArg)
+        else EntityCorpus.readParquet(spark, corpusArg)
 
       // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
       // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
@@ -221,9 +231,9 @@ object Backend {
       // output file a tight subject interval — which the manifest records
       // as per-file min/max stats, so subject-range reads skip files
       // (Iceberg file-skipping). Sorting within partitions keeps row
-      // groups aligned with the range for parquet-level stats too.
-      val outParts = math.max(specs.size,
-        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      // groups aligned with the range for parquet-level stats too. No
+      // fixed partition count: AQE sizes the write tasks from the
+      // measured shuffle bytes.
       // the claimed specs' committed files: triple counts and lineage
       // come straight off their footer stats — no recount job
       val committed: Map[String, Seq[sources.SnapshotTable.FileEntry]] =
@@ -231,7 +241,7 @@ object Backend {
         else {
           val snap = sources.SnapshotTable.commit(
             Pipeline.triplesMultiplexed(corpus, specs, counters = Some(counters))
-              .repartitionByRange(outParts, col("specId"), col("subj"))
+              .repartitionByRange(col("specId"), col("subj"))
               .sortWithinPartitions("specId", "subj"),
             table, "specId", replace = true, statsCols = Seq("subj"),
             // claimed specs that emit ZERO triples still swap out their old
@@ -258,23 +268,22 @@ object Backend {
       // straight from the commit's footer stats: `part` is the file's
       // ordinal within its spec partition (manifest order)
       if (specs.nonEmpty)
-        specs.flatMap { case (n, _) =>
-          committed(n).zipWithIndex.map { case (f, i) =>
-            val subj = f.stats.get("subj")
-            (n, i, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
-          }
-        }.toDF("specId", "part", "triples", "min_subj", "max_subj")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_meta/manifests/$runId")
+        DriverParquet.write(spark, s"$outDir/_meta/manifests/$runId", ManifestSchema,
+          specs.flatMap { case (n, _) =>
+            committed(n).zipWithIndex.map { case (f, i) =>
+              val subj = f.stats.get("subj")
+              (n, i, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
+            }
+          })
 
       // ---- metadata tables (the MariaDB analog), run-scoped so
       // concurrent workers never overwrite each other's parquet dirs;
-      // the done markers are the authoritative cross-run state
-      specFiles.map { case (n, j, _) => (n, j, startedAt) }.toSeq
-        .toDF("dumpId", "specJson", "createdAt")
-        .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump")
-      Seq((runId, startedAt, finishedAt, rowsSeen.get)).toDF(
-        "runId", "startedAt", "finishedAt", "count")
-        .write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/run")
+      // the done markers are the authoritative cross-run state. A few
+      // rows each, written on the driver (no Spark job)
+      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump", DumpSchema,
+        specFiles.map { case (n, j, _) => (n, j, startedAt) })
+      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/run", RunSchema,
+        Seq((runId, startedAt, finishedAt, rowsSeen.get)))
 
       // ---- A5: run-level report over ALL done markers, including other
       // workers' output
@@ -289,7 +298,7 @@ object Backend {
           }
         rows.toSeq.sortBy(_.dumpId)
       }
-      stats.toDF().write.mode("overwrite").parquet(s"$outDir/_meta/db/$runId/dump_stats")
+      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump_stats", DumpStatsSchema, stats)
       val secs = (System.nanoTime() - t0) / 1e9
       stats.foreach(r => println(
         s"[backend] ${r.dumpId} | ${r.entityCount} | ${r.statementCount} | ${r.tripleCount}"))

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.sources.EntityCorpus
+import graft.sources.{EntityCorpus, SnapshotTable}
 import graft.spec.SpecJson
 
 /** CLI entry point: one spec, one corpus, one N-Triples output —
@@ -54,18 +53,22 @@ object Cli {
       else if (corpusArg.startsWith("dump:")) {
         val p = corpusArg.drop(5)
         (EntityCorpus.readDump(spark, p), EntityCorpus.detectFormat(spark, p))
-      } else (spark.read.parquet(corpusArg),
+      } else (EntityCorpus.readParquet(spark, corpusArg),
         graft.sources.DumpFormat.Fixture: graft.sources.DumpFormat)
     val sites = sitesArg.map(EntityCorpus.readSites(spark, _)).getOrElse(EntityCorpus.sites)
 
     val t0 = System.nanoTime()
     val triples = Pipeline.triples(corpus, spec, sites = sites, format = format)
     Pipeline.writeNt(triples, outDir + "/nt")
-    Pipeline.writeTripleTable(triples, outDir + "/triples")
+    // counts from the manifest rows and the error files' footers: no
+    // job re-reads either output
+    val nTriples = Pipeline.writeTripleTableManifest(triples, outDir + "/triples")
+      .map(_.triples).sum
     val errs = Pipeline.errors(corpus, spec, format)
     errs.write.mode("overwrite").parquet(outDir + "/_errors")
-    val nTriples = spark.read.parquet(outDir + "/triples").count()
-    val nErrors = spark.read.parquet(outDir + "/_errors").count()
+    val errDir = java.nio.file.Paths.get(outDir + "/_errors")
+    val nErrors = SnapshotTable.footerInventory(Seq(errDir), Nil,
+      spark.sessionState.newHadoopConf())(errDir).map(_.rows).sum
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"[graft.Cli] triples=$nTriples%d errors=$nErrors%d wall=$secs%.1fs out=$outDir")
     spark.stop()

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.model.Model._
 import graft.spec.{DumpSpec, SpecCompiler}
 import graft.emit.TripleEmitter
-import graft.sources.{DumpFormat, EntityCorpus}
+import graft.sources.{DriverParquet, DumpFormat, EntityCorpus, SnapshotTable}
+import org.apache.spark.sql.types.StructType
+import java.nio.file.Paths
 
 /** End-to-end KG-construction pipeline: corpus → parse → spec filter →
   * triple emission → dedup → partitioned write, with lineage + metrics.
@@ -102,20 +104,23 @@ object Pipeline {
 
   /** S6 error channel: rows that fail JSON parse, plus included lexeme
     * documents (reference raises NotImplementedException for lexemes and
-    * skips the document, `FilteredRdfSerializer.java:89-98`). */
+    * skips the document, `FilteredRdfSerializer.java:89-98`). One scan:
+    * each row's minimal parse is bound once through a lambda, and both
+    * error kinds are read off that one document; the generator keeps
+    * the (at most one) error per row from being re-derived by a pushed
+    * filter. */
   def errors(corpus: DataFrame, spec: DumpSpec,
              format: DumpFormat = DumpFormat.Fixture): Dataset[ErrorRow] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val parseErrors = corpus
-      .filter(!format.gate(col("content"), _ => lit(true)))
-      .select(col("repo"), col("path"), lit("").as("id"), lit("malformed document JSON").as("error"))
-    val lexemes = corpus
-      .filter(format.gate(col("content"),
-        d => d("type") === "lexeme" && SpecCompiler.includePredicate(spec, d)))
-      .select(col("repo"), col("path"), format.filterDoc(col("content"))("id").as("id"),
-        lit("serialization of lexemes not implemented").as("error"))
-    parseErrors.union(lexemes).as[ErrorRow]
+    def error(id: Column, msg: String) = struct(id.as("id"), lit(msg).as("error"))
+    val found = transform(array(format.filterDoc(col("content"))), d =>
+      when(d.isNull || d("id").isNull, error(lit(""), "malformed document JSON"))
+        .when(d("type") === "lexeme" && SpecCompiler.includePredicate(spec, d),
+          error(d("id"), "serialization of lexemes not implemented")))
+    corpus
+      .select(col("repo"), col("path"), inline(filter(found, _.isNotNull)))
+      .as[ErrorRow]
   }
 
   /** specId of the N=1 slices; empty, so the carried column costs a
@@ -237,22 +242,49 @@ object Pipeline {
   /** Partitioned triple-table write (north rule): an EXPLICIT bucket
     * column `pmod(xxhash64(subj), buckets)` drives both the shuffle and
     * the physical layout (`partitionBy("bucket")` → one directory per
-    * bucket), so the per-partition lineage manifest audits the files
-    * 1:1 — manifest row count == bucket-directory count, per-bucket
-    * triple counts == per-directory row counts (resume checks can
-    * verify a directory without reading the others). Balanced output
-    * regardless of subject skew. Iceberg is the deploy-time format per
-    * input_hint; parquet stands in here (no Iceberg runtime in the
-    * sandbox). */
-  def writeTripleTable(triples: DataFrame, path: String, buckets: Int = 32): Unit = {
-    val t = triples
+    * bucket), so the per-partition lineage manifest `<path>_manifest`
+    * (bucket, triples, min_subj, max_subj) audits the files 1:1 —
+    * manifest row count == bucket-directory count, per-bucket triple
+    * counts == per-directory row counts (resume checks can verify a
+    * directory without reading the others). Balanced output regardless
+    * of subject skew. Iceberg is the deploy-time format per input_hint;
+    * parquet stands in here (no Iceberg runtime in the sandbox). */
+  def writeTripleTable(triples: DataFrame, path: String, buckets: Int = 32): Unit =
+    writeTripleTableManifest(triples, path, buckets)
+
+  /** One row of a triple table's `_manifest`. */
+  private[graft] case class BucketEntry(bucket: Int, triples: Long,
+                                        min_subj: String, max_subj: String)
+  private val BucketManifestSchema =
+    StructType.fromDDL("bucket int, triples bigint, min_subj string, max_subj string")
+
+  /** [[writeTripleTable]], returning its manifest rows.
+    *
+    * Cost follows the bytes, not the bucket count: the shuffle has
+    * `min(buckets, session shuffle width)` partitions, so a small table
+    * does not pay one write task per bucket. Every bucket still hashes
+    * to exactly one task, and a task writes one file per bucket it
+    * holds, so the layout is one file per `bucket=k` directory. The
+    * manifest comes from those files' footers (rows, `subj` min/max) and
+    * is written on the driver: no job reads the table back. */
+  private[graft] def writeTripleTableManifest(triples: DataFrame, path: String,
+                                              buckets: Int = 32): Seq[BucketEntry] = {
+    val spark = triples.sparkSession
+    val width = math.min(buckets, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    triples
       .withColumn("bucket", pmod(xxhash64(col("subj")), lit(buckets.toLong)))
-      .repartition(buckets, col("bucket"))
-    t.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val manifest = t.sparkSession.read.parquet(path)
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("triples"), min("subj").as("min_subj"), max("subj").as("max_subj"))
-    manifest.coalesce(1).write.mode("overwrite").parquet(path + "_manifest")
+      .repartition(width, col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    val dirs = SnapshotTable.partitionDirs(Paths.get(path), "bucket")
+    val footers = SnapshotTable.footerInventory(dirs.map(_._2), Seq("subj"),
+      spark.sessionState.newHadoopConf())
+    val manifest = dirs.map { case (k, d) =>
+      val subj = footers(d).flatMap(_.stats.get("subj"))
+      BucketEntry(k.toInt, footers(d).map(_.rows).sum,
+        subj.map(_.min).minOption.orNull, subj.map(_.max).maxOption.orNull)
+    }.sortBy(_.bucket)
+    DriverParquet.write(spark, path + "_manifest", BucketManifestSchema, manifest)
+    manifest
   }
 
   /** S8: byte-ish preview — first n triples in canonical order. */

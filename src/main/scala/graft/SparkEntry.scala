@@ -4009,11 +4009,13 @@ object SparkEntry {
         |FROM w GROUP BY 1 ORDER BY event_type""".stripMargin,
     // k-truss rounds unrolled (triangles enumerated u<v<w once each,
     // exploded into their 3 canonical edges, support-filtered); the
-    // engine's early fixpoint exit is a no-op relative to the unroll
+    // engine's early fixpoint exit is a no-op relative to the unroll.
+    // Each eK feeds three joins of tK and then e(K+1): MATERIALIZED
+    // keeps DuckDB from re-evaluating the chain once per reference
     "q_ktruss" -> {
       val k = 4; val rounds = 3
       def triSup(i: String, e: String) =
-        s"""t$i AS (SELECT x.u AS a, x.v AS b, y.v AS c FROM $e x
+        s"""t$i AS MATERIALIZED (SELECT x.u AS a, x.v AS b, y.v AS c FROM $e x
            |  JOIN $e y ON y.u = x.u AND y.v > x.v
            |  JOIN $e z ON z.u = x.v AND z.v = y.v),
            |s$i AS (SELECT u, v, COUNT(*) AS sup FROM (
@@ -4024,12 +4026,12 @@ object SparkEntry {
       val sb = new StringBuilder(
         """WITH raw AS (SELECT event_id % 30 AS a, (event_id * 7 + user_id) % 30 AS b
           |  FROM events),
-          |e0 AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
+          |e0 AS MATERIALIZED (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
           |  FROM raw WHERE a <> b)""".stripMargin)
       for (i <- 0 until rounds) sb.append(
         s""",
            |${triSup(i.toString, s"e$i")},
-           |e${i + 1} AS (SELECT e.u, e.v FROM e$i e
+           |e${i + 1} AS MATERIALIZED (SELECT e.u, e.v FROM e$i e
            |  JOIN s$i s ON e.u = s.u AND e.v = s.v WHERE s.sup >= ${k - 2})""".stripMargin)
       sb.append(
         s""",

@@ -26,32 +26,39 @@ import org.apache.spark.sql.functions.udf
   * so no floating-point rounding is ever re-implemented here. */
 object Kernels {
 
+  /** Array kernels take boxed elements: a primitive `Seq[Long]`
+    * parameter fails the task on a null element
+    * (`NOT_NULL_ASSERT_VIOLATION`), where the Column expressions they
+    * replace return null. */
+  private def hasNull(s: Seq[AnyRef]): Boolean = s.exists(_ == null)
+
   /** Exact integer dot of two pre-quantized long arrays. Null → null;
     * length mismatch → null (zip_with pads with null, and null kills
-    * the running aggregate — replicated). */
-  val dotQ = udf((a: Seq[Long], b: Seq[Long]) =>
-    if (a == null || b == null || a.length != b.length) null
+    * the running aggregate — replicated); a null element → null. */
+  val dotQ = udf((a: Seq[java.lang.Long], b: Seq[java.lang.Long]) =>
+    if (a == null || b == null || a.length != b.length || hasNull(a) || hasNull(b)) null
     else {
       var i = 0; var s = 0L; val n = a.length
-      while (i < n) { s += a(i) * b(i); i += 1 }
+      while (i < n) { s += a(i).longValue * b(i).longValue; i += 1 }
       java.lang.Long.valueOf(s)
     })
 
   /** Nearest-centroid id by integer squared L2 with the repo-wide
     * lexicographic (d2, cid) argmin tie-break: centroids are visited in
     * ascending-cid order and only a STRICTLY smaller d2 replaces the
-    * winner — identical to `array_min` over (d2, cid) structs. */
+    * winner — identical to `array_min` over (d2, cid) structs. A null
+    * vector or element → null. */
   def nearestCidKernel(centroids: Array[(Int, Array[Long])]): Column => Column = {
     val sorted = centroids.sortBy(_._1)
-    val k = udf((qe: Seq[Long]) =>
-      if (qe == null) null
+    val k = udf((qe: Seq[java.lang.Long]) =>
+      if (qe == null || hasNull(qe)) null
       else {
         var bestCid = -1; var bestD2 = Long.MaxValue; var first = true
         var ci = 0
         while (ci < sorted.length) {
           val (cid, c) = sorted(ci)
           var i = 0; var d2 = 0L; val n = math.min(qe.length, c.length)
-          while (i < n) { val d = qe(i) - c(i); d2 += d * d; i += 1 }
+          while (i < n) { val d = qe(i).longValue - c(i); d2 += d * d; i += 1 }
           if (first || d2 < bestD2) { bestD2 = d2; bestCid = cid; first = false }
           ci += 1
         }
@@ -63,13 +70,14 @@ object Kernels {
   /** JL ±1 projection: all `outDim` sign-weighted sums of a quantized
     * vector in one pass (replaces outDim interpreted zip_with/aggregate
     * chains per row). Signs are the driver-computed sha256-parity
-    * matrix — bit-identical to the literal the Column path inlined. */
+    * matrix — bit-identical to the literal the Column path inlined. A
+    * null vector or element → null. */
   def jlProjectKernel(signs: Array[Array[Long]]): Column => Column = {
-    val k = udf((qe: Seq[Long]) =>
-      if (qe == null) null
+    val k = udf((qe: Seq[java.lang.Long]) =>
+      if (qe == null || hasNull(qe)) null
       else signs.map { row =>
         var i = 0; var s = 0L; val n = math.min(qe.length, row.length)
-        while (i < n) { s += qe(i) * row(i); i += 1 }
+        while (i < n) { s += qe(i).longValue * row(i); i += 1 }
         s
       }.toSeq)
     (qe: Column) => k(qe)
@@ -147,9 +155,9 @@ object Kernels {
     * token's UTF-8 bytes. Built once per doc; the pair-verify kernel
     * then crosses the UDF boundary with two byte arrays (single bulk
     * copy each) instead of string/array object materialization per
-    * candidate pair. */
-  val setBlob = udf((tdf: Seq[Long], toks: Seq[String]) =>
-    if (tdf == null || toks == null) null
+    * candidate pair. A null array or element → null. */
+  val setBlob = udf((tdf: Seq[java.lang.Long], toks: Seq[String]) =>
+    if (tdf == null || toks == null || hasNull(tdf) || hasNull(toks)) null
     else {
       var total = 0
       val tb = new Array[Array[Byte]](toks.length)
@@ -162,7 +170,7 @@ object Kernels {
       val out = java.nio.ByteBuffer.allocate(total)
       i = 0
       while (i < toks.length) {
-        out.putLong(tdf(i)); out.putInt(tb(i).length); out.put(tb(i))
+        out.putLong(tdf(i).longValue); out.putInt(tb(i).length); out.put(tb(i))
         i += 1
       }
       out.array()

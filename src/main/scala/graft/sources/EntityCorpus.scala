@@ -1,7 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Model
 
@@ -273,6 +273,12 @@ object EntityCorpus {
       }
     }
   }
+
+  /** A parquet corpus table, read with the [[CorpusRow]] schema: no
+    * schema-inference (footer) job. Columns missing from the files read
+    * as null; extra ones are not read. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Encoders.product[CorpusRow].schema).parquet(path)
 
   /** Write the corpus as a parquet table partition-friendly for reuse. */
   def writeParquet(spark: SparkSession, n: Long, dir: String, seed: Long = 42L): Unit =

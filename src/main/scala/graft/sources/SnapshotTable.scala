@@ -159,32 +159,23 @@ object SnapshotTable {
     val dataDir = Paths.get(table, dataRel)
     // 1. data files first — invisible until a manifest references them
     df.write.partitionBy(partitionCol).parquet(dataDir.toString)
-    // per-partition file inventory of THIS commit only (footer row counts),
-    // read with the session's Hadoop conf so `spark.hadoop.*` settings
-    // (object-store credentials, ...) apply
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    // manifest keys carry the LOGICAL partition value: Spark path-escapes
-    // special chars (space/':'/'%' → %XX) in the directory name, so the
-    // key is unescaped here — read() then restores the exact original
-    // value and caller-supplied `partitions=`/`clearPartitions` filters
-    // match without the caller knowing the escaping rules. A null
+    // per-partition file inventory of THIS commit only (footer row counts
+    // and stats). Manifest keys carry the LOGICAL partition value: Spark
+    // path-escapes special chars (space/':'/'%' → %XX) in the directory
+    // name, so the key is unescaped here — read() then restores the exact
+    // original value and caller-supplied `partitions=`/`clearPartitions`
+    // filters match without the caller knowing the escaping rules. A null
     // partition value keeps its directory sentinel as the key (read()
     // restores it as SQL NULL).
-    val written: Map[String, Seq[FileEntry]] =
-      ls(dataDir)
-        .filter(p => p.getFileName.toString.startsWith(s"$partitionCol="))
-        .map { pd =>
-          val raw = pd.getFileName.toString.stripPrefix(s"$partitionCol=")
-          val part = if (raw == NullPartition) raw
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(raw)
-          val files = ls(pd)
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map { f =>
-              val (rows, stats) = parquetFooter(f, statsCols, hadoopConf)
-              FileEntry(s"$dataRel/${pd.getFileName}/${f.getFileName}", rows, stats)
-            }
-          part -> files
-        }.toMap
+    val dirs = partitionDirs(dataDir, partitionCol)
+    val footers = footerInventory(dirs.map(_._2), statsCols,
+      df.sparkSession.sessionState.newHadoopConf())
+    val written: Map[String, Seq[FileEntry]] = dirs.map { case (raw, pd) =>
+      val part = if (raw == NullPartition) raw
+        else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(raw)
+      part -> footers(pd).map(f =>
+        FileEntry(s"$dataRel/${pd.getFileName}/${f.file.getFileName}", f.rows, f.stats))
+    }.toMap
     val newParts: Map[String, Seq[FileEntry]] =
       clearPartitions.filterNot(written.contains).map(_ -> Seq.empty[FileEntry]).toMap ++ written
     // 2. CAS commit with rebase-and-retry
@@ -235,13 +226,61 @@ object SnapshotTable {
     committed
   }
 
+  /** One parquet file's footer: its row count and the min/max of the
+    * requested columns. */
+  private[graft] case class Footer(file: Path, rows: Long, stats: Map[String, ColStats])
+
+  /** The `col=value` subdirectories of a `partitionBy(col)` write, as
+    * (raw directory value, directory), in name order. */
+  private[graft] def partitionDirs(dir: Path, partitionCol: String): Seq[(String, Path)] =
+    ls(dir).map(p => p -> p.getFileName.toString)
+      .collect { case (p, n) if n.startsWith(s"$partitionCol=") && Files.isDirectory(p) =>
+        n.stripPrefix(s"$partitionCol=") -> p }
+      .sortBy(_._1)
+
+  /** Driver threads that read footers at once. */
+  private val FooterThreads = 8
+
+  /** The footer inventory of written parquet data, without a Spark job:
+    * for each of `dirs`, the footers of the `.parquet` files directly in
+    * it, in file-name order. The one place the engine takes row counts
+    * and file stats from footers ([[commit]]'s manifest, the triple
+    * table's `_manifest`, the `Cli` counts). Footers are read on a small
+    * driver pool (at most `FooterThreads` threads, shut down on return),
+    * with `conf` — the session's Hadoop conf, so `spark.hadoop.*`
+    * settings (object-store credentials, ...) apply. */
+  private[graft] def footerInventory(dirs: Seq[Path], statsCols: Seq[String],
+                                     conf: org.apache.hadoop.conf.Configuration): Map[Path, Seq[Footer]] = {
+    val files = dirs.map(d => d -> ls(d).filter(_.getFileName.toString.endsWith(".parquet"))
+      .sortBy(_.getFileName.toString))
+    val all = files.flatMap(_._2)
+    val read: Map[Path, Footer] =
+      if (all.isEmpty) Map.empty
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(FooterThreads, all.size), (r: Runnable) => {
+            val t = new Thread(r, "graft-footers"); t.setDaemon(true); t
+          })
+        try {
+          val pending = all.map(f => f -> pool.submit(new java.util.concurrent.Callable[Footer] {
+            def call(): Footer = parquetFooter(f, statsCols, conf)
+          }))
+          pending.map { case (f, fut) =>
+            try f -> fut.get()
+            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+          }.toMap
+        } finally pool.shutdownNow()
+      }
+    files.map { case (d, fs) => d -> fs.map(read) }.toMap
+  }
+
   /** Footer read without a Spark job (tiny driver-side metadata read,
     * same as Iceberg's per-file stats): row count + min/max for the
     * requested columns (long + string columns supported; others, and
     * all-null row groups, simply record no stats — pruning keeps the
     * file, which is always safe). */
   private def parquetFooter(file: Path, statsCols: Seq[String],
-                            conf: org.apache.hadoop.conf.Configuration): (Long, Map[String, ColStats]) = {
+                            conf: org.apache.hadoop.conf.Configuration): Footer = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -276,7 +315,7 @@ object SnapshotTable {
           }
         }
       }
-      (r.getRecordCount, acc.filter { case (k, _) => statsOk.contains(k) }.toMap)
+      Footer(file, r.getRecordCount, acc.filter { case (k, _) => statsOk.contains(k) }.toMap)
     } finally r.close()
   }
 

@@ -183,4 +183,57 @@ class BackendSpec extends AnyFunSuite {
     while (timers > 0 && System.nanoTime() < deadline) Thread.sleep(20)
     assert(timers == 0, "a progress timer thread is still alive")
   }
+
+  test("one Backend.run launches at most 4 jobs; its metadata tables keep their schemas and rows") {
+    import org.apache.spark.sql.types.StructType
+    val sc = spark.sparkContext
+    val corpus = Files.createTempDirectory("graft-backend-corpus").toString + "/corpus"
+    EntityCorpus.generate(spark, 600).write.parquet(corpus)
+    val mydir = Files.createTempDirectory("graft-backend-specs4")
+    Seq("humans.json", "nothing.json", "english-labels.json").foreach { n =>
+      Files.copy(Paths.get(s"$specsDir/$n"), mydir.resolve(n))
+    }
+    val out = Files.createTempDirectory("graft-backend-jobs").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusProbe.drain(sc)
+    sc.addSparkListener(counter)
+    val r = try {
+      val r = Backend.run(spark, mydir.toString, corpus, out)
+      ListenerBusProbe.drain(sc)
+      r
+    } finally sc.removeSparkListener(counter)
+    // 9 when the corpus read inferred its schema (one job) and the four
+    // metadata tables of a few rows each were Spark writes
+    assert(jobs.get <= 4, s"Backend.run launched ${jobs.get} jobs")
+    assert(r.produced.toSet == Set("humans", "nothing", "english-labels"))
+
+    def table(rel: String, ddl: String): Seq[org.apache.spark.sql.Row] = {
+      val df = spark.read.parquet(s"$out/_meta/$rel")
+      assert(df.schema == StructType.fromDDL(ddl), s"$rel schema ${df.schema.toDDL}")
+      df.collect().toSeq
+    }
+    val specJson = (n: String) => Files.readString(mydir.resolve(s"$n.json"))
+    val dump = table(s"db/${r.runId}/dump", "dumpId string, specJson string, createdAt string")
+    assert(dump.map(d => d.getString(0) -> d.getString(1)).toSet ==
+      r.produced.map(n => n -> specJson(n)).toSet)
+    assert(dump.map(_.getString(2)).distinct.size == 1)
+    val run = table(s"db/${r.runId}/run", "runId string, startedAt string, finishedAt string, count bigint")
+    assert(run.size == 1 && run.head.getString(0) == r.runId && run.head.getString(1) <= run.head.getString(2))
+    val stats = table(s"db/${r.runId}/dump_stats",
+      "runId string, dumpId string, entityCount bigint, statementCount bigint, tripleCount bigint")
+    assert(stats.map(s => Backend.StatsRow(s.getString(0), s.getString(1), s.getLong(2), s.getLong(3),
+      s.getLong(4))).sortBy(_.dumpId) == r.stats)
+    val manifest = table(s"manifests/${r.runId}",
+      "specId string, part int, triples bigint, min_subj string, max_subj string")
+    val live = SnapshotTable.snapshotAt(s"$out/triples", SnapshotTable.currentVersion(s"$out/triples"))
+      .partitions
+    assert(manifest.map(m => (m.getString(0), m.getInt(1), m.getLong(2), m.getString(3), m.getString(4))).toSet ==
+      r.produced.flatMap(n => live(n).zipWithIndex.map { case (f, i) =>
+        (n, i, f.rows, f.stats("subj").min, f.stats("subj").max) }).toSet)
+    checkProduced(out, mydir.toString, "gen:600", r)
+  }
 }

@@ -2177,4 +2177,47 @@ class OperatorsSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(gotEdge("c") == (1L << 32) + 1L)
   }
+
+  // ------------------------------------------ Seq[Long] kernels and nulls
+
+  /** `f` over one row of long arrays given as SQL literals. */
+  private def kernelOn(f: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column,
+                       arrays: String*): org.apache.spark.sql.Row =
+    spark.range(1).select(f(arrays.map(expr)).as("k")).head()
+
+  test("kernel dotQ: a null element gives null, as the zip_with/aggregate path does") {
+    import graft.operators.Kernels
+    assert(kernelOn(c => Kernels.dotQ(c(0), c(1)), "array(1L, 2L, 3L)", "array(2L, 5L, 7L)")
+      .getLong(0) == 33L)
+    assert(kernelOn(c => Kernels.dotQ(c(0), c(1)), "array(1L, NULL, 3L)", "array(2L, 5L, 7L)").isNullAt(0))
+    assert(kernelOn(c => Kernels.dotQ(c(0), c(1)), "array(1L, 2L)", "array(2L, CAST(NULL AS BIGINT))")
+      .isNullAt(0))
+    // the Column formulation the kernel replaced
+    val column = kernelOn(c => aggregate(zip_with(c(0), c(1), _ * _), lit(0L), _ + _),
+      "array(1L, NULL, 3L)", "array(2L, 5L, 7L)")
+    assert(column.isNullAt(0))
+  }
+
+  test("kernel nearestCidKernel: a null element gives null") {
+    import graft.operators.Kernels
+    val near = Kernels.nearestCidKernel(Array(0 -> Array(0L, 0L), 1 -> Array(10L, 10L)))
+    assert(kernelOn(c => near(c(0)), "array(9L, 8L)").getInt(0) == 1)
+    assert(kernelOn(c => near(c(0)), "array(9L, NULL)").isNullAt(0))
+  }
+
+  test("kernel jlProjectKernel: a null element gives null") {
+    import graft.operators.Kernels
+    val proj = Kernels.jlProjectKernel(Array(Array(1L, -1L), Array(1L, 1L)))
+    assert(kernelOn(c => proj(c(0)), "array(3L, 5L)").getSeq[Long](0) == Seq(-2L, 8L))
+    assert(kernelOn(c => proj(c(0)), "array(NULL, 5L)").isNullAt(0))
+  }
+
+  test("kernel setBlob: a null tdf or token gives null") {
+    import graft.operators.Kernels
+    val blob = kernelOn(c => Kernels.setBlob(c(0), c(1)), "array(1L, 2L)", "array('a', 'bc')")
+      .getAs[Array[Byte]](0)
+    assert(blob.length == 12 + 1 + 12 + 2)
+    assert(kernelOn(c => Kernels.setBlob(c(0), c(1)), "array(1L, NULL)", "array('a', 'bc')").isNullAt(0))
+    assert(kernelOn(c => Kernels.setBlob(c(0), c(1)), "array(1L, 2L)", "array('a', NULL)").isNullAt(0))
+  }
 }

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.EntityCorpus
 import graft.spec.SpecJson
+import scala.jdk.CollectionConverters._
 
 class PipelineSmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -135,5 +136,92 @@ class PipelineSmokeSpec extends AnyFunSuite {
     val errs = Pipeline.errors(withBad, specFromFile("english-labels.json"))
     assert(errs.filter(col("error").contains("malformed")).count() == 1)
     assert(errs.filter(col("error").contains("lexemes")).count() > 0)
+  }
+
+  /** Stages submitted while `body` runs on the shared session: per
+    * stage (task count, is a result stage, RDD names). */
+  private def stagesOf(body: => Any): Seq[(Int, Boolean, Seq[String])] = {
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean, Seq[String])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.add((s.stageInfo.numTasks, org.apache.spark.ListenerBusProbe.isResultStage(s.stageInfo),
+          s.stageInfo.rddInfos.map(_.name)))
+    }
+    org.apache.spark.ListenerBusProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusProbe.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    stages.asScala.toSeq
+  }
+
+  test("triple-table manifest comes from footers: same rows as a read-back, no read-back job") {
+    val corpus = EntityCorpus.generate(spark, 400).toDF()
+    val t = Pipeline.triples(corpus, specFromFile("humans.json"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-tripletable-footers").toString
+    val buckets = 8
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val stages = stagesOf(Pipeline.writeTripleTable(t, s"$dir/triples", buckets))
+    // the in-memory corpus is no file: a file scan can only be a read-back
+    assert(!stages.exists(_._3.exists(_.contains("FileScanRDD"))), s"a stage read files: $stages")
+    val writes = stages.filter(_._2).map(_._1)
+    assert(writes.nonEmpty && writes.forall(_ <= math.min(buckets, width)),
+      s"write stages ran $writes tasks; bound ${math.min(buckets, width)}")
+    // the manifest as a read-back of the table builds it
+    val readBack = spark.read.parquet(s"$dir/triples")
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("triples"), min("subj").as("min_subj"), max("subj").as("max_subj"))
+    val manifest = spark.read.parquet(s"$dir/triples_manifest")
+    assert(manifest.schema.map(f => f.name -> f.dataType) == readBack.schema.map(f => f.name -> f.dataType))
+    assert(manifest.collect().map(_.toString).sorted.toSeq ==
+      readBack.collect().map(_.toString).sorted.toSeq)
+    // one file per bucket directory
+    new java.io.File(s"$dir/triples").listFiles().filter(_.getName.startsWith("bucket=")).foreach { d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, s"${d.getName} holds several files")
+    }
+  }
+
+  test("errors: one corpus scan, the same rows as the two-scan union, in both dialects") {
+    import spark.implicits._
+    import graft.sources.{DumpFormat, WikidataJson}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val fixture = EntityCorpus.generate(spark, 300).collect().toSeq
+    val bad = Seq("{not json", "{}", """{"type":"lexeme"}""", "")
+      .zipWithIndex.map { case (c, i) => EntityCorpus.CorpusRow("repo-bad", s"bad/$i.json", "x", "json", c) }
+    /** Reference: a parse-error scan unioned with an included-lexeme
+      * scan. */
+    def twoScans(corpus: org.apache.spark.sql.DataFrame, spec: graft.spec.DumpSpec, format: DumpFormat) = {
+      val parseErrors = corpus
+        .filter(!format.gate(col("content"), _ => lit(true)))
+        .select(col("repo"), col("path"), lit("").as("id"), lit("malformed document JSON").as("error"))
+      val lexemes = corpus
+        .filter(format.gate(col("content"),
+          d => d("type") === "lexeme" && graft.spec.SpecCompiler.includePredicate(spec, d)))
+        .select(col("repo"), col("path"), format.filterDoc(col("content"))("id").as("id"),
+          lit("serialization of lexemes not implemented").as("error"))
+      parseErrors.union(lexemes).as[Pipeline.ErrorRow]
+    }
+    Seq[(DumpFormat, String => String)](
+      DumpFormat.Fixture -> identity,
+      DumpFormat.Wikidata -> WikidataJson.toDumpJson
+    ).foreach { case (format, encode) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-errors").toString
+      (fixture.map(r => r.copy(content = encode(r.content))) ++ bad).toDS()
+        .write.parquet(s"$dir/corpus")
+      val corpus = EntityCorpus.readParquet(spark, s"$dir/corpus")
+      Seq("english-labels.json", "humans.json").foreach { name =>
+        val spec = specFromFile(name)
+        val errs = Pipeline.errors(corpus, spec, format)
+        val got = errs.collect().toSeq.sortBy(e => (e.path, e.error))
+        assert(got == twoScans(corpus, spec, format).collect().toSeq.sortBy(e => (e.path, e.error)),
+          s"$format $name")
+        assert(got.count(_.error.contains("malformed")) == 4, s"$format $name: $got")
+        if (name == "english-labels.json") assert(got.exists(_.error.contains("lexemes")))
+        val scans = new AdaptiveSparkPlanHelper {}
+          .collect(errs.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+        assert(scans.size == 1, s"$format $name: ${scans.size} corpus scans")
+      }
+    }
   }
 }

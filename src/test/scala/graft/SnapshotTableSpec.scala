@@ -361,6 +361,30 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(snap.files.nonEmpty && CountingLocalFs.opens.get >= snap.files.size,
       s"${CountingLocalFs.opens.get} opens through the session's file system for ${snap.files.size} footers")
   }
+
+  test("driver-side parquet writer round-trips nulls, int, bigint and string, and overwrites") {
+    import org.apache.spark.sql.types.StructType
+    import graft.sources.DriverParquet
+    val dir = freshTable() + "/meta"
+    val schema = StructType.fromDDL("name string, n int, big bigint, note string")
+    val rows = Seq(("a", 1, 10L, "x"), ("b", -2, Long.MaxValue, null), (null, Int.MinValue, -1L, ""),
+      ("ü ☃ \u0001", 0, 0L, "multi\nline"))
+    DriverParquet.write(spark, dir, schema, Seq(("stale", 9, 9L, "old"), ("stale2", 8, 8L, "old")))
+    DriverParquet.write(spark, dir, schema, rows)
+    val back = spark.read.parquet(dir)
+    assert(back.schema == schema)
+    assert(back.as[(String, Int, Long, String)].collect().toSeq.sortBy(_._2) == rows.sortBy(_._2))
+    // nulls in the non-string columns read back as null
+    val boxed = StructType.fromDDL("k string, n int, big bigint")
+    DriverParquet.write(spark, dir, boxed, Seq(("k", null, 5L), ("m", 7, null)))
+    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet ==
+      Set(Seq("k", null, 5L), Seq("m", 7, null)))
+    // one part file: the earlier writes are gone
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    assert(Files.exists(Paths.get(dir, "_SUCCESS")))
+    intercept[IllegalArgumentException](
+      DriverParquet.write(spark, dir, StructType.fromDDL("d double"), Seq(Tuple1(1.0))))
+  }
 }
 
 /** Local file system that counts the files it opens. */
