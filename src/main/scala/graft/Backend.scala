@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.spec.{DumpSpec, SpecJson}
+import graft.obs.RunRecord
 import graft.sources.{DriverParquet, EntityCorpus}
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Multi-spec batch worker — the reference's production path
   * (`Backend.java:100-156`): claim pending specs, run them all over ONE
@@ -53,18 +52,28 @@ import java.util.concurrent.atomic.AtomicLong
   * manifest and the run metadata tables are a few rows each, written on
   * the driver ([[sources.DriverParquet]]) without a Spark job.
   *
-  * Progress (A2) comes from a SparkListener counting task rows on a
-  * timer, like the reference's `ProgressReporter.java:24-66`; both are
-  * removed when the pass ends, whether it succeeds or fails.
+  * The pass runs as the steps `open` and `commit` of an
+  * [[obs.RunRecord]], which counts only this run's jobs (concurrent
+  * workers on one session keep separate counts) and is printed as one
+  * `[graft.obs] {json}` line. Progress (A2) is its live input-row count
+  * on a timer, like the reference's `ProgressReporter.java:24-66`;
+  * `run.count` is the `commit` step's input rows, and the done markers'
+  * A1 counters are that step's counters. The timer and the record's
+  * listener are removed however the pass ends.
   *
-  * Usage: runMain graft.Backend <specsDir> <corpusParquet|gen:N> <outDir> [cores]
+  * Usage: runMain graft.Backend <specsDir> <corpus> <outDir> [cores]
+  *
+  * `corpus` is read by [[sources.EntityCorpus.open]]: `gen:<n>` (the
+  * synthetic corpus), `dump:<path>` or a path ending in `.gz`, `.bz2`,
+  * `.zst` or `.zstd` (a line-JSON dump, its dialect sniffed from the
+  * first document), and any other path is a parquet corpus table.
   */
 object Backend {
 
   case class StatsRow(runId: String, dumpId: String, entityCount: Long,
                       statementCount: Long, tripleCount: Long)
   case class RunReport(runId: String, produced: Seq[String], skipped: Seq[String],
-                       stats: Seq[StatsRow])
+                       stats: Seq[StatsRow], record: RunRecord.Record)
 
   /** Schemas of the run's metadata tables under `_meta`. */
   private val ManifestSchema =
@@ -91,7 +100,8 @@ object Backend {
 
   /** Cheap deterministic identity of the corpus argument WITHOUT
     * scanning data: the argument itself for generated corpora; for a
-    * path, the sha of the sorted (relative-name, size) file listing. A
+    * path (a dump's without its `dump:` prefix), the sha of the sorted
+    * (relative-name, size) file listing. A
     * new dump/table version changes the listing, so done markers keyed
     * on the old corpus stop matching and specs recompute — resume must
     * never serve spec results computed from a different corpus. (Dumps
@@ -99,18 +109,19 @@ object Backend {
     * the property this keys on; an in-place same-size byte edit is out
     * of scope.) */
   private[graft] def corpusFingerprint(corpusArg: String): String = {
-    val p = Paths.get(corpusArg)
+    val path = EntityCorpus.dumpPath(corpusArg).getOrElse(corpusArg)
+    val p = Paths.get(path)
     val desc =
-      if (!Files.exists(p)) corpusArg
+      if (!Files.exists(p)) path
       else if (Files.isDirectory(p)) {
-        val sb = new StringBuilder(corpusArg)
+        val sb = new StringBuilder(path)
         val walk = Files.walk(p)
         try walk.sorted().forEach { f =>
           if (Files.isRegularFile(f))
             sb.append('\n').append(p.relativize(f)).append('\t').append(Files.size(f))
         } finally walk.close()
         sb.toString
-      } else s"$corpusArg\t${Files.size(p)}"
+      } else s"$path\t${Files.size(p)}"
     specSha(desc)
   }
 
@@ -194,25 +205,15 @@ object Backend {
       println(s"[backend] $n claimed by another worker, skipping")
     }
 
-    // ---- A2: progress reporter (processing-time timer over listener
-    // counts); both are torn down however the pass ends
-    val rowsSeen = new AtomicLong()
-    val progress = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) rowsSeen.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(progress)
+    // ---- A2: progress reporter, a timer over the run record's live
+    // input-row count; the record's listener and the timer are torn down
+    // however the pass ends
     val timer = new java.util.Timer("graft-progress", true)
-    try {
+    val (committed, record) = try RunRecord.collect(spark, runId) { rec =>
       timer.scheduleAtFixedRate(new java.util.TimerTask {
-        def run(): Unit = System.err.println(s"[backend] progress: ~${rowsSeen.get} input records read")
+        def run(): Unit = System.err.println(s"[backend] progress: ~${rec.inputRows} input records read")
       }, 10000, 10000)
-
-      val corpus =
-        if (corpusArg.startsWith("gen:")) EntityCorpus.generate(spark, corpusArg.drop(4).toLong).toDF()
-        else if (corpusArg.endsWith(".gz") || corpusArg.endsWith(".bz2") || corpusArg.endsWith(".zst")
-          || corpusArg.contains("dump")) EntityCorpus.readDump(spark, corpusArg)
-        else EntityCorpus.readParquet(spark, corpusArg)
+      val (corpus, format) = rec.step("open")(EntityCorpus.open(spark, corpusArg))
 
       // ---- D3/S3: ONE multiplexed pass serves every claimed spec,
       // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
@@ -223,7 +224,6 @@ object Backend {
       // one session.
       val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
       val counters = Observation(s"graft_backend_counters_$runId")
-      val t0 = System.nanoTime()
       // Range-partition on (specId, subj) rather than hashing specId
       // alone: one-partition-per-spec would funnel a whole spec's output
       // through ONE task (a 100 TB spec = one writer), while ranging over
@@ -236,78 +236,78 @@ object Backend {
       // measured shuffle bytes.
       // the claimed specs' committed files: triple counts and lineage
       // come straight off their footer stats — no recount job
-      val committed: Map[String, Seq[sources.SnapshotTable.FileEntry]] =
-        if (specs.isEmpty) Map.empty
-        else {
-          val snap = sources.SnapshotTable.commit(
-            Pipeline.triplesMultiplexed(corpus, specs, counters = Some(counters))
-              .repartitionByRange(col("specId"), col("subj"))
-              .sortWithinPartitions("specId", "subj"),
-            table, "specId", replace = true, statsCols = Seq("subj"),
-            // claimed specs that emit ZERO triples still swap out their old
-            // partition (a re-opened spec must never keep serving triples
-            // computed from the previous spec/corpus version)
-            clearPartitions = specs.map(_._1))
-          specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil) }.toMap
-        }
-
-      // ---- per-spec stats (A1/A5) for the claimed set, then commit the
-      // done markers LAST (data is already durable; crash before a marker
-      // only re-runs that spec, which the partition replace absorbs)
-      val allCounters =
-        if (specs.nonEmpty) Pipeline.observedCounters(counters, specs)
-        else Map.empty[String, (Long, Long)]
-      claimed.foreach { case (name, json, _) =>
-        val (ents, stmts) = allCounters(name)
-        atomicWrite(doneDir.resolve(s"$name.tsv"),
-          s"${identSha(json)}\t$runId\t$ents\t$stmts\t${committed(name).map(_.rows).sum}\n")
+      if (specs.isEmpty) Map.empty[String, Seq[sources.SnapshotTable.FileEntry]]
+      else {
+        val snap = rec.step("commit")(sources.SnapshotTable.commit(
+          Pipeline.triplesMultiplexed(corpus, specs, format = format, counters = Some(counters))
+            .repartitionByRange(col("specId"), col("subj"))
+            .sortWithinPartitions("specId", "subj"),
+          table, "specId", replace = true, statsCols = Seq("subj"),
+          // claimed specs that emit ZERO triples still swap out their old
+          // partition (a re-opened spec must never keep serving triples
+          // computed from the previous spec/corpus version)
+          clearPartitions = specs.map(_._1)))
+        val observed = Pipeline.observedCounters(counters, specs)
+        rec.addCounters("commit", specs.flatMap { case (n, _) =>
+          Seq(s"$n.entities" -> observed(n)._1, s"$n.statements" -> observed(n)._2)
+        })
+        specs.map { case (n, _) => n -> snap.partitions.getOrElse(n, Nil) }.toMap
       }
-      val finishedAt = java.time.Instant.now.toString
+    } finally timer.cancel()
+    val finishedAt = java.time.Instant.now.toString
 
-      // per-file lineage manifest for this worker's claimed partitions,
-      // straight from the commit's footer stats: `part` is the file's
-      // ordinal within its spec partition (manifest order)
-      if (specs.nonEmpty)
-        DriverParquet.write(spark, s"$outDir/_meta/manifests/$runId", ManifestSchema,
-          specs.flatMap { case (n, _) =>
-            committed(n).zipWithIndex.map { case (f, i) =>
-              val subj = f.stats.get("subj")
-              (n, i, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
-            }
-          })
-
-      // ---- metadata tables (the MariaDB analog), run-scoped so
-      // concurrent workers never overwrite each other's parquet dirs;
-      // the done markers are the authoritative cross-run state. A few
-      // rows each, written on the driver (no Spark job)
-      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump", DumpSchema,
-        specFiles.map { case (n, j, _) => (n, j, startedAt) })
-      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/run", RunSchema,
-        Seq((runId, startedAt, finishedAt, rowsSeen.get)))
-
-      // ---- A5: run-level report over ALL done markers, including other
-      // workers' output
-      val stats = {
-        val rows = scala.collection.mutable.ArrayBuffer.empty[StatsRow]
-        if (Files.exists(doneDir))
-          Files.newDirectoryStream(doneDir, "*.tsv").forEach { p =>
-            val f = Files.readString(p).trim.split("\t")
-            if (f.length >= 5)
-              rows += StatsRow(f(1), p.getFileName.toString.stripSuffix(".tsv"),
-                f(2).toLong, f(3).toLong, f(4).toLong)
-          }
-        rows.toSeq.sortBy(_.dumpId)
-      }
-      DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump_stats", DumpStatsSchema, stats)
-      val secs = (System.nanoTime() - t0) / 1e9
-      stats.foreach(r => println(
-        s"[backend] ${r.dumpId} | ${r.entityCount} | ${r.statementCount} | ${r.tripleCount}"))
-      println(f"[backend] run=$runId specs=${specs.size} wall=$secs%.1fs out=$outDir")
-      RunReport(runId, specs.map(_._1), skipped.map(_._1).toSeq, stats)
-    } finally {
-      timer.cancel()
-      spark.sparkContext.removeSparkListener(progress)
+    // ---- per-spec stats (A1/A5) for the claimed set, then commit the
+    // done markers LAST (data is already durable; crash before a marker
+    // only re-runs that spec, which the partition replace absorbs)
+    claimed.foreach { case (name, json, _) =>
+      val observed = record.step("commit").counters
+      atomicWrite(doneDir.resolve(s"$name.tsv"),
+        s"${identSha(json)}\t$runId\t${observed(s"$name.entities")}\t${observed(s"$name.statements")}" +
+          s"\t${committed(name).map(_.rows).sum}\n")
     }
+
+    // per-file lineage manifest for this worker's claimed partitions,
+    // straight from the commit's footer stats: `part` is the file's
+    // ordinal within its spec partition (manifest order)
+    if (committed.nonEmpty)
+      DriverParquet.write(spark, s"$outDir/_meta/manifests/$runId", ManifestSchema,
+        claimed.flatMap { case (n, _, _) =>
+          committed(n).zipWithIndex.map { case (f, i) =>
+            val subj = f.stats.get("subj")
+            (n, i, f.rows, subj.map(_.min).orNull, subj.map(_.max).orNull)
+          }
+        })
+
+    // ---- metadata tables (the MariaDB analog), run-scoped so
+    // concurrent workers never overwrite each other's parquet dirs;
+    // the done markers are the authoritative cross-run state. A few
+    // rows each, written on the driver (no Spark job). `count` is the
+    // input rows of this run's own corpus pass.
+    DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump", DumpSchema,
+      specFiles.map { case (n, j, _) => (n, j, startedAt) })
+    val inputRows = record.steps.find(_.name == "commit").fold(0L)(_.metrics.inputRows)
+    DriverParquet.write(spark, s"$outDir/_meta/db/$runId/run", RunSchema,
+      Seq((runId, startedAt, finishedAt, inputRows)))
+
+    // ---- A5: run-level report over ALL done markers, including other
+    // workers' output
+    val stats = {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[StatsRow]
+      if (Files.exists(doneDir))
+        Files.newDirectoryStream(doneDir, "*.tsv").forEach { p =>
+          val f = Files.readString(p).trim.split("\t")
+          if (f.length >= 5)
+            rows += StatsRow(f(1), p.getFileName.toString.stripSuffix(".tsv"),
+              f(2).toLong, f(3).toLong, f(4).toLong)
+        }
+      rows.toSeq.sortBy(_.dumpId)
+    }
+    DriverParquet.write(spark, s"$outDir/_meta/db/$runId/dump_stats", DumpStatsSchema, stats)
+    stats.foreach(r => println(
+      s"[backend] ${r.dumpId} | ${r.entityCount} | ${r.statementCount} | ${r.tripleCount}"))
+    println(f"[backend] run=$runId specs=${claimed.size} wall=${record.wallS}%.1fs out=$outDir")
+    println(record.line)
+    RunReport(runId, claimed.map(_._1).toSeq, skipped.map(_._1).toSeq, stats, record)
   }
 
   def main(args: Array[String]): Unit = {

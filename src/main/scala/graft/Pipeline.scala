@@ -62,14 +62,6 @@ object Pipeline {
     else all.flatMap(_.get).distinct.map(t => col("content").contains(t)).reduce(_ || _)
   }
 
-  /** Parsed-document view of a corpus: columns (repo, path, commit,
-    * content_sha256, doc). */
-  def parsed(corpus: DataFrame, format: DumpFormat = DumpFormat.Fixture): DataFrame =
-    corpus.select(
-      col("repo"), col("path"), col("commit"),
-      sha2(col("content"), 256).as("content_sha256"),
-      format.doc(col("content")).as("doc"))
-
   private[graft] def docColumns = Seq(
     col("doc.id").as("id"), col("doc.type").as("etype"), col("doc.datatype").as("datatype"),
     col("doc.labels").as("labels"), col("doc.descriptions").as("descriptions"),
@@ -234,10 +226,9 @@ object Pipeline {
   /** S4 gzip N-Triples sink. Canonical order (subj, pred, obj) replaces
     * the reference's scan order (SURVEY §2.7): rangepartition+sort keeps
     * the sort distributed. */
-  def writeNt(triples: DataFrame, path: String, sorted: Boolean = true): Unit = {
-    val t = if (sorted) triples.orderBy("subj", "pred", "obj") else triples
-    ntLines(t).write.mode("overwrite").option("compression", "gzip").text(path)
-  }
+  def writeNt(triples: DataFrame, path: String): Unit =
+    ntLines(triples.orderBy("subj", "pred", "obj"))
+      .write.mode("overwrite").option("compression", "gzip").text(path)
 
   /** Partitioned triple-table write (north rule): an EXPLICIT bucket
     * column `pmod(xxhash64(subj), buckets)` drives both the shuffle and
@@ -286,10 +277,6 @@ object Pipeline {
     DriverParquet.write(spark, path + "_manifest", BucketManifestSchema, manifest)
     manifest
   }
-
-  /** S8: byte-ish preview — first n triples in canonical order. */
-  def preview(triples: DataFrame, n: Int): DataFrame =
-    triples.orderBy("subj", "pred", "obj").limit(n)
 
   /** P7 as a pure-Column plan (no object boundary): term triples
     * straight off the parsed struct via explode + the native nt_escape

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.obs.RunRecord
 
 /** Child-JVM pipeline runner for honest scaling measurements: the parent
   * (Bench/Scaling) forks this main under `taskset -c 0..N-1`, so ALL of
@@ -61,24 +62,19 @@ object PipelineRunner {
     // ~17 cores' worth of CPU was contended by a tenant neighbor — the
     // parent taints and retries such pairs instead of publishing them.
     // Process cpu covers local modes (includes GC); for local-cluster
-    // the work happens in executor JVMs, so task-level executorCpuTime
-    // is summed via a listener and printed as TASKCPU (both always
-    // printed; the parent picks per mode).
+    // the work happens in executor JVMs, so the run record's summed
+    // task executorCpuTime is printed as TASKCPU (both always printed;
+    // the parent picks per mode).
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) taskCpuNs.addAndGet(t.taskMetrics.executorCpuTime)
-    })
-    (1 to reps).foreach { _ =>
-      val c0 = osBean.getProcessCpuTime
-      val k0 = taskCpuNs.get
-      val t0 = System.nanoTime()
-      val n = Pipeline.triples(corpus, spec, dedup = dedup).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      val tcpu = (taskCpuNs.get - k0) / 1e9
+    (1 to reps).foreach { rep =>
+      val ((n, secs, cpu), record) = RunRecord.collect(spark, s"pipeline-$rep") { rec =>
+        val c0 = osBean.getProcessCpuTime
+        val t0 = System.nanoTime()
+        val n = rec.step("triples")(Pipeline.triples(corpus, spec, dedup = dedup).count())
+        (n, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+      }
+      val tcpu = record.step("triples").metrics.cpuNs / 1e9
       println(f"SECS=$secs%.3f TRIPLES=$n%d CPUSECS=$cpu%.3f TASKCPU=$tcpu%.3f")
     }
     spark.stop()

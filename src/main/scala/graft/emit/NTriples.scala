@@ -199,11 +199,6 @@ object NTriples {
     } else BigDecimal(d).bigDecimal.stripTrailingZeros.toPlainString
   }
 
-  /** Quantity unit IRI: "1" means dimensionless (plain literal "1" in
-    * the Wikibase format). */
-  def unitIri(unit: String): String =
-    if (unit == "1" || unit.isEmpty) "1" else Vocab.WD + unit
-
   // ---- content hashes (deterministic stand-ins for wdtk's) --------------
 
   // MessageDigest is not thread-safe and getInstance is not free; one

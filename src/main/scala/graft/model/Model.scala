@@ -41,14 +41,6 @@ object Model {
 
   object Value {
     val empty: Value = Value(None, None, None, None, None, None, None, None, None, None, None, None)
-    def entity(qid: String): Value = empty.copy(id = Some(qid))
-    def string(s: String): Value = empty.copy(str = Some(s))
-    def mono(t: String, l: String): Value = empty.copy(text = Some(t), lang = Some(l))
-    def quantity(a: String, u: String): Value = empty.copy(amount = Some(a), unit = Some(u))
-    def timeV(t: String, p: Int, c: String): Value =
-      empty.copy(time = Some(t), precision = Some(p.toDouble), calendar = Some(c))
-    def coord(la: Double, lo: Double, p: Double, g: String): Value =
-      empty.copy(lat = Some(la), lon = Some(lo), precision = Some(p), globe = Some(g))
   }
 
   /** snaktype ∈ {value, somevalue, novalue}; value/valueType null unless

@@ -83,17 +83,14 @@ object Ivf {
     rows
   }
 
-  /** map-side nearest-cid expression over a quantized embedding column:
-    * array_min of (d2, cid) structs = lexicographic argmin with
+  /** (d2, cid) struct of one centroid against a quantized embedding
+    * column: ordering these structs is a lexicographic argmin with a
     * deterministic tie-break. */
   private def distCid(qe: Column, c: Column): Column =
     // named_struct keeps field names inside HOF lambdas (struct() aliases
     // are stripped there); (d2, cid) order gives lexicographic argmin
     call_function("named_struct",
       lit("d2"), qdist2(qe, c("_2")), lit("cid"), c("_1"))
-
-  private def nearestCid(qe: Column, cLit: Column): Column =
-    array_min(transform(cLit, c => distCid(qe, c)))("cid")
 
   /** Lloyd's k-means over (vec_id, embedding). Returns
     * (cid: int, centroid: array<long>) — quantized integer centroids. */

@@ -89,34 +89,10 @@ object TextAnalysis {
         sum(col("cf")).as("sum_cf"))
   }
 
-  /** Integer-exact quality metrics (chars, words, distinct words, max
-    * word length) — ratios derivable downstream. */
-  def qualityMetrics(df: DataFrame, text: Column, idCols: Column*): DataFrame = {
-    val toks = tokens(text)
-    df.select(idCols :+
-      length(text).cast("int").as("n_chars") :+
-      size(toks).as("n_words") :+
-      size(array_distinct(toks)).as("n_distinct_words") :+
-      array_max(transform(toks, w => length(w))).as("max_word_len"): _*)
-  }
-
   /** Content fingerprint: sha256 over the sorted distinct token set
     * (order-insensitive document identity; rolling-hash family). */
   def fingerprint(text: Column): Column =
     sha2(concat_ws(" ", array_sort(array_distinct(tokens(text)))), 256)
-
-  /** Longest run of equal adjacent elements in a SORTED string array —
-    * i.e. the max multiplicity of any element. Pure Column fold, so the
-    * frequency table never materializes (no explode, no shuffle). */
-  private def maxRunSorted(sortedArr: Column): Column =
-    aggregate(sortedArr,
-      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(acc.getField("prev").isNotNull && x === acc.getField("prev"),
-          acc.getField("run") + 1L).otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"), greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
 
   /** Repetition quality signals (Gopher-rule family): per document, the
     * word count, distinct-word count, max multiplicity of any single

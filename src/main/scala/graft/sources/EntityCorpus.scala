@@ -280,9 +280,25 @@ object EntityCorpus {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Encoders.product[CorpusRow].schema).parquet(path)
 
-  /** Write the corpus as a parquet table partition-friendly for reuse. */
-  def writeParquet(spark: SparkSession, n: Long, dir: String, seed: Long = 42L): Unit =
-    generate(spark, n, seed).write.mode("overwrite").parquet(dir)
+  /** The corpus a `Cli` or `Backend` argument names, with its dialect:
+    *  - `gen:<n>`: the synthetic corpus of n rows ([[generate]]);
+    *  - `dump:<path>`, or a path ending in `.gz`, `.bz2`, `.zst` or
+    *    `.zstd`: a line-JSON dump ([[readDump]]) in the dialect sniffed
+    *    from its first document ([[detectFormat]]);
+    *  - any other path: a parquet corpus table ([[readParquet]]). */
+  def open(spark: SparkSession, arg: String): (DataFrame, DumpFormat) =
+    if (arg.startsWith("gen:")) (generate(spark, arg.drop(4).toLong).toDF(), DumpFormat.Fixture)
+    else dumpPath(arg) match {
+      case Some(p) => (readDump(spark, p), detectFormat(spark, p))
+      case None => (readParquet(spark, arg), DumpFormat.Fixture)
+    }
+
+  /** The dump file or directory a corpus argument names, if it names a
+    * dump (see [[open]]). */
+  def dumpPath(arg: String): Option[String] =
+    if (arg.startsWith("dump:")) Some(arg.drop(5))
+    else if (Seq(".gz", ".bz2", ".zst", ".zstd").exists(arg.endsWith)) Some(arg)
+    else None
 
   /** S1: scan a raw MediaWiki-style JSON entity dump (one entity per
     * line; Wikidata dumps wrap lines in a JSON array with trailing

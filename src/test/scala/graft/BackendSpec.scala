@@ -236,4 +236,73 @@ class BackendSpec extends AnyFunSuite {
         (n, i, f.rows, f.stats("subj").min, f.stats("subj").max) }).toSet)
     checkProduced(out, mydir.toString, "gen:600", r)
   }
+
+  /** A 600-row parquet corpus table and a fresh dir holding copies of
+    * the named fixture specs. */
+  private def parquetCorpus(): String = {
+    val corpus = Files.createTempDirectory("graft-backend-corpus").toString + "/corpus"
+    EntityCorpus.generate(spark, 600).write.parquet(corpus)
+    corpus
+  }
+  private def specsCopy(names: String*): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("graft-backend-specs")
+    names.foreach(n => Files.copy(Paths.get(s"$specsDir/$n.json"), dir.resolve(s"$n.json")))
+    dir
+  }
+  private def spec(n: String) = SpecJson.parse(Files.readString(Paths.get(s"$specsDir/$n.json")))
+
+  test("the run record's commit step holds the A1 counters and writes the committed triples") {
+    val corpus = parquetCorpus()
+    val out = Files.createTempDirectory("graft-backend-record").toString
+    val r = Backend.run(spark, specsCopy("humans", "english-labels", "nothing").toString, corpus, out)
+    val commit = r.record.step("commit")
+    r.produced.foreach { n =>
+      assert((commit.counters(s"$n.entities"), commit.counters(s"$n.statements")) ==
+        Pipeline.counters(EntityCorpus.readParquet(spark, corpus), spec(n)), n)
+    }
+    val live = SnapshotTable.snapshotAt(s"$out/triples", SnapshotTable.currentVersion(s"$out/triples"))
+      .partitions
+    val committed = r.produced.flatMap(live(_)).map(_.rows).sum
+    assert(committed > 0 && commit.metrics.outputRows == committed, commit.toString)
+    assert(commit.metrics.inputRows == 600 && r.record.step("open").metrics.jobs == 0, r.record.json)
+  }
+
+  test("concurrent workers on one session each count only their own corpus pass") {
+    val corpus = parquetCorpus()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val runs = Seq("humans", "english-labels").map { n =>
+        val out = Files.createTempDirectory("graft-backend-own").toString
+        out -> Future(Backend.run(spark, specsCopy(n).toString, corpus, out))
+      }.map { case (out, f) => out -> Await.result(f, 10.minutes) }
+      runs.foreach { case (out, r) =>
+        val count = spark.read.parquet(s"$out/_meta/db/${r.runId}/run").head().getAs[Long]("count")
+        assert(count == 600 && r.record.step("commit").metrics.inputRows == 600, r.record.json)
+      }
+    } finally pool.shutdown()
+  }
+
+  test("Backend.run reads a Wikidata-dialect dump in its own dialect") {
+    import graft.sources.{DumpFormat, WikidataJson}
+    val dir = Files.createTempDirectory("graft-backend-wikidata").toString
+    val dump = s"$dir/slice.json.zst"
+    EntityCorpus.writeZstdDump((0L until 300L).iterator
+      .map(i => WikidataJson.toDumpJson(EntityCorpus.contentFor(42L, i))), dump)
+    val names = Seq("humans", "english-labels", "scholarly-articles")
+    val out = Files.createTempDirectory("graft-backend-wikidata-out").toString
+    val r = Backend.run(spark, specsCopy(names: _*).toString, dump, out)
+    assert(r.produced.toSet == names.toSet)
+    val corpus = EntityCorpus.readDump(spark, dump)
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("subj", "pred", "obj").collect().map(t => (t.getString(0), t.getString(1), t.getString(2))).toSet
+    names.foreach { n =>
+      val expected = triples(Pipeline.triples(corpus, spec(n), format = DumpFormat.Wikidata))
+      assert(expected.size > graft.emit.TripleEmitter.prologue.size, s"$n emits only the prologue")
+      assert(triples(SnapshotTable.read(spark, s"$out/triples", partitions = Some(Seq(n)))) == expected, n)
+      val stat = r.stats.find(_.dumpId == n).get
+      assert((stat.entityCount, stat.statementCount) ==
+        Pipeline.counters(corpus, spec(n), DumpFormat.Wikidata), n)
+    }
+  }
 }
