@@ -65,8 +65,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * `corpus` is read by [[sources.EntityCorpus.open]]: `gen:<n>` (the
   * synthetic corpus), `dump:<path>` or a path ending in `.gz`, `.bz2`,
-  * `.zst` or `.zstd` (a line-JSON dump, its dialect sniffed from the
-  * first document), and any other path is a parquet corpus table.
+  * `.zst` or `.zstd` (a line-JSON dump on any Hadoop filesystem, its
+  * dialect sniffed from the first document), and any other path is a
+  * parquet corpus table.
   */
 object Backend {
 

@@ -14,8 +14,9 @@ import graft.spec.SpecJson
   *
   * `corpus` is read by [[sources.EntityCorpus.open]]: `gen:<n>`, a
   * parquet corpus table, or a line-JSON dump (`dump:<path>` or a
-  * `.gz`/`.bz2`/`.zst`/`.zstd` path, gzip/bz2/zstd) in either the fixture
-  * or the real Wikidata dump dialect — sniffed from the first line.
+  * `.gz`/`.bz2`/`.zst`/`.zstd` file or directory, on any Hadoop
+  * filesystem) in either the fixture or the real Wikidata dump dialect —
+  * sniffed from the first line.
   * `sitesFile` loads the sitelink resolution table (JSON lines or CSV:
   * site, url_pattern, lang) in place of the built-in fixture map
   * (reference `DumpRunner.java:71`).

@@ -111,12 +111,14 @@ object TextAnalysis {
     // one JIT kernel pass per row over the token array (replaces four
     // interpreted sort/fold chains per row — Kernels scaladoc; the
     // five outputs are expression-for-expression identical, DuckDB-
-    // oracled). Zero-shuffle contract unchanged.
+    // oracled). Zero-shuffle contract unchanged. The ids are carried by
+    // `*`, so an aliased or computed id column is never re-resolved.
     df.select(idCols :+ Kernels.repStats(tokens(text)).as("_rep"): _*)
-      .select(idCols.map(c => col(c.toString)) ++ Seq(
+      .select(col("*"),
         col("_rep.n_words"), col("_rep.n_distinct_words"),
         col("_rep.top_word_count"), col("_rep.n_bigrams"),
-        col("_rep.top_bigram_count")): _*)
+        col("_rep.top_bigram_count"))
+      .drop("_rep")
   }
 
   /** Linear text-classifier inference over hashed bag-of-words features

@@ -190,7 +190,11 @@ object Iter {
     * 8.7 s with AQE off + width 1 vs 6.8 s when the rounds relied on
     * that). `aqeOff` is for loops whose per-round joins ALL carry
     * [[bcast]] hints: the static plan is then already the AQE plan, and
-    * AQE would only add one scheduled query-stage job per exchange. */
+    * AQE would only add one scheduled query-stage job per exchange.
+    *
+    * The pin is session conf, not query conf: while `body` runs, a
+    * non-loop query on another thread of the same session also plans
+    * under the pinned shuffle width and AQE setting. */
   private[graft] def withLoopConf[A](spark: SparkSession, rows: Long,
                                      aqeOff: Boolean = false)(body: => A): A = {
     val target = math.max(1L, (math.max(0L, rows) - 1) / RowsPerPartition + 1)

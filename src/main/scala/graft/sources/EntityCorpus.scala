@@ -302,55 +302,26 @@ object EntityCorpus {
 
   /** S1: scan a raw MediaWiki-style JSON entity dump (one entity per
     * line; Wikidata dumps wrap lines in a JSON array with trailing
-    * commas — tolerated and stripped). gzip/bz2 ride Spark's text source
-    * codecs; `.zst`/`.zstd` files are special-cased through zstd-jni
-    * streams exactly like the reference special-cases them
-    * (`ext/ZstdDumpFile.java:17-23` — Hadoop has no portable zstd text
-    * codec). zstd dumps decode one task per file (the frame format is
-    * not splittable — same constraint as the reference's single-stream
-    * reader; for parallelism, dumps ship as many files). */
+    * commas — tolerated and stripped): one file or a directory, gzip,
+    * bzip2, `.zst` or `.zstd`, on any Hadoop filesystem, all through
+    * Spark's text source. The read option registers parquet's zstd-jni
+    * codec for `.zstd`, a file Spark would otherwise split and fail to
+    * seek in. A compressed file decodes as one task, like the reference's
+    * one stream (`ext/ZstdDumpFile.java:17-23`). Each line is cleaned once,
+    * behind a generator that a pushed filter cannot see through. */
   def readDump(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val lines: DataFrame =
-      if (path.endsWith(".zst") || path.endsWith(".zstd") ||
-          zstdFilesIn(path).nonEmpty) readZstdLines(spark, path)
-      else spark.read.text(path)
-        .select(col("value"), input_file_name().as("path"))
-    lines
-      .select(regexp_replace(trim(col("value")), ",$", "").as("content"), col("path"))
-      .filter(length(col("content")) > 1 && col("content").startsWith("{"))
+    val content = transform(array(trim(col("value"))), line =>
+      when(line.endsWith(","), line.substr(lit(1), length(line) - 1)).otherwise(line))
+    spark.read.option("io.compression.codecs", "org.apache.parquet.hadoop.codec.ZstandardCodec")
+      .text(path)
+      .select(input_file_name().as("path"),
+        explode(filter(content, c => length(c) > 1 && c.startsWith("{"))).as("content"))
       .select(
         lit("dump").as("repo"),
         col("path"),
         sha2(concat(col("path"), col("content")), 256).substr(1, 40).as("commit"),
         lit("wikidata-json").as("lang"),
         col("content"))
-  }
-
-  private def zstdFilesIn(path: String): Seq[String] = {
-    val f = new java.io.File(path)
-    if (f.isDirectory)
-      f.listFiles().toSeq.map(_.getPath).filter(p => p.endsWith(".zst") || p.endsWith(".zstd"))
-    else if (f.getName.endsWith(".zst") || f.getName.endsWith(".zstd")) Seq(path)
-    else Nil
-  }
-
-  /** (value, path) lines from zstd-compressed dump file(s): binaryFiles +
-    * a streaming ZstdInputStream per file (never materializes the
-    * decompressed payload). */
-  private def readZstdLines(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = zstdFilesIn(path)
-    require(files.nonEmpty, s"no .zst/.zstd files under $path")
-    spark.sparkContext.parallelize(files, files.size).flatMap { p =>
-      val in = new com.github.luben.zstd.ZstdInputStream(
-        new java.io.BufferedInputStream(new java.io.FileInputStream(p), 1 << 20))
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8), 1 << 20)
-      Iterator.continually(reader.readLine()).takeWhile { l =>
-        if (l == null) reader.close(); l != null
-      }.map(l => (l, p))
-    }.toDF("value", "path")
   }
 
   /** test/bench helper: write lines as one .zst file (zstd-jni stream). */

@@ -293,6 +293,9 @@ class BackendSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-backend-wikidata-out").toString
     val r = Backend.run(spark, specsCopy(names: _*).toString, dump, out)
     assert(r.produced.toSet == names.toSet)
+    // the dump's 300 lines count as input, as a .json.gz of them would
+    val count = spark.read.parquet(s"$out/_meta/db/${r.runId}/run").head().getAs[Long]("count")
+    assert(count == 300 && r.record.step("commit").metrics.inputRows == 300, r.record.json)
     val corpus = EntityCorpus.readDump(spark, dump)
     def triples(df: org.apache.spark.sql.DataFrame) =
       df.select("subj", "pred", "obj").collect().map(t => (t.getString(0), t.getString(1), t.getString(2))).toSet

@@ -195,6 +195,40 @@ class EnginePathsSpec extends AnyFunSuite {
     assert(direct == viaReal)
   }
 
+  test("S1: a dump line is cleaned once and without a regex in the triples plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dump-plan").toString
+    EntityCorpus.writeDump(spark, 20, s"$dir/dump", "gzip")
+    val plan = Pipeline.triples(EntityCorpus.readDump(spark, s"$dir/dump"), specNamed("humans.json"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("regexp_replace"), plan)
+    assert("trim\\(".r.findAllIn(plan).size == 1, s"line cleanup not evaluated once:\n$plan")
+  }
+
+  test("S1: a zstd dump file is read whole, as one partition, below maxPartitionBytes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-zstd-split").toString
+    val lines = (0L until 300L).map(i => EntityCorpus.contentFor(42L, i))
+    val (zst, zstd) = lines.splitAt(150)
+    new java.io.File(s"$dir/both").mkdirs()
+    EntityCorpus.writeZstdDump(zst.iterator, s"$dir/both/a.json.zst")
+    EntityCorpus.writeZstdDump(zstd.iterator, s"$dir/both/b.json.zstd")
+    val smallest = Seq("a.json.zst", "b.json.zstd").map(f => new java.io.File(s"$dir/both/$f").length).min
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (smallest / 4).toString)
+    try {
+      Seq(s"$dir/both/a.json.zst" -> (1, zst), s"$dir/both/b.json.zstd" -> (1, zstd),
+          s"$dir/both" -> (2, lines)).foreach { case (path, (files, expected)) =>
+        val dump = EntityCorpus.readDump(spark, path)
+        assert(dump.rdd.getNumPartitions == files, path)
+        val content = dump.select("content").collect().map(_.getString(0))
+        assert(content.length == expected.size && content.toSet == expected.toSet, path)
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("J2: sites table loads from a file and changes sitelink resolution") {
     val dir = java.nio.file.Files.createTempDirectory("sites").toString
     EntityCorpus.writeSites(spark, s"$dir/sites")

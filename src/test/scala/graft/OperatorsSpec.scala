@@ -506,6 +506,16 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"repetitionMetrics must not shuffle:\n$plan")
   }
 
+  test("repetitionMetrics carries aliased and computed id columns") {
+    import spark.implicits._
+    val df = Seq((1L, "a b a"), (2L, "x y")).toDF("doc_id", "text")
+    val got = graft.operators.TextAnalysis.repetitionMetrics(df, col("text"),
+      col("doc_id").as("id"), concat(lit("doc."), col("doc_id")))
+    assert(got.columns.toSeq.take(2) == Seq("id", "concat(doc., doc_id)"))
+    assert(got.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4))).toSet ==
+      Set((1L, "doc.1", 3L, 2L), (2L, "doc.2", 2L, 1L)))
+  }
+
   test("dedupChunks keeps only first occurrences and reassembles in order") {
     import spark.implicits._
     val df = Seq(
