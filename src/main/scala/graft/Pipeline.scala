@@ -198,20 +198,29 @@ object Pipeline {
     // J2: the site table rides as a broadcast variable (one copy per
     // executor, not per task — matters at 1000 executors)
     val sitesB = spark.sparkContext.broadcast(sites)
+    val specDefs = specArr.map(_._2)
     val emitted = rows.flatMap { case (doc, inc) =>
-      val nd = normalize(doc)
-      specArr.indices.iterator.flatMap { k =>
-        if (inc(k) && TripleEmitter.isSerializable(nd))
-          TripleEmitter.emit(specArr(k)._2, nd, sitesB.value)
-            .map(t => SpecTriple(specArr(k)._1, t.subj, t.pred, t.obj))
-        else Iterator.empty
-      }
+      emitDoc(doc, specDefs, inc, sitesB.value)((k, t) =>
+        SpecTriple(specArr(k)._1, t.subj, t.pred, t.obj))
     }
     val prologues = specs.flatMap { case (id, _) =>
       TripleEmitter.prologue.map(t => SpecTriple(id, t.subj, t.pred, t.obj))
     }
     val all = emitted.union(spark.createDataset(prologues)).toDF("specId", "subj", "pred", "obj")
     if (dedup) dedupTriples(all) else all
+  }
+
+  /** The emission of one gated document, shared by the batch and the
+    * streaming pipelines: normalized once, then each spec `k` with
+    * `inc(k)` emits its triples as `out(k, triple)`. Documents that are
+    * neither items nor properties emit nothing. */
+  private[graft] def emitDoc[T](doc: EntityDoc, specs: IndexedSeq[DumpSpec], inc: Int => Boolean,
+                                sites: TripleEmitter.Sites)(out: (Int, Triple) => T): Iterator[T] = {
+    val nd = normalize(doc)
+    specs.indices.iterator.flatMap { k =>
+      if (inc(k) && TripleEmitter.isSerializable(nd)) TripleEmitter.emit(specs(k), nd, sites).map(out(k, _))
+      else Iterator.empty
+    }
   }
 
   /** Format as N-Triples lines (SC1-SC3). */
@@ -276,42 +285,6 @@ object Pipeline {
     }.sortBy(_.bucket)
     DriverParquet.write(spark, path + "_manifest", BucketManifestSchema, manifest)
     manifest
-  }
-
-  /** P7 as a pure-Column plan (no object boundary): term triples
-    * straight off the parsed struct via explode + the native nt_escape
-    * expression — one whole-stage-codegen span from scan to output.
-    * Demonstrates the expression-only alternative to the typed flatMap;
-    * semantically identical to the emitter's term path (tested). */
-  def termTriplesSql(corpus: DataFrame, spec: DumpSpec,
-                     format: DumpFormat = DumpFormat.Fixture): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.GraftExtensions.register(spark)
-    val p = gatedDocs(corpus, Seq(spec), format)
-    val subj = concat(lit(graft.emit.Vocab.WD), col("doc.id"))
-    // nt_escape resolves through the registry (GraftExtensions.register
-    // above) — public API route to a custom Expression in Spark 4
-    def langTerm(text: Column, lang: Column): Column =
-      concat(lit("\""), call_function("nt_escape", text), lit("\"@"), lang)
-
-    def simpleTerms(field: String, pred: String): DataFrame =
-      p.select(subj.as("subj"), explode(col(s"doc.$field")).as(Seq("lang", "text")))
-        .filter(SpecCompiler.languagePredicate(spec, col("lang")))
-        .select(col("subj"), lit(pred).as("pred"), langTerm(col("text"), col("lang")).as("obj"))
-
-    val parts = Seq(
-      if (spec.labels) Some(simpleTerms("labels", graft.emit.Vocab.RDFS_LABEL)) else None,
-      if (spec.descriptions) Some(simpleTerms("descriptions", graft.emit.Vocab.SCHEMA_DESCRIPTION)) else None,
-      if (spec.aliases) Some(
-        p.select(subj.as("subj"), explode(col("doc.aliases")).as(Seq("lang", "texts")))
-          .filter(SpecCompiler.languagePredicate(spec, col("lang")))
-          .select(col("subj"), explode(col("texts")).as("text"), col("lang"))
-          .select(col("subj"), lit(graft.emit.Vocab.SKOS_ALT_LABEL).as("pred"),
-            langTerm(col("text"), col("lang")).as("obj"))) else None
-    ).flatten
-    parts.reduceOption(_ union _)
-      .getOrElse(spark.emptyDataset(org.apache.spark.sql.Encoders.product[graft.model.Model.Triple]).toDF())
-      .dropDuplicates("subj", "pred", "obj")
   }
 
   /** A1 counters for one spec, (includedEntities, includedStatements):

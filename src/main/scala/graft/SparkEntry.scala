@@ -1564,7 +1564,7 @@ object SparkEntry {
     // preceding 6h; equals the batch interval join, which is the oracle
     "q_stream_stream_join" -> { (s, dir) => implicit val sp = s; import sp.implicits._
       val joined = graft.streaming.StreamingPipeline.purchaseClickJoin(
-        s, s"$dir/events.parquet", windowMinutes = 360)
+        s, s"$dir/events.parquet", "inner", windowMinutes = 360)
       val name = "sssj" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
@@ -1591,8 +1591,8 @@ object SparkEntry {
         .map(_.asInstanceOf[java.nio.file.Path])
         .find(_.getFileName.toString.endsWith(".parquet")).get
       java.nio.file.Files.move(part, d.resolve("part-1.parquet"))
-      val joined = graft.streaming.StreamingPipeline.purchaseClickJoinLeft(
-        s, d.toString, windowMinutes = 360)
+      val joined = graft.streaming.StreamingPipeline.purchaseClickJoin(
+        s, d.toString, "left_outer", windowMinutes = 360)
       val name = "sssl" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
@@ -1618,8 +1618,8 @@ object SparkEntry {
         .map(_.asInstanceOf[java.nio.file.Path])
         .find(_.getFileName.toString.endsWith(".parquet")).get
       java.nio.file.Files.move(part, d.resolve("part-1.parquet"))
-      val joined = graft.streaming.StreamingPipeline.purchaseClickJoinFull(
-        s, d.toString, windowMinutes = 360)
+      val joined = graft.streaming.StreamingPipeline.purchaseClickJoin(
+        s, d.toString, "full_outer", windowMinutes = 360)
       val name = "sssf" + java.util.UUID.randomUUID.toString.replace("-", "")
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").start()

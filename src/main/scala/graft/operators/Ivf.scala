@@ -99,10 +99,11 @@ object Ivf {
     // is the heavy map stage — widen a narrow input once so it does not
     // run at file-count parallelism (no-op at production width)
     val qv = Par.spread(vectors).select(col("vec_id"), quantize(col("embedding")).as("qe"))
-    val n = vectors.count()
-    // per-iteration aggregates sized from the measured corpus (no-op at
-    // production scale; the assignment map stage keeps Par.spread width)
-    graft.plans.Iter.fixpoint(vectors.sparkSession, n,
+    val measured = graft.plans.Iter.measure(vectors)
+    val n = measured.rows
+    // per-iteration aggregates sized from the measured corpus bytes (no-op
+    // at production scale; the assignment map stage keeps Par.spread width)
+    graft.plans.Iter.fixpoint(vectors.sparkSession, measured.bytes,
         graft.plans.Iter.mat(initCentroidsN(vectors, k, n)))(iters) { (centroids, _) =>
       // k×dim integer distances per vector: JIT kernel, identical
       // lexicographic (d2, cid) argmin (Kernels scaladoc)

@@ -71,14 +71,15 @@ object Pq {
     val subs = Par.spread(vectors).select(col("vec_id"),
       posexplode(transform(sequence(lit(0), lit(m - 1)), j =>
         subvec(col("embedding"), j, subdim))).as(Seq("sub", "qe")))
-    val n = vectors.count()
+    val measured = graft.plans.Iter.measure(vectors)
+    val n = measured.rows
     val stride = math.max(1L, n / k)
     val books0 = graft.plans.Iter.mat(subs
       .filter(col("vec_id") % stride === 0 && col("vec_id") < stride * k)
       .select(col("sub"), (col("vec_id") / stride).cast("int").as("cid"),
         col("qe").as("centroid")))
-    // training aggregates sized from the measured corpus (Iter)
-    graft.plans.Iter.fixpoint(vectors.sparkSession, n * m, books0)(iters) { (books, _) =>
+    // training aggregates sized from the measured corpus bytes (Iter)
+    graft.plans.Iter.fixpoint(vectors.sparkSession, measured.bytes, books0)(iters) { (books, _) =>
       val bLit = bookLiteral(books)
       val sums = subs
         .select(col("sub"), nearestCid(bLit, col("sub"), col("qe")).as("cid"),

@@ -100,11 +100,11 @@ object SemDedup {
     val edges = duplicateEdges(v0, assigned, minDotQ)
     // duplicateEdges emits src < dst — provably self-loop-free, so CC
     // skips the singleton pass (it would re-run the pair join). CC's
-    // staging/loop aggregates are sized from the measured corpus
+    // staging/loop aggregates are sized from the measured corpus bytes
     // (Iter.withLoopConf — no-op at production scale; the pair stage's
     // explicit repartition keeps its cluster width regardless).
-    val nV = vectors.count()
-    val groups = graft.plans.Iter.withLoopConf(vectors.sparkSession, nV) {
+    val vBytes = graft.plans.Iter.measure(vectors).bytes
+    val groups = graft.plans.Iter.withLoopConf(vectors.sparkSession, vBytes) {
       graft.plans.ConnectedComponents.run(edges, selfLoopFree = true)
     }
     assigned

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Iter
 
 /** EXACT set-similarity join by prefix filtering (Chaudhuri-Ganti-Kaushik
   * SSJoin 2006 / Bayardo-Ma-Srikant "Scaling up all pairs" 2007 —
@@ -46,7 +47,7 @@ object SetSim {
     // parallel tdf array rides along so the verify can MERGE the two
     // sorted sets in O(|A|+|B|) (Kernels.interSorted) instead of
     // hash-building array_intersect per candidate pair
-    val ordered = tok.join(dfc, "token")
+    val ordered = Iter.mat(tok.join(dfc, "token")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("tdf"), col("token")))).as("st"))
       .select(col("doc_id"),
@@ -54,12 +55,11 @@ object SetSim {
         transform(col("st"), x => x.getField("tdf")).as("otd"),
         size(col("st")).cast("long").as("n"))
       .withColumn("p",
-        (col("n") - expr(s"($tauPpm * n + 999999) div 1000000") + 1L).cast("int"))
-      .localCheckpoint(false)
-    // materialized doc count picks the verify strategy below (broadcast
-    // vs shuffle); the action also warms the checkpoint the prefix
-    // stream reads twice
-    val nDocs = ordered.count()
+        (col("n") - expr(s"($tauPpm * n + 999999) div 1000000") + 1L).cast("int")))
+    // the measured bytes of the doc table pick the verify strategy below
+    // (broadcast vs shuffle); the action also warms the checkpoint the
+    // prefix stream reads twice
+    val docBytes = Iter.measure(ordered).bytes
     // Prefix rows WITH position: the PPJoin candidate filters (Xiao et
     // al. 2008, "Efficient similarity joins for near duplicate
     // detection" — public algorithm) prune inside the join, before the
@@ -105,14 +105,13 @@ object SetSim {
       Kernels.setBlob(col("otd"), col("ots")).as("pa"), col("n").as("n_u"))
     val ordB = ordered.select(col("doc_id").as("v"),
       Kernels.setBlob(col("otd"), col("ots")).as("pb"), col("n").as("n_v"))
-    // attach joins: broadcast the doc-level side when its MEASURED row
-    // count is small (the candidate stream then never shuffles); at
-    // scale both joins fall back to their shuffle path
-    def side(df: DataFrame): DataFrame =
-      if (nDocs <= 2000000L) broadcast(df) else df
+    // attach joins: broadcast each doc-level side when the doc table's
+    // measured bytes (its token arrays outweigh the packed blob) fit the
+    // session's broadcast threshold — the candidate stream then never
+    // shuffles; otherwise both joins keep their shuffle path
     cand0.distinct()
-      .join(side(ordA), Seq("u"))
-      .join(side(ordB), Seq("v"))
+      .join(Iter.bcast(ordA, docBytes), Seq("u"))
+      .join(Iter.bcast(ordB, docBytes), Seq("v"))
       .withColumn("inter", Kernels.interPacked(col("pa"), col("pb")))
       .withColumn("jac_ppm", expr("inter * 1000000 div (n_u + n_v - inter)"))
       .where(col("jac_ppm") >= tauPpm)

@@ -49,18 +49,18 @@ object Betweenness {
     val e = Iter.mat(edges.select(col(c(0)).cast("long").as("src"),
         col(c(1)).cast("long").as("dst"))
       .where(col("src") =!= col("dst")).distinct())
-    val eRows = Iter.count(e)
+    val eBytes = Iter.measure(e).bytes
 
     // forward BFS: settled (s, v, dist, sigma); per level record the
     // shortest-path-DAG edges (s, pv, v, lvl) with lvl = dist(v)
     val state0 = Iter.mat(sources.toDF("s").select(col("s").cast("long").as("s")).distinct()
       .select(col("s"), col("s").as("v"), lit(0).as("dist"), lit(1L).as("sigma")))
-    val nSources = Iter.count(state0)
-    // state/DAG bound: |S|·|E| rows worst case — sizes loop width and
-    // gates the per-round state broadcasts
+    val nSources = Iter.measure(state0).rows
+    // state/DAG bound: |S|·|E| edge-wide rows worst case — sizes loop
+    // width and gates the per-round state broadcasts
     val stBound =
-      if (eRows > Long.MaxValue / math.max(1L, nSources)) Long.MaxValue
-      else math.max(1L, nSources) * eRows
+      if (eBytes > Long.MaxValue / math.max(1L, nSources)) Long.MaxValue
+      else math.max(1L, nSources) * eBytes
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, stBound)
     // forward: (settled, frontier, DAG edges so far, levels, more)
     type Fwd = (DataFrame, DataFrame, Option[DataFrame], Int, Boolean)

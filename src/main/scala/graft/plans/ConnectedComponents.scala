@@ -49,12 +49,12 @@ object ConnectedComponents {
     // the CC stage dropped ~2-5 s once the input became a leaf).
     val e0 = Iter.mat(input.where(col(a) =!= col(b))
       .select(col(a), col(b)).distinct())
-    // the order-insensitive edge-set signature (count, hash) detects
-    // convergence; its first action materializes e0, and its row count
-    // sizes the loop's shuffle width (no-op at production scale)
-    val sig0 = Iter.signature(e0)
-    val (e, _) = Iter.fixpoint(edges.sparkSession, sig0._1, e0)(
-      maxIter, Iter.Until.Unchanged(Iter.signature, Some(sig0)),
+    // the order-insensitive edge-set measure (rows, bytes, hash) detects
+    // convergence; its first action materializes e0, and its bytes size
+    // the loop's shuffle width (no-op at production scale)
+    val m0 = Iter.measure(e0)
+    val (e, _) = Iter.fixpoint(edges.sparkSession, m0.bytes, e0)(
+      maxIter, Iter.Until.Unchanged(Iter.measure, Some(m0)),
       fail = Some(_ => new IllegalStateException(
         s"ConnectedComponents did not converge in maxIter=$maxIter rounds; " +
           "raise maxIter (rounds grow with log of the component diameter)"))) { (e, _) =>

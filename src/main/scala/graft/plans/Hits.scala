@@ -35,10 +35,10 @@ object Hits {
     require(iters >= 1, s"iters=$iters")
     val e = Iter.mat(edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long")).distinct())
-    val eRows = Iter.count(e) // sizes the loop width + state broadcasts
+    val eBytes = Iter.measure(e).bytes // sizes the loop width + state broadcasts
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eBytes)
     def normalized(raw: DataFrame, valueCol: String): DataFrame = {
       // raw: (id, v) — join the one-row L1 total in by broadcast and
       // rescale; nodes absent from raw get 0
@@ -53,7 +53,7 @@ object Hits {
     }
     // uniform hub start; the first normalization absorbs the constant
     val init = (nodes.withColumn("hub", lit(scale)), nodes.withColumn("auth", lit(0L)))
-    val ((hub, auth), _) = Iter.fixpoint(e.sparkSession, eRows, init)(iters, aqeOff = true) {
+    val ((hub, auth), _) = Iter.fixpoint(e.sparkSession, eBytes, init)(iters, aqeOff = true) {
       case ((hub, _), _) =>
         val authRaw = e.join(bc(hub.select(col("id").as("src"), col("hub"))), "src")
           .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("v"))

@@ -41,31 +41,32 @@ object HyperBall {
     * always contains the node itself via its init registers). */
   def registers(edges: DataFrame, rounds: Int, b: Int = 4): DataFrame = {
     require(rounds >= 0 && rounds <= 64, s"rounds=$rounds")
-    val (e, rows, regs0) = staged(edges, b)
-    Iter.fixpoint(e.sparkSession, rows, regs0)(rounds, aqeOff = true) {
-      (regs, _) => grow(e, rows, regs)
+    val (e, bytes, regs0) = staged(edges, b)
+    Iter.fixpoint(e.sparkSession, bytes, regs0)(rounds, aqeOff = true) {
+      (regs, _) => grow(e, bytes, regs)
     }._1
   }
 
   /** The edge staging, materialized ONCE (the caller's plan may be an
     * aggregation; un-checkpointed it re-executed in EVERY round's
-    * join), the register-state row bound (|E|·2^b: sizes the loop
-    * width and gates the state broadcast) and the round-0 registers. */
+    * join), the register-state byte bound (|E|·2^b rows as wide as an
+    * edge: sizes the loop width and gates the state broadcast) and the
+    * round-0 registers. */
   private def staged(edges: DataFrame, b: Int): (DataFrame, Long, DataFrame) = {
     val e = Iter.mat(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val rows = Iter.count(e) << b
+    val bytes = Iter.measure(e).bytes << b
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val (reg, rho) = Sketch.regRho(col("id"), b)
-    (e, rows, Iter.mat(nodes.select(col("id"), reg.as("reg"), rho.as("rho"))))
+    (e, bytes, Iter.mat(nodes.select(col("id"), reg.as("reg"), rho.as("rho"))))
   }
 
   /** One round: ball(v) absorbs ball(u) along v→u — one equi-join on
     * the head, one partial-aggregable max; registers only ever grow. */
-  private def grow(e: DataFrame, rows: Long, regs: DataFrame): DataFrame = {
-    val fromNbr = e.join(Iter.bcast(regs, rows), e("dst") === regs("id"))
+  private def grow(e: DataFrame, bytes: Long, regs: DataFrame): DataFrame = {
+    val fromNbr = e.join(Iter.bcast(regs, bytes), e("dst") === regs("id"))
       .select(e("src").as("id"), col("reg"), col("rho"))
     Iter.mat(regs.union(fromNbr).groupBy("id", "reg").agg(max("rho").as("rho")))
   }
@@ -90,16 +91,16 @@ object HyperBall {
     * row per node: (id, ball_estimate, harmonic_ppm). */
   def harmonicCentrality(edges: DataFrame, maxDepth: Int, b: Int = 4): DataFrame = {
     require(maxDepth >= 1, s"maxDepth=$maxDepth")
-    val (e, rows, regs0) = staged(edges, b)
+    val (e, bytes, regs0) = staged(edges, b)
     // ONE propagation (the registers loop), snapshotting the per-round
     // estimate — maxDepth rounds total, not maxDepth²
     def estOf(regs: DataFrame, r: Int): DataFrame =
       Sketch.estimateFromRegs(regs, Seq("id"), b)
         .select(col("id"), col("estimate").as(s"est$r"))
-    val ((_, acc), _) = Iter.fixpoint(e.sparkSession, rows, (regs0, estOf(regs0, 0)))(
+    val ((_, acc), _) = Iter.fixpoint(e.sparkSession, bytes, (regs0, estOf(regs0, 0)))(
       maxDepth, aqeOff = true) { case ((regs, acc), r) =>
-      val next = grow(e, rows, regs)
-      (next, acc.join(Iter.bcast(estOf(next, r + 1), rows >> b), "id"))
+      val next = grow(e, bytes, regs)
+      (next, acc.join(Iter.bcast(estOf(next, r + 1), bytes >> b), "id"))
     }
     val terms = (1 to maxDepth).map(d =>
       expr(s"((est$d - est${d - 1}) * 1000000) div $d"))

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** The round loop of the iterative plan family (CC / SCC / k-core /
   * PageRank / BFS-style relaxations …): [[fixpoint]] runs every
@@ -13,21 +14,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * width and AQE setting a loop runs under change only its per-round
   * fixed cost, never a result.
   *
+  * '''One size rule.''' Every fast path of the family is decided
+  * here, from bytes MEASURED by [[measure]] (the same single job that
+  * counts a materialized input's rows) against the session's own byte
+  * settings; no row or core count enters either decision:
+  *  - [[bcast]] hints a per-round join side only when its bytes fit
+  *    `spark.sql.autoBroadcastJoinThreshold` (≤ 0: never), so a session
+  *    that turns broadcasts off gets none from the loops either;
+  *  - a loop's shuffle width is its bytes over
+  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
+  *    coalesces post-shuffle partitions to.
+  *
   * '''Loop conf scope.''' At production scale each round's shuffle
   * dominates and the session defaults are right. On a working set of a
-  * few thousand rows a round's compute is sub-millisecond but pays a
-  * fixed overhead: with AQE on every Exchange materializes as its own
+  * few MB a round's compute is sub-millisecond but pays a fixed
+  * overhead: with AQE on every Exchange materializes as its own
   * query-stage job, and every exchange runs
   * `spark.sql.shuffle.partitions` tasks however few rows flow through
-  * it. A fixpoint therefore sizes its shuffle width from the MEASURED
-  * row count of its materialized input (never from the core count):
-  * when `rows / RowsPerPartition` is below the current width it pins
-  * `spark.sql.shuffle.partitions` to that quotient (≥ 1), and with
-  * `aqeOff` also disables AQE, for the loop's rounds; a large working
-  * set (or [[SessionWidth]]) leaves the session conf alone. The scope
-  * is per session and reference-counted: loops that overlap on one
-  * session (nested or on other threads) each apply their own values on
-  * entry, an exiting loop re-applies those of the latest loop still
+  * it. A fixpoint therefore sizes its shuffle width from the measured
+  * bytes of its materialized input: when that width is below the
+  * current one it pins `spark.sql.shuffle.partitions` to it (≥ 1), and
+  * with `aqeOff` also disables AQE, for the loop's rounds; a large
+  * working set (or [[SessionWidth]]) leaves the session conf alone. The
+  * scope is per session and reference-counted: loops that overlap on
+  * one session (nested or on other threads) each apply their own values
+  * on entry, an exiting loop re-applies those of the latest loop still
   * running, and the last loop to exit restores the values the first
   * one saved. The returned plans execute after the scope, under the
   * session's own conf.
@@ -43,7 +54,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * '''Change detection.''' [[Until.Unchanged]] runs one signature
   * action per round and compares it with the one carried from the last
   * round (the initial state's comes first, inside the scope, unless the
-  * caller already paid for it, e.g. with the count that sized the loop). A round that
+  * caller already paid for it, e.g. with the measure that sized the loop). A round that
   * leaves the signature unchanged changed nothing, so the loop returns
   * the state it carried (already materialized) and drops the round's.
   *
@@ -54,31 +65,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Iter {
 
-  /** Default per-partition row target for loop state: small enough
-    * that one task's state stays far under execution memory, large
-    * enough that a sub-100k-row working set runs single-task. */
-  val RowsPerPartition = 262144L
-
-  /** `rows` for a loop that keeps the session's shuffle width. */
+  /** `bytes` for a loop that keeps the session's shuffle width. */
   val SessionWidth = Long.MaxValue
 
-  /** Row bound under which a loop-state frame is explicitly broadcast
-    * in per-round joins (narrow (id, long…) rows → ≤ ~tens of MB).
-    * The hint is gated on the MEASURED input size, never assumed: at
-    * production scale the state exceeds the bound and every join keeps
-    * its scale-out shuffle path. Rationale (guide §2.4/§3.1): a round's
-    * state⋈edges join already ends as a broadcast join at runtime via
-    * AQE when the state is tiny — but only after materializing each
-    * shuffle stage as its own scheduled job (~3-5 extra jobs per round,
-    * the dominant cost of a sub-second round). The explicit hint gives
-    * the same plan with the stage-materialization jobs skipped, and
-    * leaves the big cached edge side entirely exchange-free. */
-  val BroadcastRows = 1000000L
-
-  /** Broadcast-hint `df` when the loop's measured working set is under
-    * [[BroadcastRows]]; identity otherwise. */
-  def bcast(df: DataFrame, rows: Long): DataFrame =
-    if (rows >= 0 && rows <= BroadcastRows) org.apache.spark.sql.functions.broadcast(df) else df
+  /** Broadcast-hint `df` when `bytes`, a measured bound on its size,
+    * fits the session's `spark.sql.autoBroadcastJoinThreshold`;
+    * identity otherwise, and always when the threshold is ≤ 0 (an
+    * explicit hint would override the session's "no broadcasts"). At
+    * production scale the state exceeds the threshold and every join
+    * keeps its scale-out shuffle path. Rationale (guide §2.4/§3.1): a
+    * round's state⋈edges join already ends as a broadcast join at
+    * runtime via AQE when the state is tiny — but only after
+    * materializing each shuffle stage as its own scheduled job (~3-5
+    * extra jobs per round, the dominant cost of a sub-second round).
+    * The explicit hint gives the same plan with the
+    * stage-materialization jobs skipped, and leaves the big cached edge
+    * side entirely exchange-free. A per-node state of a few longs is
+    * bounded by twice the edge bytes (nodes ≤ 2·edges, and an edge row
+    * is as wide), which is the bound most loops pass. */
+  def bcast(df: DataFrame, bytes: Long): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit > 0 && bytes >= 0 && bytes <= limit) org.apache.spark.sql.functions.broadcast(df)
+    else df
+  }
 
   /** Per-round lineage truncation + fresh attribute ids, zero-copy: a
     * reliable eager `checkpoint` when a checkpoint dir is set, else a
@@ -92,20 +101,33 @@ object Iter {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(false))
 
-  /** Row count in ONE job: rows are counted as they stream, with no
-    * partial-aggregate exchange (which under AQE `Dataset.count`
+  /** What ONE job learns about a frame: its row count, the bytes of its
+    * rows in Spark's binary row format (what a broadcast or a shuffle
+    * of them moves), and an order-insensitive content hash (xor of the
+    * rows' xxhash64, so independent of partitioning and row order).
+    * Equal measures of a loop's state before and after a round mean the
+    * round changed nothing. */
+  final case class Measure(rows: Long, bytes: Long, hash: Long)
+
+  /** [[Measure]] `df` in ONE job: rows are summed as they stream, with
+    * no partial-aggregate exchange (which under AQE `Dataset.count`
     * schedules as a job of its own). On a [[mat]] leaf it is the
     * cheapest signature action, and it materializes the leaf. */
-  def count(df: DataFrame): Long = org.apache.spark.sql.GraftLeaf.rows(df).count()
-
-  /** Order-insensitive content signature in ONE job: (row count, xor of
-    * the rows' xxhash64). Xor is commutative and overflow-free, so the
-    * value is independent of partitioning and row order. */
-  def signature(df: DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    org.apache.spark.sql.GraftLeaf.rows(df.select(xxhash64(df.columns.map(c => col(s"`$c`")): _*)))
-      .aggregate((0L, 0L))((a, r) => (a._1 + 1, a._2 ^ r.getLong(0)),
-        (x, y) => (x._1 + y._1, x._2 ^ y._2))
+  def measure(df: DataFrame): Measure = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow, XXH64}
+    val schema = df.schema
+    val (rows, bytes, hash) = org.apache.spark.sql.GraftLeaf.rows(df).mapPartitions { it =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      var n, b, h = 0L
+      it.foreach { r =>
+        val u = r match { case u: UnsafeRow => u; case o => toUnsafe(o) }
+        n += 1
+        b += u.getSizeInBytes
+        h ^= XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.getSizeInBytes, 42L)
+      }
+      Iterator.single((n, b, h))
+    }.fold((0L, 0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2, x._3 ^ y._3))
+    Measure(rows, bytes, hash)
   }
 
   /** When a [[fixpoint]] stops before its round budget runs out. */
@@ -125,14 +147,14 @@ object Iter {
 
   /** Run `step(state, round)` (round = 0, 1, …) from `init` until the
     * loop settles per `until` or `maxRounds` rounds have run, inside the
-    * loop conf scope sized from `rows` (see the object doc). When the
+    * loop conf scope sized from `bytes` (see the object doc). When the
     * budget ends an unsettled [[Until.Done]]/[[Until.Unchanged]] loop,
     * `fail` (if given) builds the exception to throw from the last
     * state. Returns the final state and the number of rounds run. */
-  def fixpoint[S](spark: SparkSession, rows: Long, init: S)(
+  def fixpoint[S](spark: SparkSession, bytes: Long, init: S)(
       maxRounds: Int, until: Until[S] = Until.Budget, aqeOff: Boolean = false,
       fail: Option[S => Throwable] = None)(step: (S, Int) => S): (S, Int) =
-    withLoopConf(spark, rows, aqeOff) {
+    withLoopConf(spark, bytes, aqeOff) {
       var state = init
       var rounds = 0
       var sig: Any = until match {
@@ -176,8 +198,10 @@ object Iter {
     if (p.aqeOff) spark.conf.set(AqeKey, "false") else restore(spark, AqeKey, s.aqe)
   }
 
-  /** Run `body` with the shuffle width derived from `rows` (the
-    * materialized input's row count) and, with `aqeOff`, AQE disabled.
+  /** Run `body` with the shuffle width derived from `bytes` (the
+    * materialized input's measured bytes over the session's
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) and, with
+    * `aqeOff`, AQE disabled.
     * No-op when the derived width would not shrink the current one (the
     * session's, or an enclosing loop's) — the production configuration
     * always wins at scale. Outside this object only SemDedup uses it,
@@ -195,9 +219,10 @@ object Iter {
     * The pin is session conf, not query conf: while `body` runs, a
     * non-loop query on another thread of the same session also plans
     * under the pinned shuffle width and AQE setting. */
-  private[graft] def withLoopConf[A](spark: SparkSession, rows: Long,
+  private[graft] def withLoopConf[A](spark: SparkSession, bytes: Long,
                                      aqeOff: Boolean = false)(body: => A): A = {
-    val target = math.max(1L, (math.max(0L, rows) - 1) / RowsPerPartition + 1)
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val target = math.max(1L, (math.max(0L, bytes) - 1) / advisory + 1)
     val pin = saved.synchronized {
       val current = spark.conf.getOption(PartsKey).flatMap(_.toIntOption).getOrElse(200)
       if (target >= current) None

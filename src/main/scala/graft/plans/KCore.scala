@@ -38,9 +38,10 @@ object KCore {
       .distinct())
     // early exit at a fixpoint (a round that deletes nothing): remaining
     // rounds are no-ops, so the result still equals the fully-unrolled
-    // oracle
-    val (e, _) = Iter.fixpoint(edges.sparkSession, Iter.SessionWidth, e0)(
-      rounds, Iter.Until.Unchanged(Iter.count)) { (e, _) =>
+    // oracle. The edges only shrink, so e0's bytes size the loop width.
+    val m0 = Iter.measure(e0)
+    val (e, _) = Iter.fixpoint(edges.sparkSession, m0.bytes, e0)(
+      rounds, Iter.Until.Unchanged(Iter.measure, Some(m0))) { (e, _) =>
       val keep = e.groupBy("a").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("a").as("kid"))
       Iter.mat(e.join(keep, col("a") === col("kid"), "left_semi")

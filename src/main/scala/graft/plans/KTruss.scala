@@ -68,14 +68,14 @@ object KTruss {
     val e0 = Iter.mat(input.where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct())
-    val n0 = Iter.count(e0) // materialized input sizes the loop width
-    // state (edges, edge count): the count is the round's signature and
-    // gates the next round's broadcast
-    val ((e, _), _) = Iter.fixpoint(edges.sparkSession, n0, (e0, n0))(
-      rounds, Iter.Until.Unchanged((s: (DataFrame, Long)) => s._2)) { case ((e, n), _) =>
+    val m0 = Iter.measure(e0) // materialized input sizes the loop width
+    // state (edges, their measure): the measure is the round's signature
+    // and gates the next round's broadcast (kept edges ⊆ edges)
+    val ((e, _), _) = Iter.fixpoint(edges.sparkSession, m0.bytes, (e0, m0))(
+      rounds, Iter.Until.Unchanged((s: (DataFrame, Iter.Measure)) => s._2)) { case ((e, m), _) =>
       val keepEdges = support(e).where(col("sup") >= k - 2).select(col("u"), col("v"))
-      val next = Iter.mat(e.join(Iter.bcast(keepEdges, n), Seq("u", "v"), "left_semi"))
-      (next, Iter.count(next))
+      val next = Iter.mat(e.join(Iter.bcast(keepEdges, m.bytes), Seq("u", "v"), "left_semi"))
+      (next, Iter.measure(next))
     }
     e.join(support(e), Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))

@@ -36,17 +36,17 @@ object LabelProp {
     val und = Iter.mat(edges.select(col("a"), col("b"))
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       .where(col("a") =!= col("b")).distinct())
-    val undRows = Iter.count(und) // sizes loop width + state broadcast
-    Iter.fixpoint(edges.sparkSession, undRows, seeds.select(col("id"), col("label")))(
+    val undBytes = Iter.measure(und).bytes // sizes loop width + state broadcast
+    Iter.fixpoint(edges.sparkSession, undBytes, seeds.select(col("id"), col("label")))(
       rounds, aqeOff = true) { (labels, _) =>
-      val neigh = und.join(Iter.bcast(labels, undRows), und("b") === labels("id"))
+      val neigh = und.join(Iter.bcast(labels, undBytes), und("b") === labels("id"))
         .groupBy(und("a").as("nid"), col("label"))
         .agg(count(lit(1)).as("n"))
       // plurality with smallest-label tie-break: max over (n, -label)
       val upd = neigh.groupBy("nid")
         .agg(max(struct(col("n"), negate(col("label")).as("nl"))).as("w"))
         .select(col("nid").as("id"), negate(col("w.nl")).as("label"))
-      Iter.mat(labels.as("l").join(Iter.bcast(upd.as("u"), undRows), Seq("id"), "left")
+      Iter.mat(labels.as("l").join(Iter.bcast(upd.as("u"), undBytes), Seq("id"), "left")
         .select(col("id"), coalesce(col("u.label"), col("l.label")).as("label")))
     }._1
   }

@@ -46,9 +46,10 @@ object Louvain {
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct())
     val comm = communities.toDF("id", "comm")
-    val m = canon.count()
+    val cm = Iter.measure(canon)
+    val m = cm.rows
     // per-round state joins broadcast when the measured graph is tiny
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * m)
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * cm.bytes)
     val deg = canon.select(col("u").as("id")).unionAll(canon.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("k"))
     val sigtot = deg.join(comm, "id").groupBy(col("comm").as("c"))
@@ -125,11 +126,11 @@ object Louvain {
   /** [[localMoveRoundWeighted]] core over an ALREADY-canonical weighted
     * edge frame with a precomputed total weight `m` — lets the
     * multi-level driver loop skip the per-round re-canonicalization
-    * and m-aggregate (both loop-invariant within a level). `rowsBound`
+    * and m-aggregate (both loop-invariant within a level). `bytesBound`
     * gates the per-round broadcast hints (Iter.bcast). */
   private def moveRoundCanon(canon: DataFrame, m: Long, communities: DataFrame,
-                             rowsBound: Long = Long.MaxValue): DataFrame = {
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, rowsBound)
+                             bytesBound: Long = Long.MaxValue): DataFrame = {
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, bytesBound)
     val comm = communities.toDF("id", "comm")
     val loops = canon.where(col("u") === col("v"))
       .select(col("u").as("id"), (col("w") * 2L).as("k"))
@@ -214,24 +215,24 @@ object Louvain {
       // total weight and edge count are loop-invariant WITHIN a level —
       // hoisted out of the rounds (the round previously re-aggregated
       // canon and re-ran the m action every round)
-      val gRows = Iter.count(g)
+      val gBytes = Iter.measure(g).bytes
       val mW = g.agg(sum(col("w"))).first().getLong(0)
       val comm0 = Iter.mat(g.select(col("u").as("id")).unionAll(g.select(col("v").as("id")))
         .distinct().select(col("id"), col("id").as("comm")))
       // state: (assignment, nodes the last round moved, any round moved)
       type Level = (DataFrame, Long, Boolean)
-      val ((comm, _, anyMove), _) = Iter.fixpoint(spark, gRows, (comm0, 1L, false): Level)(
+      val ((comm, _, anyMove), _) = Iter.fixpoint(spark, gBytes, (comm0, 1L, false): Level)(
         maxRoundsPerLevel, Iter.Until.Done((l: Level) => l._2 == 0), aqeOff = true) {
         case ((comm, _, anyMove), _) =>
-          val r = Iter.mat(moveRoundCanon(g, mW, comm, 2 * gRows))
-          val moved = Iter.count(r.where(col("moved")))
+          val r = Iter.mat(moveRoundCanon(g, mW, comm, 2 * gBytes))
+          val moved = Iter.measure(r.where(col("moved"))).rows
           if (moved == 0) (comm, 0L, anyMove)
           else (Iter.mat(r.select(col("id"), col("new_comm").as("comm"))), moved, true)
       }
       levelMoved = anyMove
       if (anyMove) {
         mapping = Iter.mat(mapping.join(
-            Iter.bcast(comm.select(col("comm").as("mcomm"), col("id").as("comm0")), 2 * gRows),
+            Iter.bcast(comm.select(col("comm").as("mcomm"), col("id").as("comm0")), 2 * gBytes),
             mapping("comm") === col("comm0"))
           .select(mapping("id"), col("mcomm").as("comm")))
         g = Iter.mat(coarsen(g, comm).select(col("cu").as("u"), col("cv").as("v"), col("w")))

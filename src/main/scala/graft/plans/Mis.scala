@@ -78,13 +78,13 @@ object Mis {
       .where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct())
-    val eRows = Iter.count(e0) // sizes loop width
+    val eBytes = Iter.measure(e0).bytes // sizes loop width
     val all = Iter.mat(edges.select(col(c(0)).cast("long").as("id"))
       .unionAll(edges.select(col(c(1)).cast("long").as("id")))
       .distinct())
     val mis0 = all.sparkSession.emptyDataFrame.selectExpr("CAST(NULL AS LONG) AS id").limit(0)
     // state: (active edges, active nodes, active count, MIS so far)
-    val ((_, _, _, mis), _) = Iter.fixpoint(all.sparkSession, eRows, (e0, all, Iter.count(all), mis0))(
+    val ((_, _, _, mis), _) = Iter.fixpoint(all.sparkSession, eBytes, (e0, all, Iter.measure(all).rows, mis0))(
       maxRounds, Iter.Until.Done((s: (DataFrame, DataFrame, Long, DataFrame)) => s._3 == 0),
       fail = Some(s => new IllegalArgumentException(
         s"Mis.run: ${s._3} nodes still active after $maxRounds rounds — " +
@@ -96,7 +96,7 @@ object Mis {
         (Iter.mat(e.join(next.select(col("id").as("u")), Seq("u"), "left_semi")
             .join(next.select(col("id").as("v")), Seq("v"), "left_semi")
             .select(col("u"), col("v"))),
-          next, Iter.count(next),
+          next, Iter.measure(next).rows,
           Iter.mat(mis.unionAll(st.where(col("status") === "mis").select(col("id")))))
     }
     all.join(mis.withColumn("in_mis", lit(true)), Seq("id"), "left")

@@ -30,27 +30,28 @@ object PageRank {
   def run(spark: SparkSession, edges: DataFrame, iters: Int,
           scale: Long = 1000000000000L): DataFrame = {
     val e = Iter.mat(edges.select(col("src"), col("dst")).distinct())
-    val eRows = Iter.count(e) // sizes loop width + state broadcasts
+    val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcasts
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    val n = Iter.count(nodes)
+    val n = Iter.measure(nodes).rows
     // degree table is loop-invariant: materialize once instead of
     // re-aggregating it from e inside every iteration's plan
     val deg = Iter.mat(e.groupBy("src").agg(count(lit(1)).as("deg")))
     val base = (scale * 15L) / (100L * n)
-    iterate(e, eRows, deg, "r div deg", nodes, lit(base),
+    iterate(e, eBytes, deg, "r div deg", nodes, lit(base),
       nodes.withColumn("r", lit(scale / n)), iters)
   }
 
   /** `iters` rounds of rank ← teleport + 85% of the contributions
     * `contribution` (an expression over r and the degree table's
     * column) sent along e; `targets` (id, …) is every node's row, kept
-    * through the round. State broadcasts are gated on 2·|E|. */
-  private def iterate(e: DataFrame, eRows: Long, deg: DataFrame, contribution: String,
+    * through the round. State broadcasts are gated on twice the edge
+    * bytes. */
+  private def iterate(e: DataFrame, eBytes: Long, deg: DataFrame, contribution: String,
                       targets: DataFrame, teleport: Column, init: DataFrame,
                       iters: Int): DataFrame = {
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eRows)
-    Iter.fixpoint(e.sparkSession, eRows, init)(iters, aqeOff = true) { (rank, _) =>
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, 2 * eBytes)
+    Iter.fixpoint(e.sparkSession, eBytes, init)(iters, aqeOff = true) { (rank, _) =>
       val contrib = e.join(bc(rank), e("src") === rank("id"))
         .join(bc(deg), "src")
         .select(col("dst").as("id"), expr(contribution).as("c"))
@@ -81,13 +82,13 @@ object PageRank {
     val e = Iter.mat(edges.select(col(c(0)).as("src"), col(c(1)).as("dst"),
         col(c(2)).cast("long").as("w"))
       .groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    val eRows = Iter.count(e)
+    val eBytes = Iter.measure(e).bytes
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
-    val n = Iter.count(nodes)
+    val n = Iter.measure(nodes).rows
     val deg = Iter.mat(e.groupBy("src").agg(sum(col("w")).as("wdeg")))
     val base = (scale * 15L) / (100L * n)
-    iterate(e, eRows, deg, "(r * w) div wdeg", nodes, lit(base),
+    iterate(e, eBytes, deg, "(r * w) div wdeg", nodes, lit(base),
       nodes.withColumn("r", lit(scale / n)), iters)
   }
 
@@ -97,27 +98,28 @@ object PageRank {
     * recommendation / neighborhood-expansion workhorse on a KG. Same
     * fixed-point integer arithmetic and per-iteration shuffle shape as
     * [[run]] (one equi-join + one partial-aggregable hash agg + one
-    * left join back); the seed flag is a broadcast join (seed sets are
-    * small by definition). Seeds outside the graph are ignored;
+    * left join back); the seed flag is a broadcast join while the seed
+    * set's bytes fit the session's threshold ([[Iter.bcast]]). Seeds outside the graph are ignored;
     * dangling mass drops as in [[run]]; init mass `scale/|S|` on seeds.
     *
     * @return (id, rank_scaled) in units of 1/scale */
   def personalized(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
                    iters: Int, scale: Long = 1000000000000L): DataFrame = {
     val e = Iter.mat(edges.select(col("src"), col("dst")).distinct())
-    val eRows = Iter.count(e)
+    val eBytes = Iter.measure(e).bytes
     val nodes = Iter.mat(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     val seed = Iter.mat(seeds.select(col("id")).distinct()
       .join(nodes, Seq("id"), "left_semi"))
-    val ns = Iter.count(seed)
+    val sm = Iter.measure(seed)
+    val ns = sm.rows
     require(ns > 0, "personalized PageRank needs at least one seed present in the graph")
     val flagged = Iter.mat(nodes
-      .join(broadcast(seed.withColumn("is_seed", lit(1L))), Seq("id"), "left_outer")
+      .join(Iter.bcast(seed.withColumn("is_seed", lit(1L)), 2 * sm.bytes), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("is_seed"), lit(0L)).as("is_seed")))
     val deg = Iter.mat(e.groupBy("src").agg(count(lit(1)).as("deg")))
     val base = (scale * 15L) / (100L * ns)
-    iterate(e, eRows, deg, "r div deg", flagged, col("is_seed") * lit(base),
+    iterate(e, eBytes, deg, "r div deg", flagged, col("is_seed") * lit(base),
       flagged.select(col("id"), col("is_seed"), (col("is_seed") * lit(scale / ns)).as("r")),
       iters)
   }

@@ -111,13 +111,13 @@ object Scc {
     * (id, color) and the round count. */
   private def propagateMax(edges: DataFrame, init: DataFrame, from: String, to: String,
                            jump: Boolean, rounds: Budget, kind: String, phase: Int,
-                           stateRows: Long): (DataFrame, Int) = {
+                           stateBytes: Long): (DataFrame, Int) = {
     // bc: broadcast-hint the (id, long, long) state side of each
     // per-round join when the measured working set is tiny (Iter.bcast
     // gate) — the edge side then streams from cache with NO exchange
     // and no AQE stage-materialization jobs (measured on the q_scc
     // fixture: ~11 scheduled jobs per round → ~4)
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, stateRows)
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, stateBytes)
     def tot(c: DataFrame): Long = c.agg(sum(col("color"))).head.getLong(0)
     val st0 = Iter.mat(init.toDF("id", "color").withColumn("far", col("id")))
     val (st, n) = rounds.loop(kind, phase, st0, Iter.Until.Unchanged(tot)) { (st, _) =>
@@ -156,13 +156,13 @@ object Scc {
 
   /** The inner fixpoints (trim + color + harvest) of one [[run]], all
     * charged to its shared `maxRounds` budget and run in the loop
-    * scope sized from the edge count. */
-  private final class Budget(spark: org.apache.spark.sql.SparkSession, eRows: Long,
+    * scope sized from the edge bytes. */
+  private final class Budget(spark: org.apache.spark.sql.SparkSession, eBytes: Long,
                              maxRounds: Int) {
     private var used = 0
     def loop[S](kind: String, phase: Int, init: S, until: Iter.Until[S])(
         step: (S, Int) => S): (S, Int) = {
-      val (s, n) = Iter.fixpoint(spark, eRows, init)(maxRounds - used, until, aqeOff = true,
+      val (s, n) = Iter.fixpoint(spark, eBytes, init)(maxRounds - used, until, aqeOff = true,
         fail = Some(_ => new IllegalStateException(
           s"Scc exceeded maxRounds=$maxRounds during $kind (phase $phase). " +
             "Rounds grow with log(diameter) under the default pointer jumping " +
@@ -210,21 +210,23 @@ object Scc {
     val allNodes = Iter.mat(raw.select(col("src").as("id"))
       .union(raw.select(col("dst").as("id")))
       .distinct())
-    val n0 = Iter.count(allNodes)
-    // materialized working-set size drives the loop shuffle width
-    // (session conf untouched at production scale) and gates the
-    // per-round broadcast hints (nodes ≤ 2·edges)
-    val eRows = Iter.count(simple)
-    val nodeBound = if (eRows > Long.MaxValue / 2) Long.MaxValue else 2 * eRows
-    def bc(df: DataFrame): DataFrame = Iter.bcast(df, nodeBound)
-    val rounds = new Budget(spark, eRows, maxRounds)
+    val nodes = Iter.measure(allNodes)
+    val n0 = nodes.rows
+    // materialized working-set bytes drive the loop shuffle width
+    // (session conf untouched at production scale) and gate the
+    // per-round broadcast hints: every per-node frame below holds at
+    // most three longs, twice the bytes of allNodes' one-long rows
+    val eBytes = Iter.measure(simple).bytes
+    val stateBytes = 2 * nodes.bytes
+    def bc(df: DataFrame): DataFrame = Iter.bcast(df, stateBytes)
+    val rounds = new Budget(spark, eBytes, maxRounds)
 
     // phase state: (edges, active nodes, active count, assigned so far);
     // every per-round join below is explicitly broadcast-hinted when
     // tiny, so the loops opt out of AQE's per-stage scheduling
     type Phase = (DataFrame, DataFrame, Long, DataFrame)
     val init: Phase = (simple, allNodes, n0, spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch))
-    Iter.fixpoint(spark, eRows, init)(
+    Iter.fixpoint(spark, eBytes, init)(
       maxPhases, Iter.Until.Done((p: Phase) => p._3 == 0), aqeOff = true,
       fail = Some(_ => new IllegalArgumentException(
         s"Scc did not converge in $maxPhases phases — raise maxPhases"))) {
@@ -249,7 +251,7 @@ object Scc {
             // the mat above) — the round's signature; an unchanged count
             // keeps the state, else the trimmed set stays lazy until the
             // per-phase Iter.mat(assigned)
-            val cyclicN = Iter.count(cyclic)
+            val cyclicN = Iter.measure(cyclic).rows
             if (cyclicN == activeN) (e, active, activeN, assigned)
             else {
               val trimmed = active.join(bc(cyclic), Seq("id"), "left_anti")
@@ -272,7 +274,7 @@ object Scc {
             // beyond any realistic node count)
             val (color, cr) = propagateMax(
               e1, active1.select(col("id"), col("id").as("color")),
-              "src", "dst", pointerJump, rounds, "color", phase, nodeBound)
+              "src", "dst", pointerJump, rounds, "color", phase, stateBytes)
 
             // ---- 3. HARVEST: backward max propagation restricted to
             // same-color edges — back(v) = max same-class id reachable
@@ -287,7 +289,7 @@ object Scc {
               .select(col("src"), col("dst")))
             val (back, hr) = propagateMax(
               ec, color.select(col("id"), col("id").as("color")),
-              "dst", "src", pointerJump, rounds, "harvest", phase, nodeBound)
+              "dst", "src", pointerJump, rounds, "harvest", phase, stateBytes)
             val members = Iter.mat(back.withColumnRenamed("color", "back")
               .join(bc(color.withColumnRenamed("id", "ci")), col("id") === col("ci"))
               .where(col("back") === col("color"))
@@ -297,7 +299,7 @@ object Scc {
             (Iter.mat(e1
               .join(bc(members.withColumnRenamed("id", "m1")), col("src") === col("m1"), "left_anti")
               .join(bc(members.withColumnRenamed("id", "m2")), col("dst") === col("m2"), "left_anti")),
-              active, Iter.count(active), assigned1.union(members), cr, hr)
+              active, Iter.measure(active).rows, assigned1.union(members), cr, hr)
           }
         // truncate the accumulated-union lineage once per phase — plain
         // unions across ~100-round phases otherwise grow the plan tree

@@ -28,12 +28,12 @@ object Sssp {
     val e = Iter.mat(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
       .groupBy("src", "dst").agg(min("w").as("w"))) // parallel edges: keep cheapest
-    val eRows = Iter.count(e) // sizes loop width + state broadcast
+    val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcast
     val spark = edges.sparkSession
     import spark.implicits._
-    Iter.fixpoint(spark, eRows, Iter.mat(Seq((source, 0L)).toDF("id", "dist")))(
+    Iter.fixpoint(spark, eBytes, Iter.mat(Seq((source, 0L)).toDF("id", "dist")))(
       rounds, aqeOff = true) { (dist, _) =>
-      val relaxed = e.join(Iter.bcast(dist, 2 * eRows), e("src") === dist("id"))
+      val relaxed = e.join(Iter.bcast(dist, 2 * eBytes), e("src") === dist("id"))
         .select(e("dst").as("id"), (col("dist") + col("w")).as("dist"))
       Iter.mat(dist.union(relaxed).groupBy("id").agg(min("dist").as("dist")))
     }._1

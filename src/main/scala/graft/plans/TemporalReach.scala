@@ -41,7 +41,7 @@ object TemporalReach {
       .select(col("src").cast("long"), col("dst").cast("long"),
         col("ts").cast("long"))
       .distinct())
-    val eRows = Iter.count(e) // sizes loop width + state broadcast
+    val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcast
     // min-monotone: Σ(count, sum) unchanged ⇔ fixpoint
     def sig(st: DataFrame): (Long, Long) = {
       val r = st.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L))).head
@@ -49,10 +49,10 @@ object TemporalReach {
     }
     val st0 = Iter.mat(seeds.toDF("id").select(col("id").cast("long")).distinct()
       .withColumn("arrival", lit(0L)))
-    Iter.fixpoint(e.sparkSession, eRows, st0)(
+    Iter.fixpoint(e.sparkSession, eBytes, st0)(
       maxHops, Iter.Until.Unchanged(sig), aqeOff = true) { (st, _) =>
       val msgs = e.join(
-          Iter.bcast(st.select(col("id").as("src"), col("arrival")), 2 * eRows), "src")
+          Iter.bcast(st.select(col("id").as("src"), col("arrival")), 2 * eBytes), "src")
         .where(col("ts") >= col("arrival"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("ts")).as("in_arrival"))

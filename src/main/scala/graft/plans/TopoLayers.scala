@@ -38,13 +38,13 @@ object TopoLayers {
     val e = Iter.mat(edges.toDF("src", "dst")
       .select(col("src").cast("long"), col("dst").cast("long"))
       .distinct())
-    val eRows = Iter.count(e) // sizes the loop shuffle width (Iter)
+    val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcasts
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     def tot(c: DataFrame): Long = c.agg(coalesce(sum(col("layer")), lit(0L)))
       .head.getLong(0)
     val st0 = Iter.mat(nodes.withColumn("layer", lit(0L)))
-    Iter.fixpoint(e.sparkSession, eRows, st0)(
+    Iter.fixpoint(e.sparkSession, eBytes, st0)(
       maxRounds, Iter.Until.Unchanged(tot), aqeOff = true,
       fail = Some(_ => new IllegalStateException(
         s"TopoLayers exceeded maxRounds=$maxRounds: the graph either has a " +
@@ -53,11 +53,11 @@ object TopoLayers {
           "(raise maxRounds; state per round stays bounded, only wall-clock grows)."))) {
       (st, _) =>
         val msgs = e.join(
-            Iter.bcast(st.select(col("id").as("src"), col("layer").as("src_layer")), 2 * eRows),
+            Iter.bcast(st.select(col("id").as("src"), col("layer").as("src_layer")), 2 * eBytes),
             "src")
           .groupBy(col("dst").as("id"))
           .agg((max(col("src_layer")) + 1L).as("in_layer"))
-        Iter.mat(st.join(Iter.bcast(msgs, 2 * eRows), Seq("id"), "left_outer")
+        Iter.mat(st.join(Iter.bcast(msgs, 2 * eBytes), Seq("id"), "left_outer")
           .select(col("id"),
             greatest(col("layer"), coalesce(col("in_layer"), col("layer"))).as("layer")))
     }._1

@@ -33,10 +33,8 @@ object StreamingPipeline {
                     sites: TripleEmitter.Sites = EntityCorpus.sites): Dataset[Triple] = {
     import spark.implicits._
     val raw = spark.readStream.schema(corpusSchema).parquet(corpusDir)
-    graft.Pipeline.includedDocs(raw, spec, excludeLexemes = true).flatMap { d =>
-      val nd = graft.Pipeline.normalize(d)
-      if (TripleEmitter.isSerializable(nd)) TripleEmitter.emit(spec, nd, sites) else Nil
-    }
+    graft.Pipeline.includedDocs(raw, spec, excludeLexemes = true)
+      .flatMap(d => graft.Pipeline.emitDoc(d, IndexedSeq(spec), _ => true, sites)((_, t) => t))
   }
 
   val eventsSchema: StructType = StructType(Seq(
@@ -167,10 +165,25 @@ object StreamingPipeline {
     * streaming face of the as-of/attribution joins. BOTH sides carry a
     * watermark and the join condition time-bounds the match window, so
     * Spark can GC each side's state as event time advances (without the
-    * interval bound, stream-stream state grows forever). Inner join:
-    * rows emit as soon as both sides arrive; equality with the batch
-    * interval join over the same files is the oracle contract. */
-  def purchaseClickJoin(spark: SparkSession, eventsDir: String,
+    * interval bound, stream-stream state grows forever). On a bounded
+    * replay the result equals the batch join of the same type over the
+    * same files (the oracle contract).
+    *
+    * `joinType` is `inner`, `left_outer` or `full_outer`:
+    *  - inner: rows emit as soon as both sides arrive;
+    *  - left_outer also reports the UNATTRIBUTED purchases, and
+    *    full_outer the orphan clicks as well. An unmatched row can only
+    *    emit once the OPPOSITE side's watermark has passed its whole
+    *    match window (Spark holds it in state until then, then emits
+    *    with nulls) — which is why both watermarks AND the time-bound
+    *    condition are mandatory for the outer joins: without them the
+    *    engine could neither GC state nor ever prove "no match will
+    *    arrive".
+    *
+    * `user_id` is coalesced across sides (an orphan click has no
+    * purchase-side user); for inner and left joins that is the
+    * purchase's own `user_id`. */
+  def purchaseClickJoin(spark: SparkSession, eventsDir: String, joinType: String,
                         windowMinutes: Int = 360,
                         watermark: String = "2 hours"): DataFrame = {
     val purchases = eventsStream(spark, eventsDir)
@@ -185,67 +198,8 @@ object StreamingPipeline {
     purchases.join(clicks,
       col("user_id") === col("c_user") &&
         col("cts") >= col("pts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
-        col("cts") <= col("pts"))
-      .select(col("purchase_id"), col("click_id"), col("user_id"))
-  }
-
-  /** Stream-stream LEFT OUTER interval join — attribution that also
-    * reports the UNATTRIBUTED purchases. The outer side is the hard
-    * streaming surface: a purchase with no click can only emit once the
-    * click-side watermark has passed its whole match window (Spark
-    * holds it in state until then, then emits with nulls) — which is
-    * exactly why both watermarks AND the time-bound condition are
-    * mandatory here, not just advisable: without them the engine could
-    * neither GC state nor ever prove "no match will arrive". On a
-    * bounded replay the result equals the batch left join (the oracle
-    * contract). */
-  def purchaseClickJoinLeft(spark: SparkSession, eventsDir: String,
-                            windowMinutes: Int = 360,
-                            watermark: String = "2 hours"): DataFrame = {
-    val purchases = eventsStream(spark, eventsDir)
-      .where(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
-      .withWatermark("pts", watermark)
-    val clicks = eventsStream(spark, eventsDir)
-      .where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", watermark)
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("cts") >= col("pts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
         col("cts") <= col("pts"),
-      "left_outer")
-      .select(col("purchase_id"), col("click_id"), col("user_id"))
-  }
-
-  /** Stream-stream FULL OUTER interval join — completes the outer-join
-    * matrix (inner / left / full): unattributed purchases AND orphan
-    * clicks both surface with nulls, each emitting only once the
-    * OPPOSITE side's watermark has provably passed its match window —
-    * so this exercises the both-sides null-emission + state-GC path
-    * the left join only exercises on one side. `user_id` is coalesced
-    * across sides (an orphan click has no purchase-side user). On a
-    * bounded replay the result equals the batch FULL join (the oracle
-    * contract, via the same flush-sentinel technique as the left
-    * variant). */
-  def purchaseClickJoinFull(spark: SparkSession, eventsDir: String,
-                            windowMinutes: Int = 360,
-                            watermark: String = "2 hours"): DataFrame = {
-    val purchases = eventsStream(spark, eventsDir)
-      .where(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
-      .withWatermark("pts", watermark)
-    val clicks = eventsStream(spark, eventsDir)
-      .where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("cts"))
-      .withWatermark("cts", watermark)
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("cts") >= col("pts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
-        col("cts") <= col("pts"),
-      "full_outer")
+      joinType)
       .select(col("purchase_id"), col("click_id"),
         coalesce(col("user_id"), col("c_user")).as("user_id"))
   }

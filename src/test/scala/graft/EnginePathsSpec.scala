@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.EntityCorpus
 import graft.spec.SpecJson
-import graft.emit.Vocab
 
 class EnginePathsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -66,30 +65,6 @@ class EnginePathsSpec extends AnyFunSuite {
     assert(got == graft.emit.NTriples.escape("a\"b\\c\nd"))
     // type check: non-string argument rejected at analysis
     intercept[Exception](spark.sql("SELECT nt_escape(42)").collect())
-  }
-
-  test("expression-only term path equals the flatMap emitter's term triples") {
-    val corpus = EntityCorpus.generate(spark, 400).toDF().cache()
-    Seq("humans.json", "english-labels.json").foreach { f =>
-      val spec = specNamed(f)
-      val sqlPath = Pipeline.termTriplesSql(corpus, spec)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      val termPreds = Set(Vocab.RDFS_LABEL, Vocab.SCHEMA_DESCRIPTION, Vocab.SKOS_ALT_LABEL)
-      val emitterPath = Pipeline.triples(corpus, spec)
-        .filter(col("pred").isin(termPreds.toSeq: _*))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(sqlPath == emitterPath, s"$f: sql-only term path diverges " +
-        s"(${(sqlPath -- emitterPath).take(2)} / ${(emitterPath -- sqlPath).take(2)})")
-    }
-    corpus.unpersist()
-  }
-
-  test("expression-only term path stays whole-stage-codegen (no object boundary)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-termplan").toString
-    EntityCorpus.generate(spark, 50).toDF().write.mode("overwrite").parquet(dir)
-    val plan = Pipeline.termTriplesSql(spark.read.parquet(dir), specNamed("humans.json"))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("DeserializeToObject"), "term SQL path fell back to objects")
   }
 
   test("S1: compressed line-JSON dump scan round-trips (gzip, trailing commas)") {

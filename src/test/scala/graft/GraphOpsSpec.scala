@@ -906,13 +906,15 @@ class GraphOpsSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    // a loop's width is its bytes over the advisory partition size
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1048576")
     val aqe = s.conf.getOption("spark.sql.adaptive.enabled")
     val aIn, bIn, aOut = new CountDownLatch(1)
     def await(l: CountDownLatch): Unit = assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
     def parts = s.conf.get("spark.sql.shuffle.partitions")
     // A (width 3, AQE off) enters; B (width 1) enters; A exits; B exits
     val a = Future {
-      graft.plans.Iter.fixpoint(s, 600000L, ())(1, aqeOff = true) { (_, _) =>
+      graft.plans.Iter.fixpoint(s, 5L << 19, ())(1, aqeOff = true) { (_, _) => // 2.5 MiB
         assert(parts == "3" && s.conf.get("spark.sql.adaptive.enabled") == "false")
         aIn.countDown(); await(bIn)
       }
@@ -920,7 +922,7 @@ class GraphOpsSpec extends AnyFunSuite {
     }
     val b = Future {
       await(aIn)
-      graft.plans.Iter.fixpoint(s, 1000L, ())(1) { (_, _) =>
+      graft.plans.Iter.fixpoint(s, 1000L, ())(1) { (_, _) => // 1000 bytes
         bIn.countDown(); await(aOut)
         assert(parts == "1") // A's exit keeps the running loop's width
       }
@@ -929,6 +931,48 @@ class GraphOpsSpec extends AnyFunSuite {
     Await.result(b, 2.minutes)
     assert(parts == "8")
     assert(s.conf.getOption("spark.sql.adaptive.enabled") == aqe)
+  }
+
+  test("Iter.bcast: a frame of few but wide rows over the byte threshold stays unhinted") {
+    import graft.plans.Iter
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }.isDefined
+    // 640 rows of 32 KiB: far under any row bound, but ~20 MiB against the
+    // session's 10 MiB autoBroadcastJoinThreshold
+    val wide = Iter.mat(spark.range(640).select(col("id"), repeat(lit("x"), 32768).as("blob")))
+    val m = Iter.measure(wide)
+    assert(m.rows == 640 && m.bytes > (20L << 20), m)
+    assert(!hinted(Iter.bcast(wide, m.bytes)))
+    val narrow = Iter.mat(spark.range(640).toDF("id"))
+    assert(hinted(Iter.bcast(narrow, Iter.measure(narrow).bytes)))
+  }
+
+  test("fixpoint: a session with broadcasts off plans no broadcast in its loops") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // broadcast joins in the plans PageRank's rounds materialize
+    def broadcastJoins(s: org.apache.spark.sql.SparkSession): Int = {
+      val seen = new java.util.concurrent.atomic.AtomicInteger
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          seen.addAndGet(qe.executedPlan.collect { case j: BroadcastHashJoinExec => j }.size)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      s.listenerManager.register(l)
+      try {
+        import s.implicits._
+        val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+        PageRank.run(s, edges, iters = 3).collect()
+        org.apache.spark.ListenerBusProbe.drain(s.sparkContext)
+      } finally s.listenerManager.unregister(l)
+      seen.get
+    }
+    assert(broadcastJoins(spark.newSession()) > 0) // the hinted plans are seen
+    val off = spark.newSession()
+    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(broadcastJoins(off) == 0)
   }
 
   test("fixpoint: budget policies — stop quietly, or fail with the loop's message") {

@@ -886,6 +886,33 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("setSimJoin: doc sides over the byte threshold are not broadcast, however few the docs") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    val s = spark.newSession()
+    import s.implicits._
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "65536")
+    // 20 near-duplicate pairs of 300 random 20-char tokens: 40 docs, but
+    // ~0.4 MB of token blobs per doc side against a 64 KiB threshold
+    val rnd = new scala.util.Random(17)
+    val docs = (0L until 20L).flatMap { k =>
+      val base = Seq.fill(300)(rnd.alphanumeric.take(20).mkString)
+      Seq((2 * k, base.mkString(" ")),
+        (2 * k + 1, (base.drop(10) ++ Seq.fill(10)(rnd.alphanumeric.take(20).mkString)).mkString(" ")))
+    }
+    val got = graft.operators.SetSim.setSimJoin(
+      docs.toDF("doc_id", "text"), col("doc_id"), col("text"), 500000L)
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (0L until 20L).map(k => (2 * k, 2 * k + 1)).toSet)
+    object Plans extends AdaptiveSparkPlanHelper
+    val docSides = Plans.collect(got.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec =>
+        (if (j.buildSide == BuildLeft) j.left else j.right).output.map(_.name)
+    }.filter(cols => cols.contains("pa") || cols.contains("pb"))
+    assert(docSides.isEmpty, docSides)
+  }
+
   test("vocabCoverage: OOV occurrences vs a deterministic top-k vocab; boundary tie-break") {
     import spark.implicits._
     // counts: a=4, b=3, c=2, d=2, e=1 — vocab of 3 must be {a, b, c}
@@ -1376,7 +1403,7 @@ class OperatorsSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sf/events.parquet").exists)
     val joined = graft.streaming.StreamingPipeline.purchaseClickJoin(
-      spark, s"$sf/events.parquet", windowMinutes = 360)
+      spark, s"$sf/events.parquet", "inner", windowMinutes = 360)
     val name = "sssjt" + java.util.UUID.randomUUID.toString.replace("-", "")
     val q = joined.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
