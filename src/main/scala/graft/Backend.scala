@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.spec.{DumpSpec, SpecJson}
 import graft.obs.RunRecord
@@ -44,7 +44,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * One corpus pass per worker pass, like the reference's `DumpRunner`:
   * the A1 counters (entities, statements) are `observe` metrics on the
-  * multiplexed scan, read from an `Observation` after the commit; the
+  * multiplexed scan ([[Pipeline.triplesCounted]]), read after the
+  * commit from the map stage of the one dedup shuffle that the commit's
+  * jobs share; the
   * per-file lineage manifest (`_meta/manifests/<runId>`) is built on the
   * driver from the committed snapshot's footer stats (row count and
   * `subj` min/max; `part` = the file's ordinal in its spec partition);
@@ -220,11 +222,8 @@ object Backend {
       // committed as ONE atomic REPLACE-PARTITIONS snapshot (only the
       // claimed specId partitions are swapped; completed ones keep their
       // files; concurrent workers serialize through the manifest CAS).
-      // The A1 counters ride the same pass as observed metrics; the
-      // observation name is run-unique because concurrent workers share
-      // one session.
+      // The A1 counters ride the same pass as observed metrics.
       val specs = claimed.map { case (name, _, spec) => name -> spec }.toSeq
-      val counters = Observation(s"graft_backend_counters_$runId")
       // Range-partition on (specId, subj) rather than hashing specId
       // alone: one-partition-per-spec would funnel a whole spec's output
       // through ONE task (a 100 TB spec = one writer), while ranging over
@@ -239,8 +238,9 @@ object Backend {
       // come straight off their footer stats — no recount job
       if (specs.isEmpty) Map.empty[String, Seq[sources.SnapshotTable.FileEntry]]
       else {
+        val pass = Pipeline.triplesCounted(corpus, specs, format)
         val snap = rec.step("commit")(sources.SnapshotTable.commit(
-          Pipeline.triplesMultiplexed(corpus, specs, format = format, counters = Some(counters))
+          pass.triples
             .repartitionByRange(col("specId"), col("subj"))
             .sortWithinPartitions("specId", "subj"),
           table, "specId", replace = true, statsCols = Seq("subj"),
@@ -248,7 +248,7 @@ object Backend {
           // partition (a re-opened spec must never keep serving triples
           // computed from the previous spec/corpus version)
           clearPartitions = specs.map(_._1)))
-        val observed = Pipeline.observedCounters(counters, specs)
+        val observed = pass.counters
         rec.addCounters("commit", specs.flatMap { case (n, _) =>
           Seq(s"$n.entities" -> observed(n)._1, s"$n.statements" -> observed(n)._2)
         })

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan-inspection main: prints the formatted physical plan of the KG
-  * pipeline and selected queries (scan pushdown / broadcast / codegen
-  * verification). Usage: runMain graft.Explain [queryName ...] */
+/** Plan-inspection main: prints the formatted physical plans of the KG
+  * pipeline (before and after its dedup) and selected queries (scan
+  * pushdown / broadcast / codegen verification).
+  * Usage: runMain graft.Explain [queryName ...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -19,6 +20,10 @@ object Explain {
     val humans = graft.spec.SpecJson.parse(new String(
       getClass.getResourceAsStream("/specs/humans.json").readAllBytes(), "UTF-8"))
 
+    // the deduplicated triples are a leaf over their shared dedup
+    // shuffle; the scan → gate → parse → emit shape is the pre-dedup plan
+    println("==== KG pipeline (humans.json), pre-dedup ====")
+    Pipeline.triples(spark.read.parquet(dir), humans, dedup = false).explain("formatted")
     println("==== KG pipeline (humans.json) ====")
     Pipeline.triples(spark.read.parquet(dir), humans).explain("formatted")
 

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SharedShuffle}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.CollectMetricsExec
 import org.apache.spark.sql.functions._
 import graft.model.Model._
 import graft.spec.{DumpSpec, SpecCompiler}
@@ -129,31 +131,33 @@ object Pipeline {
               format: DumpFormat = DumpFormat.Fixture): DataFrame =
     triplesMultiplexed(corpus, Seq(LoneSpec -> spec), sites, dedup, format).drop("specId")
 
-  /** Exact (specId,s,p,o)-set dedup, one hash pass. `dropDuplicates`
-    * plans a partial+final hash aggregate; the map-side partial builds a
-    * large UnsafeRow hash table per task for only ~1.4× row reduction on
-    * this workload (near-unique keys) — measured 10.3 s → 8.7 s at
-    * 32t/8M entities by shuffling the raw triples once (hash of the FULL
-    * row — uniform by construction, no hot key) and deduping in a single
-    * per-partition set pass (guide §1.2 step 1 / §2.3: partial
-    * aggregation only pays when it reduces rows).
-    * Memory bound: per-task state = the partition's unique triples; the
-    * repartition has no fixed partition count, so AQE sizes post-shuffle
-    * partitions to `advisoryPartitionSizeInBytes` — the set is bounded
-    * by the advisory size, the same knob that bounds every other
-    * reduce-side task state. Output set identical (golden/oracle-tested). */
-  private[graft] def dedupTriples(all: DataFrame): DataFrame = {
-    val spark = all.sparkSession
-    import spark.implicits._
+  /** Exact (specId,s,p,o)-set dedup, one hash pass, built ONCE per
+    * returned frame ([[org.apache.spark.sql.SharedShuffle]]): every sink
+    * over the frame reads the map output the first one wrote, so scan →
+    * gate → parse → emit runs once however many sinks there are.
+    * `dropDuplicates` would plan a partial+final hash aggregate whose
+    * map-side partial builds a large UnsafeRow hash table per task for
+    * only ~1.4× row reduction on this workload (near-unique keys) —
+    * measured 10.3 s → 8.7 s at 32t/8M entities by shuffling the raw
+    * triples once (hash of the FULL row — uniform by construction, no
+    * hot key) and deduping in a single per-partition set pass (guide
+    * §1.2 step 1 / §2.3: partial aggregation only pays when it reduces
+    * rows). The set holds the shuffle's binary rows; a row is copied
+    * only when it is inserted.
+    * Memory bound: per-task state = the unique triples of one of the
+    * session's `spark.sql.shuffle.partitions` reducers (AQE's initial
+    * count; sinks downstream keep their own AQE-sized exchanges). The
+    * set does not spill. Output set identical (golden/oracle-tested). */
+  private[graft] def dedupTriples(all: DataFrame): SharedShuffle = {
     val keys = Seq("specId", "subj", "pred", "obj")
     require(all.columns.toSeq == keys, s"dedupTriples: expected exactly $keys, got ${all.columns.toSeq}")
-    all.repartition(keys.map(col): _*)
-      .as[(String, String, String, String)]
-      .mapPartitions { it =>
-        val seen = new java.util.HashSet[(String, String, String, String)]()
-        it.filter(seen.add)
+    SharedShuffle(all) { it =>
+      val seen = new java.util.HashSet[UnsafeRow]()
+      it.filter { r =>
+        val row = r.asInstanceOf[UnsafeRow]
+        !seen.contains(row) && seen.add(row.copy())
       }
-      .toDF(keys: _*)
+    }
   }
 
   /** S3 multiplexed scan: N specs share ONE pass. Per-spec include bits
@@ -162,17 +166,46 @@ object Pipeline {
     * spec) pair is emitted — items and properties only; lexemes go to
     * [[errors]] and other document types emit nothing. No caching
     * needed — truly one scan. `dedup` keeps one copy of each (specId,
-    * s, p, o) row.
-    *
-    * `counters`: when given, the A1 counters of every spec ride the same
-    * pass as `observe` metrics on the gated rows — the 2N aggregates of
-    * [[countersMultiplexed]], read back with [[observedCounters]] once an
-    * action over the result has finished. */
+    * s, p, o) row, through one shuffle that every action over the
+    * returned frame shares ([[dedupTriples]]). */
   def triplesMultiplexed(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
                          sites: TripleEmitter.Sites = EntityCorpus.sites,
                          dedup: Boolean = true,
-                         format: DumpFormat = DumpFormat.Fixture,
-                         counters: Option[Observation] = None): DataFrame = {
+                         format: DumpFormat = DumpFormat.Fixture): DataFrame = {
+    val all = emitted(corpus, specs, sites, format, observeCounters = false)
+    if (dedup) dedupTriples(all).frame else all
+  }
+
+  /** [[triplesMultiplexed]]' deduplicated triples with the A1 counters
+    * of every spec riding their one pass: `counters` holds, once an
+    * action over `triples` has run that pass, what [[countersMultiplexed]]
+    * computes over the whole corpus. */
+  private[graft] final class Counted(pass: SharedShuffle, specs: Seq[(String, DumpSpec)]) {
+    def triples: DataFrame = pass.frame
+
+    /** Throws until an action over `triples` has run the shared pass;
+      * later actions skip that pass and do not count again. */
+    def counters: Map[String, (Long, Long)] = {
+      if (!pass.mapped) throw new IllegalStateException(
+        "counters read before an action over the triples ran their pass")
+      val metrics = pass.mapPlan.collectFirst { case c: CollectMetricsExec => c.collectedMetrics }.get
+      countersOf(specs, metrics.get)
+    }
+  }
+
+  /** [[triplesMultiplexed]] (deduplicated), counting as it goes. */
+  private[graft] def triplesCounted(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
+                                    format: DumpFormat = DumpFormat.Fixture): Counted =
+    new Counted(dedupTriples(emitted(corpus, specs, EntityCorpus.sites, format,
+      observeCounters = true)), specs)
+
+  /** The multiplexed pass up to emission: (specId, subj, pred, obj) rows
+    * with duplicates, the constant prologue of every spec unioned in.
+    * `observeCounters` observes the 2N aggregates of
+    * [[countersMultiplexed]] over the gated rows. */
+  private def emitted(corpus: DataFrame, specs: Seq[(String, DumpSpec)],
+                      sites: TripleEmitter.Sites, format: DumpFormat,
+                      observeCounters: Boolean): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // any spec wants it → full-parse + deserialize once; the cheap gate
@@ -181,10 +214,10 @@ object Pipeline {
       keep = Seq(format.filterDoc(col("content")).as("fdoc")))
     // every row a spec includes passes the gate, so the aggregates over
     // the gated rows equal countersMultiplexed's over the whole corpus;
-    // they are named c<i> by position for observedCounters
-    val observed = counters.fold(gated) { obs =>
+    // Counted reads them back by position
+    val observed = if (!observeCounters) gated else {
       val aggs = counterAggs(specs, col("fdoc")).zipWithIndex.map { case (a, i) => a.as(s"c$i") }
-      gated.observe(obs, aggs.head, aggs.tail: _*)
+      gated.observe("graft_counters", aggs.head, aggs.tail: _*)
     }
     // the gate already is a lone spec's include bit, so N=1 needs no
     // `fdoc` and the optimizer prunes its parse when nothing observes it
@@ -206,8 +239,7 @@ object Pipeline {
     val prologues = specs.flatMap { case (id, _) =>
       TripleEmitter.prologue.map(t => SpecTriple(id, t.subj, t.pred, t.obj))
     }
-    val all = emitted.union(spark.createDataset(prologues)).toDF("specId", "subj", "pred", "obj")
-    if (dedup) dedupTriples(all) else all
+    emitted.union(spark.createDataset(prologues)).toDF("specId", "subj", "pred", "obj")
   }
 
   /** The emission of one gated document, shared by the batch and the
@@ -308,15 +340,6 @@ object Pipeline {
       .select(format.filterDoc(col("content")).as("doc"))
     val aggs = counterAggs(specs, col("doc"))
     countersOf(specs, base.agg(aggs.head, aggs.tail: _*).head().get)
-  }
-
-  /** The counters a `triplesMultiplexed(..., counters = Some(obs))` pass
-    * observed, in [[countersMultiplexed]]'s shape. Blocks until an action
-    * over that pass has finished. */
-  def observedCounters(obs: Observation,
-                       specs: Seq[(String, DumpSpec)]): Map[String, (Long, Long)] = {
-    val metrics = obs.get
-    countersOf(specs, i => metrics(s"c$i"))
   }
 
   /** Per spec k, the conditional aggregates at 2k (entities) and 2k+1

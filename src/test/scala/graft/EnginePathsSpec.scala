@@ -32,16 +32,41 @@ class EnginePathsSpec extends AnyFunSuite {
     assert(!planAll.contains("Contains(content"), planAll)
   }
 
+  /** The shuffle dependencies in the lineage of `df`'s rows. */
+  private def shuffleDeps(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.ShuffleDependency[_, _, _]] = {
+    def walk(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+      rdd.dependencies.flatMap { d =>
+        (d match {
+          case s: org.apache.spark.ShuffleDependency[_, _, _] => Seq(s)
+          case _ => Nil
+        }) ++ walk(d.rdd)
+      }
+    walk(org.apache.spark.sql.GraftLeaf.rows(df))
+  }
+
   test("single-spec triples plan one dedup Exchange behind the scan pre-gate") {
-    val plan = Pipeline.triples(EntityCorpus.generate(spark, 200).toDF(), specNamed("humans.json"))
-      .queryExecution.executedPlan.toString
-    assert("Exchange ".r.findAllIn(plan).size == 1, s"expected exactly one Exchange:\n$plan")
-    assert(plan.contains("Exchange hashpartitioning"), plan)
+    val corpus = EntityCorpus.generate(spark, 200).toDF()
+    val humans = specNamed("humans.json")
+    // scan → gate → parse → emit: no shuffle, the pre-gate ahead of the
+    // gate parse
+    val plan = Pipeline.triples(corpus, humans, dedup = false).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"pre-dedup plan shuffles:\n$plan")
     val filterLine = plan.linesIterator.find(_.contains("Filter "))
       .getOrElse(fail(s"no Filter in plan:\n$plan"))
     val iContains = filterLine.indexOf("Contains(content")
     assert(iContains >= 0, s"pre-gate Contains missing from filter:\n$filterLine")
     assert(filterLine.indexOf("from_json") > iContains, s"gate parse not behind the pre-gate:\n$filterLine")
+    // the dedup: exactly one shuffle in the triples' lineage, hashed on
+    // all four columns (specId is "" for a lone spec) into the session's
+    // shuffle width
+    val triples = Pipeline.triples(corpus, humans)
+    val deps = shuffleDeps(triples)
+    assert(deps.size == 1, s"expected exactly one shuffle, got ${deps.size}")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(deps.head.partitioner.numPartitions == width)
+    val misplaced = triples.filter(spark_partition_id() =!=
+      pmod(hash(lit(""), col("subj"), col("pred"), col("obj")), lit(width))).count()
+    assert(misplaced == 0, s"$misplaced triples off their (specId, subj, pred, obj) hash partition")
   }
 
   test("overlap resolution plans as an equi-anti-join on doc_id (no nested loop)") {
@@ -173,8 +198,8 @@ class EnginePathsSpec extends AnyFunSuite {
   test("S1: a dump line is cleaned once and without a regex in the triples plan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dump-plan").toString
     EntityCorpus.writeDump(spark, 20, s"$dir/dump", "gzip")
-    val plan = Pipeline.triples(EntityCorpus.readDump(spark, s"$dir/dump"), specNamed("humans.json"))
-      .queryExecution.executedPlan.toString
+    val plan = Pipeline.triples(EntityCorpus.readDump(spark, s"$dir/dump"), specNamed("humans.json"),
+        dedup = false).queryExecution.executedPlan.toString
     assert(!plan.contains("regexp_replace"), plan)
     assert("trim\\(".r.findAllIn(plan).size == 1, s"line cleanup not evaluated once:\n$plan")
   }

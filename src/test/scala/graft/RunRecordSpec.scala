@@ -29,6 +29,39 @@ class RunRecordSpec extends AnyFunSuite {
     assert(r.record.step("open").metrics.jobs == 0, r.record.json)
   }
 
+  test("Cli.run: the sinks after the first reuse its dedup shuffle, with the same outputs") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-cli-reuse").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBusProbe.drain(sc)
+    sc.addSparkListener(counter)
+    val r = try {
+      val r = Cli.run(spark, "humans.json", s"$dir/out", "gen:600", None)
+      ListenerBusProbe.drain(sc)
+      r
+    } finally sc.removeSparkListener(counter)
+    // 8 when the table write ran scan → emit → dedup again
+    assert(jobs.get <= 6, s"Cli.run launched ${jobs.get} jobs")
+    assert(r.record.step("write.table").metrics.inputRows == 0, r.record.json)
+    assert(r.record.step("write.nt").metrics.inputRows == 600, r.record.json)
+    // outputs: the undeduplicated triples made distinct by Spark, and the
+    // errors channel as its own plan computes it
+    val corpus = EntityCorpus.generate(spark, 600).toDF()
+    val spec = graft.spec.SpecJson.parse(new String(
+      getClass.getResourceAsStream("/specs/humans.json").readAllBytes(), "UTF-8"))
+    val reference = Pipeline.triples(corpus, spec, dedup = false).distinct()
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+      a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    assert(same(spark.read.text(s"$dir/out/nt"), Pipeline.ntLines(reference).toDF("value")))
+    assert(same(spark.read.parquet(s"$dir/out/triples").select("subj", "pred", "obj"), reference))
+    assert(same(spark.read.parquet(s"$dir/out/_errors"), Pipeline.errors(corpus, spec).toDF()))
+    assert(r.triples == reference.count())
+  }
+
   test("runs leave the listener set and the caller's local properties as they were") {
     val sc = spark.sparkContext
     val dir = Files.createTempDirectory("graft-record-listeners").toString
@@ -36,7 +69,6 @@ class RunRecordSpec extends AnyFunSuite {
     Files.copy(java.nio.file.Paths.get("src/test/resources/specs/nothing.json"),
       specs.resolve("nothing.json"))
     // first runs create the session-level listeners Spark adds lazily
-    // (the first Observation registers the session's ExecutionListenerBus)
     Cli.run(spark, "humans.json", s"$dir/warm-cli", "gen:100", None)
     Backend.run(spark, specs.toString, "gen:100", s"$dir/warm-backend")
     sc.setJobGroup("outer-group", "outer description")
