@@ -55,15 +55,6 @@ object Pipeline {
     )
   }
 
-  /** union scan pre-gate for a multiplexed pass: a row can serve SOME
-    * spec only if it passes SOME spec's pre-gate; usable only when
-    * EVERY spec has one (an include-all spec gates nothing). */
-  private def prefilterMulti(specs: Seq[DumpSpec], format: DumpFormat): Column = {
-    val all = specs.map(SpecCompiler.prefilterTokens(_, format))
-    if (all.isEmpty || all.exists(_.isEmpty)) lit(true)
-    else all.flatMap(_.get).distinct.map(t => col("content").contains(t)).reduce(_ || _)
-  }
-
   private[graft] def docColumns = Seq(
     col("doc.id").as("id"), col("doc.type").as("etype"), col("doc.datatype").as("datatype"),
     col("doc.labels").as("labels"), col("doc.descriptions").as("descriptions"),
@@ -80,7 +71,7 @@ object Pipeline {
                                excludeLexemes: Boolean = true,
                                keep: Seq[Column] = Nil): DataFrame =
     corpus
-      .filter(prefilterMulti(specs, format) &&
+      .filter(SpecCompiler.prefilter(specs, col("content"), format) &&
         format.gate(col("content"), d =>
           (if (excludeLexemes) d("type") =!= "lexeme" else lit(true)) &&
             specs.map(SpecCompiler.includePredicate(_, d)).reduce(_ || _)))
@@ -242,8 +233,8 @@ object Pipeline {
     emitted.union(spark.createDataset(prologues)).toDF("specId", "subj", "pred", "obj")
   }
 
-  /** The emission of one gated document, shared by the batch and the
-    * streaming pipelines: normalized once, then each spec `k` with
+  /** The emission of one gated document, shared by the batch, streaming
+    * and incremental pipelines: normalized once, then each spec `k` with
     * `inc(k)` emits its triples as `out(k, triple)`. Documents that are
     * neither items nor properties emit nothing. */
   private[graft] def emitDoc[T](doc: EntityDoc, specs: IndexedSeq[DumpSpec], inc: Int => Boolean,
@@ -335,7 +326,7 @@ object Pipeline {
     // rows failing every spec's pre-gate contribute zero to every
     // conditional aggregate — exclude them before any parse
     val base = corpus
-      .filter(prefilterMulti(specs.map(_._2), format) &&
+      .filter(SpecCompiler.prefilter(specs.map(_._2), col("content"), format) &&
         format.gate(col("content"), d => d("type") =!= "lexeme"))
       .select(format.filterDoc(col("content")).as("doc"))
     val aggs = counterAggs(specs, col("doc"))

@@ -17,10 +17,6 @@ object PipelineRunner {
     val Array(corpusDir, coresS, specName) = args.take(3)
     val reps = if (args.length > 3) args(3).toInt else 1
     val cores = coresS.toInt
-    // shuffle partitions: 2 waves per core by default — a single wave
-    // (partitions == cores) leaves cores idle behind the slowest reduce
-    // task; two waves let the scheduler backfill behind stragglers
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", (cores * 2).toString)
     // SPARK_GRAFT_MASTER overrides the master URL — e.g.
     // `local-cluster[4,8,8192]` runs REAL separate executor JVMs (the
     // N-vs-4N-executor shape of the north rule, each executor with its
@@ -29,7 +25,10 @@ object PipelineRunner {
     val builder = SparkSession.builder()
       .master(master)
       .appName(s"graft-pipeline-$cores")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
+      // 2 waves per core: a single wave (partitions == cores) leaves
+      // cores idle behind the slowest reduce task; two waves let the
+      // scheduler backfill behind stragglers
+      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -39,8 +38,7 @@ object PipelineRunner {
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions",
         sys.env.getOrElse("SPARK_GRAFT_EXEC_JAVA_OPTS", ""))
-      .config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "8g"))
+      .config("spark.executor.memory", "8g")
       // session-artifact classloader isolation breaks deserialization of
       // encoder expression trees on standalone executors (field types
       // load in a child loader); this job ships no session artifacts
@@ -49,8 +47,6 @@ object PipelineRunner {
     spark.sparkContext.setLogLevel("ERROR")
     val spec = graft.spec.SpecJson.parse(new String(
       getClass.getResourceAsStream(s"/specs/$specName").readAllBytes(), "UTF-8"))
-    // experiment knob: measure the pre-dedup pipeline (scan→parse→emit)
-    val dedup = !sys.env.get("SPARK_GRAFT_NO_DEDUP").contains("1")
     val corpus = spark.read.parquet(corpusDir)
     // warm-up (JIT/codegen/parquet footers) on a 10% sample: C2 needs
     // ~10^4 invocations, a 10% pass provides ~10^5 rows through every
@@ -71,7 +67,7 @@ object PipelineRunner {
       val ((n, secs, cpu), record) = RunRecord.collect(spark, s"pipeline-$rep") { rec =>
         val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
-        val n = rec.step("triples")(Pipeline.triples(corpus, spec, dedup = dedup).count())
+        val n = rec.step("triples")(Pipeline.triples(corpus, spec).count())
         (n, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
       }
       val tcpu = record.step("triples").metrics.cpuNs / 1e9

@@ -77,7 +77,7 @@ object Betweenness {
           .agg(sum(col("sigma")).as("sigma"))
           .withColumn("dist", lit(lvl + 1))
           .select(col("s"), col("v"), col("dist"), col("sigma")))
-        if (nf.limit(1).count() == 0) (state, frontier, preds, lvl, false)
+        if (Iter.measure(nf).rows == 0) (state, frontier, preds, lvl, false)
         else {
           val pe = fresh.select(col("s"), col("pv"), col("w").as("v"), lit(lvl + 1).as("lvl"))
           (Iter.mat(state.unionAll(nf)), nf, Some(Iter.mat(preds.fold(pe)(_ unionAll pe))),

@@ -59,10 +59,8 @@ object Incremental {
       .as[(String, EntityDoc)]
     val sitesB = spark.sparkContext.broadcast(sites)
     rows.flatMap { case (sha, doc) =>
-      val nd = Pipeline.normalize(doc)
-      if (TripleEmitter.isSerializable(nd))
-        TripleEmitter.emit(spec, nd, sitesB.value).map(t => (nd.id, sha, t.subj, t.pred, t.obj))
-      else Nil
+      Pipeline.emitDoc(doc, IndexedSeq(spec), _ => true, sitesB.value)(
+        (_, t) => (doc.id, sha, t.subj, t.pred, t.obj))
     }.toDF("src", "src_sha", "subj", "pred", "obj")
   }
 

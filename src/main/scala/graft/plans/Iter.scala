@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.internal.SQLConf
 
 /** The round loop of the iterative plan family (CC / SCC / k-core /
@@ -33,15 +34,13 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.sql.shuffle.partitions` tasks however few rows flow through
   * it. A fixpoint therefore sizes its shuffle width from the measured
   * bytes of its materialized input: when that width is below the
-  * current one it pins `spark.sql.shuffle.partitions` to it (≥ 1), and
-  * with `aqeOff` also disables AQE, for the loop's rounds; a large
-  * working set (or [[SessionWidth]]) leaves the session conf alone. The
-  * scope is per session and reference-counted: loops that overlap on
-  * one session (nested or on other threads) each apply their own values
-  * on entry, an exiting loop re-applies those of the latest loop still
-  * running, and the last loop to exit restores the values the first
-  * one saved. The returned plans execute after the scope, under the
-  * session's own conf.
+  * current one, the loop's rounds plan at that width (≥ 1), and with
+  * `aqeOff` also without AQE; a large working set (or [[SessionWidth]])
+  * keeps the current conf. The scope is the loop's own thread: it
+  * clones the thread's conf, never writes the session's, so queries on
+  * other threads of the session plan as before, and a nested loop
+  * starts from its enclosing loop's conf. The returned plans execute
+  * after the scope, under the session's own conf.
   *
   * '''Round budget.''' A fixpoint runs at most `maxRounds` rounds.
   * [[Until.Budget]] loops run all of them (PageRank's iterations,
@@ -90,16 +89,15 @@ object Iter {
   }
 
   /** Per-round lineage truncation + fresh attribute ids, zero-copy: a
-    * reliable eager `checkpoint` when a checkpoint dir is set, else a
-    * lazy `localCheckpoint` (materialized by the round's one change-
-    * detection action, in the same job), re-wrapped as a fresh leaf
-    * WITHOUT the InternalRow→Row→InternalRow encoder round-trip of the
+    * reliable eager checkpoint when a checkpoint dir is set, else a lazy
+    * local checkpoint (materialized by the round's one change-detection
+    * action, in the same job), wrapped as a fresh leaf WITHOUT the
+    * InternalRow→Row→InternalRow encoder round-trip of the
     * `createDataFrame(chk.rdd, chk.schema)` idiom (see
     * [[org.apache.spark.sql.GraftLeaf]]). Fresh ids let a round
     * self-join or union its own state. */
-  def mat(df: DataFrame): DataFrame = org.apache.spark.sql.GraftLeaf.fresh(
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(false))
+  def mat(df: DataFrame): DataFrame = org.apache.spark.sql.GraftLeaf.checkpoint(df,
+    reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
   /** What ONE job learns about a frame: its row count, the bytes of its
     * rows in Spark's binary row format (what a broadcast or a shuffle
@@ -129,6 +127,11 @@ object Iter {
     }.fold((0L, 0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2, x._3 ^ y._3))
     Measure(rows, bytes, hash)
   }
+
+  /** The first row of `df` (a one-row aggregate, say), read like
+    * [[measure]] reads its rows, so an `aqeOff` loop's signature adds no
+    * query-stage job. */
+  def first(df: DataFrame): InternalRow = org.apache.spark.sql.GraftLeaf.rows(df).first()
 
   /** When a [[fixpoint]] stops before its round budget runs out. */
   sealed trait Until[-S]
@@ -178,30 +181,12 @@ object Iter {
       (state, rounds)
     }
 
-  private val PartsKey = "spark.sql.shuffle.partitions"
-  private val AqeKey = "spark.sql.adaptive.enabled"
-
-  /** One loop's pinned values. */
-  private final class Pin(val parts: Long, val aqeOff: Boolean)
-  /** A session's values before its first running loop, and the pins of
-    * its running loops in entry order. */
-  private final class Saved(val parts: Option[String], val aqe: Option[String]) {
-    val pins = scala.collection.mutable.ArrayBuffer.empty[Pin]
-  }
-  private val saved = new java.util.IdentityHashMap[SparkSession, Saved]()
-
-  private def restore(spark: SparkSession, key: String, v: Option[String]): Unit =
-    v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-
-  private def applyPin(spark: SparkSession, s: Saved, p: Pin): Unit = {
-    spark.conf.set(PartsKey, p.parts.toString)
-    if (p.aqeOff) spark.conf.set(AqeKey, "false") else restore(spark, AqeKey, s.aqe)
-  }
-
   /** Run `body` with the shuffle width derived from `bytes` (the
     * materialized input's measured bytes over the session's
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes`) and, with
-    * `aqeOff`, AQE disabled.
+    * `aqeOff`, AQE disabled, in a clone of this thread's conf
+    * (`SQLConf.withExistingConf`): queries planned on this thread see
+    * the loop's values, other threads and the session's conf see none.
     * No-op when the derived width would not shrink the current one (the
     * session's, or an enclosing loop's) — the production configuration
     * always wins at scale. Outside this object only SemDedup uses it,
@@ -215,42 +200,21 @@ object Iter {
     * that). `aqeOff` is for loops whose per-round joins ALL carry
     * [[bcast]] hints: the static plan is then already the AQE plan, and
     * AQE would only add one scheduled query-stage job per exchange.
-    *
-    * The pin is session conf, not query conf: while `body` runs, a
-    * non-loop query on another thread of the same session also plans
-    * under the pinned shuffle width and AQE setting. */
+    * Whether a query runs adaptively is read from the session, so the
+    * loop's [[mat]], [[measure]] and [[first]] run the non-adaptive
+    * plan themselves; a Dataset action inside an `aqeOff` loop would
+    * still run adaptively. */
   private[graft] def withLoopConf[A](spark: SparkSession, bytes: Long,
                                      aqeOff: Boolean = false)(body: => A): A = {
-    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val target = math.max(1L, (math.max(0L, bytes) - 1) / advisory + 1)
-    val pin = saved.synchronized {
-      val current = spark.conf.getOption(PartsKey).flatMap(_.toIntOption).getOrElse(200)
-      if (target >= current) None
-      else {
-        val s = saved.get(spark)
-        val cur = if (s != null) s else {
-          val fresh = new Saved(spark.conf.getOption(PartsKey), spark.conf.getOption(AqeKey))
-          saved.put(spark, fresh)
-          fresh
-        }
-        val p = new Pin(target, aqeOff)
-        cur.pins += p
-        applyPin(spark, cur, p)
-        Some(p)
-      }
-    }
-    try body
-    finally pin.foreach { p =>
-      saved.synchronized {
-        val s = saved.get(spark)
-        s.pins.remove(s.pins.indexWhere(_ eq p))
-        if (s.pins.nonEmpty) applyPin(spark, s, s.pins.last)
-        else {
-          restore(spark, PartsKey, s.parts)
-          restore(spark, AqeKey, s.aqe)
-          saved.remove(spark)
-        }
-      }
+    val current = org.apache.spark.sql.GraftLeaf.threadConf(spark)
+    val advisory = current.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val width = math.max(1L, (math.max(0L, bytes) - 1) / advisory + 1)
+    if (width >= current.numShufflePartitions) body
+    else {
+      val loop = current.clone()
+      loop.setConf(SQLConf.SHUFFLE_PARTITIONS, width.toInt)
+      if (aqeOff) loop.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+      SQLConf.withExistingConf(loop)(body)
     }
   }
 }

@@ -118,7 +118,7 @@ object Scc {
     // and no AQE stage-materialization jobs (measured on the q_scc
     // fixture: ~11 scheduled jobs per round → ~4)
     def bc(df: DataFrame): DataFrame = Iter.bcast(df, stateBytes)
-    def tot(c: DataFrame): Long = c.agg(sum(col("color"))).head.getLong(0)
+    def tot(c: DataFrame): Long = Iter.first(c.agg(sum(col("color")))).getLong(0)
     val st0 = Iter.mat(init.toDF("id", "color").withColumn("far", col("id")))
     val (st, n) = rounds.loop(kind, phase, st0, Iter.Until.Unchanged(tot)) { (st, _) =>
       // one edge pass: per-node max in-color + a deterministic

@@ -44,7 +44,7 @@ object TemporalReach {
     val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcast
     // min-monotone: Σ(count, sum) unchanged ⇔ fixpoint
     def sig(st: DataFrame): (Long, Long) = {
-      val r = st.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L))).head
+      val r = Iter.first(st.agg(count(lit(1)), coalesce(sum(col("arrival")), lit(0L))))
       (r.getLong(0), r.getLong(1))
     }
     val st0 = Iter.mat(seeds.toDF("id").select(col("id").cast("long")).distinct()

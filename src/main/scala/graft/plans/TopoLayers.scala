@@ -41,8 +41,8 @@ object TopoLayers {
     val eBytes = Iter.measure(e).bytes // sizes loop width + state broadcasts
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    def tot(c: DataFrame): Long = c.agg(coalesce(sum(col("layer")), lit(0L)))
-      .head.getLong(0)
+    def tot(c: DataFrame): Long =
+      Iter.first(c.agg(coalesce(sum(col("layer")), lit(0L)))).getLong(0)
     val st0 = Iter.mat(nodes.withColumn("layer", lit(0L)))
     Iter.fixpoint(e.sparkSession, eBytes, st0)(
       maxRounds, Iter.Until.Unchanged(tot), aqeOff = true,

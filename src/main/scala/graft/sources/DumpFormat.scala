@@ -34,10 +34,6 @@ sealed trait DumpFormat {
     size(filter(array(filterDoc(content)),
       d => d.isNotNull && d("id").isNotNull && pred(d))) === 1
 
-  /** Project `build(doc)` with a single full parse per row (lambda-bound). */
-  final def project(content: Column, build: Column => Column): Column =
-    element_at(transform(array(doc(content)), d => build(d)), 1)
-
   /** Raw-content substring tokens whose presence is NECESSARY for a doc
     * to carry an entity-id value `id` in this dialect (scan pre-gate:
     * a cheap `contains` runs before any JSON parse; false positives

@@ -114,20 +114,21 @@ object SpecCompiler {
     else Some(perBranch.flatMap(_.get).distinct)
   }
 
-  /** prefilterTokens as a Column over raw content (None → lit(true)) */
+  /** The raw-content pre-gate of a pass serving `specs`: a row can
+    * serve SOME spec only if it holds one of SOME spec's
+    * [[prefilterTokens]]. `lit(true)` unless EVERY spec has tokens (an
+    * include-all spec gates nothing). */
+  def prefilter(specs: Seq[DumpSpec], content: Column,
+                format: graft.sources.DumpFormat): Column = {
+    val all = specs.map(prefilterTokens(_, format))
+    if (all.isEmpty || all.exists(_.isEmpty)) lit(true)
+    else all.flatMap(_.get).distinct.map(t => content.contains(t)).reduce(_ || _)
+  }
+
+  /** [[prefilter]] of a single-spec pass. */
   def prefilter(spec: DumpSpec, content: Column,
                 format: graft.sources.DumpFormat): Column =
-    prefilterTokens(spec, format) match {
-      case None         => lit(true)
-      case Some(tokens) => tokens.map(t => content.contains(t)).reduce(_ || _)
-    }
-
-  /** F8: language filter as an expression (null languages → all). */
-  def languagePredicate(spec: DumpSpec, lang: Column): Column =
-    spec.languages match {
-      case None        => lit(true)
-      case Some(langs) => lang.isin(langs.toSeq.sorted: _*)
-    }
+    prefilter(Seq(spec), content, format)
 
   /** A1: per-document count of statements that the spec would include
     * (counted once even if both simple+full emitted; incremented before

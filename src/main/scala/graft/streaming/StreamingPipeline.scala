@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -21,18 +21,14 @@ import graft.sources.EntityCorpus
   */
 object StreamingPipeline {
 
-  val corpusSchema: StructType = StructType(Seq(
-    StructField("repo", StringType), StructField("path", StringType),
-    StructField("commit", StringType), StructField("lang", StringType),
-    StructField("content", StringType)))
-
   /** Streaming triples: Pipeline.triples' gate chain and emission over
     * a file stream. Note: no global dedup here (that needs a batch pass
     * or watermarked stateful dedup downstream). */
   def streamTriples(spark: SparkSession, corpusDir: String, spec: DumpSpec,
                     sites: TripleEmitter.Sites = EntityCorpus.sites): Dataset[Triple] = {
     import spark.implicits._
-    val raw = spark.readStream.schema(corpusSchema).parquet(corpusDir)
+    val raw = spark.readStream.schema(Encoders.product[EntityCorpus.CorpusRow].schema)
+      .parquet(corpusDir)
     graft.Pipeline.includedDocs(raw, spec, excludeLexemes = true)
       .flatMap(d => graft.Pipeline.emitDoc(d, IndexedSeq(spec), _ => true, sites)((_, t) => t))
   }

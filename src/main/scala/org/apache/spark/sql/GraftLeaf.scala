@@ -1,31 +1,61 @@
 package org.apache.spark.sql
 
-/** Zero-copy fresh-leaf rewrap for iterative plans (placed in Spark's
-  * package to reach `internalCreateDataFrame`, the same constructor
-  * `Dataset.ofRows` paths use — public-source Spark API surface).
+/** The row path of iterative plans (placed in Spark's package to reach
+  * `internalCreateDataFrame`, the same constructor `Dataset.ofRows`
+  * paths use, and the planner's preparation rules).
   *
-  * Iterative operators truncate lineage per round with
-  * `localCheckpoint` and must also RE-ALIAS the result (fresh
-  * AttributeReferences) because each round self-joins the state with
-  * itself; `Dataset.checkpoint` reuses the child plan's output
-  * attributes, so the established idiom was
-  * `createDataFrame(chk.rdd, chk.schema)` — which pays an
-  * InternalRow → Row → InternalRow encoder round-trip (an extra
-  * deserialize/serialize pass in EVERY subsequent scan of the state,
-  * plus per-round encoder analysis on the driver).
+  * Iterative operators truncate lineage per round and must also
+  * RE-ALIAS the result (fresh AttributeReferences), because each round
+  * self-joins the state with itself. `Dataset.checkpoint` keeps the
+  * child plan's attributes, and `createDataFrame(chk.rdd, chk.schema)`
+  * pays an InternalRow → Row → InternalRow round-trip in every later
+  * scan of the state. [[checkpoint]] wraps the checkpointed
+  * InternalRows as they are in a new LogicalRDD leaf whose attributes
+  * are freshly generated from the schema.
   *
-  * `fresh` keeps the materialized checkpoint RDD as-is (InternalRow,
-  * zero copies) and wraps it in a new LogicalRDD leaf whose attributes
-  * are freshly generated from the schema — the same fresh-alias
-  * guarantee with none of the conversion. */
+  * '''Thread-scoped AQE off.''' A loop turns AQE off in its own
+  * thread's `SQLConf` (`SQLConf.withExistingConf`), never in the
+  * session. The planner's width rules read that thread conf, but
+  * whether a query runs adaptively is decided from the session's conf.
+  * So when the calling thread's conf has AQE off, [[rows]] prepares the
+  * frame's physical plan with the main-query (non-adaptive) rule set,
+  * exchange reuse included, and executes it: no query-stage job per
+  * exchange, and the session's other queries stay adaptive. */
 object GraftLeaf {
-  def fresh(checkpointed: DataFrame): DataFrame =
-    checkpointed.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
-      rows(checkpointed), checkpointed.schema, isStreaming = false)
+  import catalyst.InternalRow
+  import execution.{GraftPlan, SQLExecutionRDD}
+  import internal.SQLConf
+  import org.apache.spark.rdd.RDD
 
-  /** The frame's rows as the engine's internal RDD — no Row conversion. */
-  def rows(df: DataFrame): org.apache.spark.rdd.RDD[catalyst.InternalRow] =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+  /** `df`'s rows checkpointed and wrapped as a fresh leaf: `reliable`
+    * writes them to the SparkContext's checkpoint dir now (one job);
+    * otherwise a lazy local checkpoint, materialized by the first
+    * action that reads the leaf. Each row is copied first, as
+    * `Dataset.checkpoint` does: an executed plan reuses its row
+    * objects. */
+  def checkpoint(df: DataFrame, reliable: Boolean): DataFrame = {
+    val kept = rows(df).map(_.copy())
+    if (reliable) { kept.checkpoint(); kept.doCheckpoint() }
+    else kept.localCheckpoint()
+    df.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      kept, df.schema, isStreaming = false)
+  }
+
+  /** The frame's rows as the engine's internal RDD, no Row conversion:
+    * `queryExecution.toRdd`, or, when the calling thread's conf has AQE
+    * off, the rows of the non-adaptive plan (see the object doc). */
+  def rows(df: DataFrame): RDD[InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    val session = qe.sparkSession
+    if (threadConf(session).adaptiveExecutionEnabled) qe.toRdd
+    else session.withActive(new SQLExecutionRDD(
+      GraftPlan.nonAdaptive(session, qe.sparkPlan).execute(), session.sessionState.conf))
+  }
+
+  /** The conf that plans `spark`'s queries on this thread: an enclosing
+    * `SQLConf.withExistingConf` scope's, else the session's. */
+  def threadConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].withActive(SQLConf.get)
 }
 
 /** A frame computed through ONE hash shuffle, built with the frame: its
@@ -68,5 +98,17 @@ object SharedShuffle {
       .mapPartitions(reduce)
     new SharedShuffle(session.internalCreateDataFrame(rows, df.schema, isStreaming = false),
       qe.executedPlan, dep)
+  }
+}
+
+package execution {
+  /** The planner's rule sets are `private[execution]`, hence this object. */
+  object GraftPlan {
+    /** `plan` prepared with the main-query rule set and no adaptive
+      * rule: what `QueryExecution.executedPlan` is with AQE off, exchange
+      * reuse included (`prepareExecutedPlan` uses the subquery set). */
+    def nonAdaptive(session: classic.SparkSession, plan: SparkPlan): SparkPlan =
+      QueryExecution.prepareForExecution(
+        QueryExecution.preparations(session, None, subquery = false), plan.clone())
   }
 }

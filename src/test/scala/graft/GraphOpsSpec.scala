@@ -899,38 +899,72 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(kc < 15, s"kcore ran $kc jobs")
   }
 
-  test("fixpoint: loop conf scopes that interleave on one session restore its conf") {
+  test("fixpoint: an aqeOff loop plans on its own thread; the session's conf and queries stay as set") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.Iter
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
     // a loop's width is its bytes over the advisory partition size
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1048576")
-    val aqe = s.conf.getOption("spark.sql.adaptive.enabled")
-    val aIn, bIn, aOut = new CountDownLatch(1)
+    def sessionConf = (s.conf.get("spark.sql.shuffle.partitions"), s.conf.get("spark.sql.adaptive.enabled"))
+    val asSet = ("8", "true")
+    def grouped = s.range(100).groupBy((col("id") % 7).as("k")).count()
+    // the shuffle widths in the lineage of the rows a loop step reads
+    def widths(df: org.apache.spark.sql.DataFrame): Seq[Int] = {
+      def walk(rdd: org.apache.spark.rdd.RDD[_]): Seq[Int] = rdd.dependencies.flatMap { d =>
+        (d match {
+          case sd: org.apache.spark.ShuffleDependency[_, _, _] => Seq(sd.partitioner.numPartitions)
+          case _ => Nil
+        }) ++ walk(d.rdd)
+      }
+      walk(org.apache.spark.sql.GraftLeaf.rows(df))
+    }
+    // an adaptive plan runs its query stages while its rows are built;
+    // a non-adaptive one starts no job until an action reads them
+    def roundWidths: Seq[Int] = {
+      var w = Seq.empty[Int]
+      assert(jobsOf { w = widths(grouped) } == 0, "the round's plan is adaptive")
+      w
+    }
+    val inRound, checked = new CountDownLatch(1)
     def await(l: CountDownLatch): Unit = assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
-    def parts = s.conf.get("spark.sql.shuffle.partitions")
-    // A (width 3, AQE off) enters; B (width 1) enters; A exits; B exits
-    val a = Future {
-      graft.plans.Iter.fixpoint(s, 5L << 19, ())(1, aqeOff = true) { (_, _) => // 2.5 MiB
-        assert(parts == "3" && s.conf.get("spark.sql.adaptive.enabled") == "false")
-        aIn.countDown(); await(bIn)
+    assert(sessionConf == asSet)
+    val loop = Future {
+      Iter.fixpoint(s, 5L << 19, ())(1, aqeOff = true) { (_, _) => // 2.5 MiB: width 3
+        try {
+          assert(sessionConf == asSet)
+          assert(roundWidths == Seq(3))
+          assert(Iter.measure(Iter.mat(grouped)).rows == 7)
+          // a nested loop narrows the width (AQE stays off); one whose
+          // width would not shrink it keeps the enclosing loop's
+          Iter.fixpoint(s, 1000L, ())(1) { (_, _) => assert(roundWidths == Seq(1)) }
+          Iter.fixpoint(s, Iter.SessionWidth, ())(1) { (_, _) => assert(roundWidths == Seq(3)) }
+          assert(roundWidths == Seq(3))
+        } finally inRound.countDown()
+        await(checked)
       }
-      aOut.countDown()
     }
-    val b = Future {
-      await(aIn)
-      graft.plans.Iter.fixpoint(s, 1000L, ())(1) { (_, _) => // 1000 bytes
-        bIn.countDown(); await(aOut)
-        assert(parts == "1") // A's exit keeps the running loop's width
+    await(inRound)
+    try {
+      // meanwhile, on this thread: the session's values, its width, AQE
+      assert(sessionConf == asSet)
+      val q = grouped
+      q.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec =>
+          val w = a.initialPlan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+          assert(w == Seq(8), a.initialPlan.toString)
+        case p => fail(s"not adaptive while a loop runs:\n$p")
       }
-    }
-    Await.result(a, 2.minutes)
-    Await.result(b, 2.minutes)
-    assert(parts == "8")
-    assert(s.conf.getOption("spark.sql.adaptive.enabled") == aqe)
+      assert(q.count() == 7)
+    } finally checked.countDown()
+    Await.result(loop, 2.minutes)
+    assert(sessionConf == asSet)
   }
 
   test("Iter.bcast: a frame of few but wide rows over the byte threshold stays unhinted") {
@@ -949,24 +983,24 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("fixpoint: a session with broadcasts off plans no broadcast in its loops") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    // broadcast joins in the plans PageRank's rounds materialize
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // broadcast joins PageRank's rounds execute, seen where they run: each
+    // broadcast exchange builds its relation in a job of its own, tagged
+    // with the exchange
     def broadcastJoins(s: org.apache.spark.sql.SparkSession): Int = {
       val seen = new java.util.concurrent.atomic.AtomicInteger
-      val l = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-          seen.addAndGet(qe.executedPlan.collect { case j: BroadcastHashJoinExec => j }.size)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      val l = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+              .exists(_.contains("broadcast exchange"))) seen.incrementAndGet()
       }
-      s.listenerManager.register(l)
+      s.sparkContext.addSparkListener(l)
       try {
         import s.implicits._
         val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
         PageRank.run(s, edges, iters = 3).collect()
         org.apache.spark.ListenerBusProbe.drain(s.sparkContext)
-      } finally s.listenerManager.unregister(l)
+      } finally s.sparkContext.removeSparkListener(l)
       seen.get
     }
     assert(broadcastJoins(spark.newSession()) > 0) // the hinted plans are seen
